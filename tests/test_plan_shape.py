@@ -139,4 +139,70 @@ def test_lsh_candidates_capped_plan_is_bounded_and_join_free(spark):
     # exchange of its own); the initial plan prints the window subtree
     # once per union branch (cold + hot) — identical subtrees that
     # exchange reuse collapses at runtime — so at most those two appear
-    assert plan.count("Exchange hashpartitioning(bucket") <= 2, plan
+    assert 1 <= plan.count("Exchange hashpartitioning(bucket") <= 2, plan
+
+
+def test_column_trees_are_built_once_per_column_set(spark):
+    from valideer_spark.flagship import doc_schema
+    from valideer_spark.plans import compile_plan
+    from valideer_spark.sources import synth_docs
+
+    a = synth_docs(spark, 20)
+    b = synth_docs(spark, 30).filter(F.col("doc_id") != "x")
+    plan = compile_plan(doc_schema(), a)
+    for getter in (
+        plan.is_valid_col,
+        plan.violations_col,
+        plan.violation_count_col,
+        plan.adapted_col,
+    ):
+        assert getter(a) is getter(b)
+    # an extra payload column is part of the row struct: a fresh tree
+    wider = a.withColumn("lang", F.lit("en"))
+    assert plan.is_valid_col(wider) is not plan.is_valid_col(a)
+    # engine-reserved columns are not
+    assert plan.is_valid_col(a.withColumn("_part_id", F.lit(0))) is (
+        plan.is_valid_col(a)
+    )
+
+
+def test_second_check_does_not_relower(spark):
+    from valideer_spark.engine import ValidationEngine
+    from valideer_spark.flagship import doc_schema
+    from valideer_spark.sources import synth_docs
+
+    docs = synth_docs(spark, 20)
+    eng = ValidationEngine(doc_schema())
+    plan = eng.plan_for(docs)
+    lowered_predicate = plan.lowered.predicate
+    calls = []
+
+    def counting(row):
+        calls.append(row)
+        return lowered_predicate(row)
+
+    plan.lowered.predicate = counting
+    eng.check(docs)
+    assert len(calls) == 1
+    report = eng.check(docs)
+    assert report.plan is plan and len(calls) == 1
+
+
+def test_violation_plans_build_each_violation_once(spark):
+    """The violation explode is an outer generator plus an explicit index
+    filter, so Catalyst infers no ``size(_violations) > 0`` filter that
+    would build every invalid row's violation array a second time."""
+    from valideer_spark.engine import ValidationEngine
+    from valideer_spark.flagship import doc_schema
+    from valideer_spark.sources import synth_docs
+
+    # cached, so the counts are the check's own and not the generator's
+    docs = synth_docs(spark, 100).cache()
+    try:
+        report = ValidationEngine(doc_schema()).check(docs)
+        for df in (report.violation_rows(), report.metrics()):
+            plan = _optimized(df)
+            assert 1 <= plan.count("format_string(") <= 22, len(plan)
+            assert 1 <= plan.count("zip_with(") <= 4, len(plan)
+    finally:
+        docs.unpersist()

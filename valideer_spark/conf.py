@@ -15,9 +15,9 @@ def recommended_conf(
 ) -> Dict[str, str]:
     """Engine-recommended configs.
 
-    * AQE on (runtime coalescing + skew-join splitting) — the salted
-      uniqueness path and the referential joins rely on it for residual
-      skew beyond the explicit salting.
+    * AQE on (runtime coalescing + skew-join splitting) — the referential
+      anti-joins rely on it to choose their join strategy and to split
+      skewed keys.
     * 128 MB scan partitions keep the flagship check's per-task working
       set (spans arrays + violation buffers) comfortably in executor
       memory at wide schemas.

@@ -43,7 +43,8 @@ class TableConstraint:
 
 @dataclass
 class Unique(TableConstraint):
-    """Key uniqueness with optional salted two-phase aggregation."""
+    """Key uniqueness: one hash aggregation on the key (``salt`` is
+    accepted for backward compatibility and ignored)."""
 
     column: str
     salt: int = 0

@@ -30,7 +30,7 @@ from typing import Any, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .plans import FramePlan, compile_plan
+from .plans import FramePlan, compile_plan, explode_violations
 
 DEFAULT_BUCKETS = 256
 
@@ -136,19 +136,10 @@ class CheckReport:
         )
 
     def violation_rows(self) -> DataFrame:
-        """(doc_id, violation_index, path, constraint, message) rows."""
-        bad = self.annotated.filter(~F.col("_valid"))
-        return bad.select(
-            F.col(self.id_col),
-            F.col("_part_id").alias("part_id"),
-            F.posexplode("_violations").alias("violation_index", "v"),
-        ).select(
-            self.id_col,
-            "part_id",
-            "violation_index",
-            F.col("v.path").alias("path"),
-            F.col("v.constraint").alias("constraint"),
-            F.col("v.message").alias("message"),
+        """(doc_id, part_id, violation_index, path, constraint, message)
+        rows."""
+        return explode_violations(
+            self.annotated, [self.id_col, F.col("_part_id").alias("part_id")]
         )
 
     def verdict_rollup(self) -> DataFrame:
@@ -180,12 +171,7 @@ class CheckReport:
 
     def metrics(self) -> DataFrame:
         """Violation counts by constraint (map-side combinable agg)."""
-        return (
-            self.annotated.filter(~F.col("_valid"))
-            .select(F.explode("_violations").alias("v"))
-            .groupBy(F.col("v.constraint").alias("constraint"))
-            .count()
-        )
+        return explode_violations(self.annotated).groupBy("constraint").count()
 
     def partition_metrics(self) -> DataFrame:
         """Violation counts by (partition, constraint) — the per-partition
@@ -194,12 +180,8 @@ class CheckReport:
         exploded aggregation shape as :meth:`metrics`, keyed on
         (bucket, constraint) — shuffle is O(buckets × constraints)."""
         return (
-            self.annotated.filter(~F.col("_valid"))
-            .select("_part_id", F.explode("_violations").alias("v"))
-            .groupBy(
-                F.col("_part_id").alias("part_id"),
-                F.col("v.constraint").alias("constraint"),
-            )
+            explode_violations(self.annotated, [F.col("_part_id").alias("part_id")])
+            .groupBy("part_id", "constraint")
             .agg(F.count(F.lit(1)).alias("n"))
         )
 
@@ -504,21 +486,8 @@ def write_quarantine(
     else:
         writer.parquet(valid_path)
 
-    bad = (
-        report.annotated.filter(~F.col("_valid"))
-        .select(
-            *payload,
-            "_part_id",
-            F.posexplode("_violations").alias("violation_index", "_v"),
-        )
-        .select(
-            *payload,
-            "_part_id",
-            "violation_index",
-            F.col("_v.path").alias("violation_path"),
-            F.col("_v.constraint").alias("violation_constraint"),
-            F.col("_v.message").alias("violation_message"),
-        )
+    bad = explode_violations(
+        report.annotated, [*payload, "_part_id"], prefix="violation_"
     )
     if partition_by_bucket:
         bad = _bucket_aligned(

@@ -8,7 +8,7 @@ from .lowering import (
     lower,
     translate_python_regex,
 )
-from .frame import FramePlan, compile_plan, expect_frame_schema
+from .frame import FramePlan, compile_plan, expect_frame_schema, explode_violations
 
 __all__ = [
     "VIOLATION_TYPE",
@@ -20,4 +20,5 @@ __all__ = [
     "FramePlan",
     "compile_plan",
     "expect_frame_schema",
+    "explode_violations",
 ]

@@ -8,14 +8,14 @@ equivalent of the reference's ``validate(value)`` over a JSON object
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from typing import Any, Optional
+from dataclasses import dataclass, field
+from typing import Any, Callable, Dict, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..core.registry import Validator, parse
-from .lowering import Lowered, lower
+from .lowering import VIOLATION_TYPE, Lowered, _count_of, lower
 
 
 # engine-reserved column names never treated as document properties: a
@@ -25,13 +25,45 @@ from .lowering import Lowered, lower
 RESERVED_COLUMNS = {"_part_id", "_valid", "_violations", "_n_violations", "_adapted"}
 
 
-def _row_struct(df: DataFrame) -> Column:
-    return F.struct(
-        *[
-            F.col(f.name)
-            for f in df.schema.fields
-            if f.name not in RESERVED_COLUMNS
-        ]
+def _row_fields(df: DataFrame) -> Tuple[str, ...]:
+    """The document's properties: every column but the engine-reserved ones,
+    in frame order. This is the only input the row struct reads, so it keys
+    :class:`FramePlan`'s Column memo."""
+    return tuple(
+        f.name for f in df.schema.fields if f.name not in RESERVED_COLUMNS
+    )
+
+
+def _row_struct(fields: Tuple[str, ...]) -> Column:
+    return F.struct(*[F.col(name) for name in fields])
+
+
+def explode_violations(
+    annotated: DataFrame, cols: Sequence[Any] = (), prefix: str = ""
+) -> DataFrame:
+    """One row per (invalid document, violation) of a :meth:`FramePlan.check`
+    output with violations: ``cols``, then ``violation_index`` and the
+    violation's ``path``, ``constraint`` and ``message``, each named with
+    ``prefix``.
+
+    The generator is ``posexplode_outer`` followed by an explicit
+    ``violation_index IS NOT NULL`` filter: from a plain ``posexplode``
+    Catalyst would infer ``size(_violations) > 0`` and inline it, with
+    ``~_valid``, into the filter below the generator, so every invalid row
+    would build its violation array twice. The index is NULL only on the
+    padding row an outer generator adds for an empty or NULL array, so the
+    rows are those of a plain ``posexplode``."""
+    exploded = (
+        annotated.filter(~F.col("_valid"))
+        .select(
+            *cols, F.posexplode_outer("_violations").alias("violation_index", "_v")
+        )
+        .filter(F.col("violation_index").isNotNull())
+    )
+    fields = VIOLATION_TYPE.elementType.fieldNames()
+    return exploded.select(
+        *[c for c in exploded.columns if c != "_v"],
+        *[F.col("_v." + f).alias(prefix + f) for f in fields],
     )
 
 
@@ -42,51 +74,69 @@ class FramePlan:
     All expression builders are pure-Column; nothing is executed until the
     returned DataFrames are acted on, so Catalyst sees one declarative plan
     (predicate pushdown + whole-stage codegen apply).
+
+    Each builder's Column tree is made once per plan and row column set:
+    lowering a wide schema costs thousands of py4j calls, and a frame with
+    the same document columns reads the same tree.
     """
 
     validator: Validator
     lowered: Lowered
+    _columns: Dict[Tuple[str, Tuple[str, ...]], Column] = field(
+        default_factory=dict, init=False, repr=False, compare=False
+    )
+
+    def _memoised(
+        self, kind: str, df: DataFrame, build: Callable[[Column], Column]
+    ) -> Column:
+        key = (kind, _row_fields(df))
+        col = self._columns.get(key)
+        if col is None:
+            # setdefault: callers racing on a first build all get one tree
+            col = self._columns.setdefault(key, build(_row_struct(key[1])))
+        return col
 
     def is_valid_col(self, df: DataFrame) -> Column:
         """Boolean verdict column (the ``adapt=False`` fast path)."""
-        return self.lowered.predicate(_row_struct(df))
+        return self._memoised("valid", df, self.lowered.predicate)
 
     def violations_col(self, df: DataFrame) -> Column:
         """array<struct<path,constraint,message>> — all violations per row,
         kernel traversal order (element 0 == kernel fail-fast error)."""
-        return self.lowered.violations(_row_struct(df), F.lit(""))
+        return self._memoised(
+            "violations", df, lambda row: self.lowered.violations(row, F.lit(""))
+        )
 
     def violation_count_col(self, df: DataFrame) -> Column:
         """int — exactly ``size(violations_col(df))``, computed natively
         without materializing the violation structs (no value reprs or
         message formatting)."""
-        from .lowering import _count_of
-
-        return _count_of(self.lowered)(_row_struct(df))
+        return self._memoised("count", df, _count_of(self.lowered))
 
     def adapted_col(self, df: DataFrame) -> Column:
         """Adapted document struct (defined where the row is valid)."""
-        return self.lowered.adapt(_row_struct(df))
+        return self._memoised("adapted", df, self.lowered.adapt)
 
     def check(
         self, df: DataFrame, adapt: bool = True, violations: bool = True
     ) -> DataFrame:
-        """Annotate ``df`` with `_valid`, `_violations` (+ `_adapted`).
+        """Annotate ``df`` with `_valid`, `_violations` and `_n_violations`
+        (+ `_adapted`).
 
-        The violation-building expression tree is far heavier than the
-        predicate (value reprs, message formatting), so it is guarded
-        behind the predicate; for the scale path prefer ``violations=False``
-        here and :meth:`violation_rows`, which rebuilds violations only on
-        the (rare) failing rows after the cheap predicate filter.
+        The violation and adaptation columns are CASE-guarded behind
+        `_valid`, so valid rows pay only the predicate. Aggregations that
+        read `_n_violations` prune the violation structs out of their plan;
+        :func:`explode_violations` turns the output into one row per
+        violation, building each violation array once per invalid row.
+        ``violations=False`` leaves out both violation columns.
         """
-        row = _row_struct(df)
-        out = df.withColumn("_valid", self.lowered.predicate(row))
+        out = df.withColumn("_valid", self.is_valid_col(df))
         if violations:
             out = out.withColumn(
                 "_violations",
                 F.when(
-                    F.col("_valid"), F.array().cast(self.violations_schema())
-                ).otherwise(self.lowered.violations(row, F.lit(""))),
+                    F.col("_valid"), F.array().cast(VIOLATION_TYPE)
+                ).otherwise(self.violations_col(df)),
             )
             # native violation COUNT (== size(_violations), asserted by
             # tests/test_violation_count.py) without building the
@@ -102,13 +152,11 @@ class FramePlan:
         if adapt:
             out = out.withColumn(
                 "_adapted",
-                F.when(F.col("_valid"), self.lowered.adapt(row)),
+                F.when(F.col("_valid"), self.adapted_col(df)),
             )
         return out
 
     def violations_schema(self):
-        from .lowering import VIOLATION_TYPE
-
         return VIOLATION_TYPE
 
     def violation_rows(
@@ -116,21 +164,8 @@ class FramePlan:
     ) -> DataFrame:
         """Exploded violation rows: one row per (document, violation)."""
         id_cols = id_cols or [df.columns[0]]
-        # two-pass: cheap predicate over everything, heavy violation
-        # construction only on the failing slice
-        annotated = self.check(df, adapt=False, violations=False)
-        bad = annotated.filter(~F.col("_valid")).drop("_valid")
-        bad = self.check(bad, adapt=False, violations=True)
-        exploded = bad.select(
-            *id_cols, F.posexplode("_violations").alias("violation_index", "v")
-        )
-        return exploded.select(
-            *id_cols,
-            "violation_index",
-            F.col("v.path").alias("path"),
-            F.col("v.constraint").alias("constraint"),
-            F.col("v.message").alias("message"),
-        )
+        annotated = self.check(df, adapt=False, violations=True)
+        return explode_violations(annotated, id_cols)
 
 
 def compile_plan(schema: Any, df_or_schema) -> FramePlan:
