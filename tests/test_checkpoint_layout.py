@@ -6,6 +6,8 @@ fallback; the partition-pruned resume is proven on the parquet layout
 (same pruning mechanics Iceberg applies from table metadata).
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -217,3 +219,29 @@ def test_partition_expr_emitting_reserved_sentinel_raises(spark, tmp_path):
     )
     with pytest.raises(Exception, match="reserved bucket id -1"):
         eng.run_with_checkpoint(docs, run_id="r1")
+
+
+def test_write_partitioned_files_per_bucket_bounds_files(spark, tmp_path):
+    """files_per_bucket > 1 splits each bucket over at most that many
+    write tasks: no _part_id directory holds more files than that, and
+    the layout reads back the same rows."""
+    docs = synth_docs(spark, 400)
+    path = str(tmp_path / "docs")
+    write_partitioned(docs, path, buckets=4, files_per_bucket=2)
+
+    part_dirs = [d for d in os.listdir(path) if d.startswith("_part_id=")]
+    assert 0 < len(part_dirs) <= 4
+    files = {
+        d: [f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")]
+        for d in part_dirs
+    }
+    assert max(len(fs) for fs in files.values()) == 2
+    back = spark.read.parquet(path).select(*docs.columns)
+    assert sorted(map(repr, back.collect())) == sorted(map(repr, docs.collect()))
+
+
+def test_write_partitioned_rejects_unsupported_fmt(spark, tmp_path):
+    path = str(tmp_path / "docs")
+    with pytest.raises(ValueError, match="unsupported fmt 'csv'"):
+        write_partitioned(synth_docs(spark, 10), path, buckets=4, fmt="csv")
+    assert not os.path.exists(path)

@@ -5,7 +5,7 @@ presence term), an all-optional object must NOT take the SoA path (a NULL
 element and an all-NULL-fields struct are indistinguishable after field
 extraction), and the flagship verdict plan must contain no per-element
 struct access inside a lambda (the measured interpreted-HOF ceiling —
-BENCH.md / tools/soa_experiment.py).
+BENCH.md; the experiment script is at commit 0ff93ec).
 """
 
 import re

@@ -271,9 +271,8 @@ def test_sketches_deterministic_across_partitioning(spark, docs_df):
 
 
 def test_duplicate_keys_salted_deterministic(spark, docs_df):
-    """The salted two-phase uniqueness aggregation uses a nondeterministic
-    per-row salt internally, but the FINAL counts are partitioning- and
-    run-independent."""
+    """Uniqueness is one ``groupBy(key).count()`` (``salt=`` is accepted
+    and ignored), so its counts are partitioning- and run-independent."""
     from valideer_spark.operators import duplicate_keys
 
     runs = [

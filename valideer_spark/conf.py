@@ -23,6 +23,8 @@ def recommended_conf(
       memory at wide schemas.
     * Arrow batches sized for the pandas-UDF escape hatches (kernel
       fallback, t-digest, multimodal decode).
+    * ``target_partitions`` sets the shuffle width: every shuffle starts
+      there and AQE coalesces the small ones.
     """
     conf = {
         "spark.sql.adaptive.enabled": "true",
@@ -37,17 +39,4 @@ def recommended_conf(
     }
     if target_partitions:
         conf["spark.sql.shuffle.partitions"] = str(target_partitions)
-        # scale-adaptive partitioning (round 6): start every shuffle wide
-        # and let AQE coalesce small ones back down, instead of pinning
-        # all shuffles to the core count. A 5.5M-doc LSH candidates stage
-        # explodes to ~88M (id, bucket) rows — over 32 partitions each
-        # reducer ingests ~2.8M rows; 8x headroom cut the warm stage
-        # 123s -> 113s (local[32], round-6 notes) while AQE's
-        # coalescePartitions keeps small/medium queries at their former
-        # partition counts (sf1.0 bench suite unchanged). Parameterised
-        # off target_partitions, so cluster deployments scale it with
-        # their core count rather than inheriting a local constant.
-        conf["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] = str(
-            8 * target_partitions
-        )
     return conf

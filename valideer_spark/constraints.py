@@ -64,14 +64,14 @@ class Unique(TableConstraint):
 
 @dataclass
 class References(TableConstraint):
-    """Foreign key must exist in a reference relation (broadcast anti-join
-    for small refs, sort-merge + AQE otherwise)."""
+    """Foreign key must exist in a reference relation: aggregate the
+    fact keys, then an anti-join whose strategy the planner and AQE
+    choose (see :func:`~valideer_spark.operators.orphan_keys`)."""
 
     column: str
     ref: DataFrame
     ref_column: str
     explode_from: Optional[str] = None  # array<struct> column holding the key
-    broadcast_ref: bool = True
 
     @property
     def name(self) -> str:
@@ -83,9 +83,7 @@ class References(TableConstraint):
             src = df.select(F.explode(self.explode_from).alias("_e")).select(
                 F.col(f"_e.{self.column}").alias(self.column)
             )
-        orphans = orphan_keys(
-            src, self.column, self.ref, self.ref_column, self.broadcast_ref
-        )
+        orphans = orphan_keys(src, self.column, self.ref, self.ref_column)
         return orphans.select(
             F.lit(self.name).alias("constraint"),
             F.col(self.column).cast("string").alias("key"),

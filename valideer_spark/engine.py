@@ -59,25 +59,45 @@ def _input_fingerprint(df: DataFrame) -> str:
     return h.hexdigest()
 
 
-def _bucket_aligned(
-    df: DataFrame, buckets: int, files_per_bucket: int, salt_col
-) -> DataFrame:
-    """Align write tasks with storage partitions before a ``partitionBy``
-    write. Without this every upstream task can emit a file into every
-    bucket directory — O(tasks × buckets) small files (measured: 2 sinks
-    × 256 buckets × 32 local tasks made `write_quarantine` 14x slower
-    than its own validation scan, BENCH.md round 5; on a 1000-executor
-    cluster it would be ~256k files per write). After the repartition
-    each bucket is held by ``files_per_bucket`` tasks exactly, so the
-    file count is bounded by buckets × files_per_bucket regardless of
-    cluster size; raise ``files_per_bucket`` when per-bucket volume
-    (corpus/buckets) is larger than one task should write alone."""
+def _write_bucketed(
+    df: DataFrame,
+    path: str,
+    fmt: str,
+    buckets: int,
+    files_per_bucket: int,
+    id_col: str,
+) -> None:
+    """Overwrite ``path`` with ``df`` partitioned by its ``_part_id``
+    column, as parquet files or (``fmt="iceberg"``) an Iceberg table.
+
+    The write tasks are aligned with the storage partitions first.
+    Without that, every upstream task can emit a file into every bucket
+    directory — O(tasks × buckets) small files (measured: 2 sinks × 256
+    buckets × 32 local tasks made `write_quarantine` 14x slower than its
+    own validation scan, BENCH.md round 5; on a 1000-executor cluster it
+    would be ~256k files per write). After the repartition each bucket
+    is held by at most ``files_per_bucket`` tasks (split on a second hash
+    of ``id_col``), so the file count is bounded by
+    buckets × files_per_bucket regardless of cluster size; raise
+    ``files_per_bucket`` when per-bucket volume (corpus/buckets) is
+    larger than one task should write alone."""
+    if fmt not in ("parquet", "iceberg"):
+        raise ValueError(
+            "unsupported fmt %r: expected 'parquet' or 'iceberg'" % (fmt,)
+        )
     if files_per_bucket <= 1:
-        return df.repartition(buckets, F.col("_part_id"))
-    salt = F.pmod(F.xxhash64(salt_col), F.lit(files_per_bucket))
-    return df.repartition(
-        buckets * files_per_bucket, F.col("_part_id"), salt
-    )
+        df = df.repartition(buckets, F.col("_part_id"))
+    else:
+        # murmur3, not the xxhash64 behind _part_id: a salt taken from the
+        # same hash would repeat the bucket's residue and leave one task
+        # per bucket whenever buckets and files_per_bucket share a factor
+        salt = F.pmod(F.hash(F.col(id_col)), F.lit(files_per_bucket))
+        df = df.repartition(buckets * files_per_bucket, F.col("_part_id"), salt)
+    writer = df.write.mode("overwrite").partitionBy("_part_id")
+    if fmt == "iceberg":
+        writer.format("iceberg").saveAsTable(path)
+    else:
+        writer.parquet(path)
 
 
 def write_partitioned(
@@ -96,20 +116,11 @@ def write_partitioned(
     and 256 buckets that is ~400 GB per partition, so set
     ``files_per_bucket`` to keep individual files in the hundreds-of-MB
     band (e.g. 1024 → ~400 MB each) — the write is bucket-aligned
-    (:func:`_bucket_aligned`), so file count is exactly
-    buckets × files_per_bucket, never tasks × buckets, while resume and
-    per-partition verdicts stay aligned with the checkpoint key."""
-    if fmt not in ("parquet", "iceberg"):
-        raise ValueError(
-            "unsupported fmt %r: expected 'parquet' or 'iceberg'" % (fmt,)
-        )
+    (:func:`_write_bucketed`), so there are at most
+    buckets × files_per_bucket files, never tasks × buckets, while resume
+    and per-partition verdicts stay aligned with the checkpoint key."""
     out = df.withColumn("_part_id", deterministic_partition_id(F.col(id_col), buckets))
-    out = _bucket_aligned(out, buckets, files_per_bucket, F.col(id_col))
-    writer = out.write.mode("overwrite").partitionBy("_part_id")
-    if fmt == "iceberg":
-        writer.format("iceberg").saveAsTable(path)
-    else:
-        writer.parquet(path)
+    _write_bucketed(out, path, fmt, buckets, files_per_bucket, id_col)
 
 
 @dataclass
@@ -426,7 +437,6 @@ def write_quarantine(
     valid_path: str,
     quarantine_path: str,
     fmt: str = "parquet",
-    partition_by_bucket: bool = True,
     files_per_bucket: int = 1,
 ) -> None:
     """Route one checked frame to two sinks — the production
@@ -436,12 +446,11 @@ def write_quarantine(
     the quarantine is self-describing (every row says why its document
     was rejected).
 
-    One pass over the input per sink plus a bucket-aligned exchange
-    (:func:`_bucket_aligned` — file count stays buckets ×
-    ``files_per_bucket`` instead of tasks × buckets); both writes
-    partition by the deterministic bucket id by default, so downstream
-    repair jobs and checkpoint resume see the same layout as
-    :func:`write_partitioned`.
+    One pass over the input per sink; both writes are bucket-aligned and
+    partitioned by the deterministic bucket id (:func:`_write_bucketed`
+    — file count stays at most buckets × ``files_per_bucket`` instead of
+    tasks × buckets), so downstream repair jobs and checkpoint resume see
+    the same layout as :func:`write_partitioned`.
     Quarantine volume is the invalid fraction only — the predicate filter
     is pushed into the scan for columnar sources.
 
@@ -453,10 +462,6 @@ def write_quarantine(
     error rather than silently producing duplicate output columns) —
     one row per (document, violation), built by exploding ``_violations``
     inline with the payload (no self-join back onto the report)."""
-    if fmt not in ("parquet", "iceberg"):
-        raise ValueError(
-            "unsupported fmt %r: expected 'parquet' or 'iceberg'" % (fmt,)
-        )
     engine_cols = ("_valid", "_violations", "_n_violations")
     payload = [c for c in report.annotated.columns if c not in engine_cols and c != "_part_id"]
     reserved = {
@@ -474,29 +479,12 @@ def write_quarantine(
         )
 
     valid = report.annotated.filter(F.col("_valid")).select(*payload, "_part_id")
-    if partition_by_bucket:
-        valid = _bucket_aligned(
-            valid, report.buckets, files_per_bucket, F.col(report.id_col)
-        )
-    writer = valid.write.mode("overwrite")
-    if partition_by_bucket:
-        writer = writer.partitionBy("_part_id")
-    if fmt == "iceberg":
-        writer.format("iceberg").saveAsTable(valid_path)
-    else:
-        writer.parquet(valid_path)
-
+    _write_bucketed(
+        valid, valid_path, fmt, report.buckets, files_per_bucket, report.id_col
+    )
     bad = explode_violations(
         report.annotated, [*payload, "_part_id"], prefix="violation_"
     )
-    if partition_by_bucket:
-        bad = _bucket_aligned(
-            bad, report.buckets, files_per_bucket, F.col(report.id_col)
-        )
-    writer = bad.write.mode("overwrite")
-    if partition_by_bucket:
-        writer = writer.partitionBy("_part_id")
-    if fmt == "iceberg":
-        writer.format("iceberg").saveAsTable(quarantine_path)
-    else:
-        writer.parquet(quarantine_path)
+    _write_bucketed(
+        bad, quarantine_path, fmt, report.buckets, files_per_bucket, report.id_col
+    )

@@ -7,7 +7,7 @@ from .stats import (
     top_values,
 )
 from .uniqueness import duplicate_keys
-from .referential import orphan_keys, orphan_rows, salted_orphan_rows
+from .referential import orphan_keys, orphan_rows
 from .drift import (
     drift_across_snapshots,
     drift_between_sketch_tables,
@@ -52,7 +52,6 @@ __all__ = [
     "top_values",
     "duplicate_keys",
     "orphan_rows",
-    "salted_orphan_rows",
     "orphan_keys",
     "psi_drift",
     "quantile_drift",

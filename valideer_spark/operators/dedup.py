@@ -24,7 +24,7 @@ linear in candidate count.
 from __future__ import annotations
 
 import random
-from typing import List, Optional, Sequence
+from typing import List, Literal, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -218,7 +218,7 @@ def jaccard_verify_candidates(
     n: int = 3,
     threshold_num: int = 1,
     threshold_den: int = 2,
-    prune="auto",
+    prune: Union[bool, Literal["auto"]] = "auto",
 ) -> DataFrame:
     """Exact-Jaccard verification of a candidate-pair table (a_id, b_id)
     — the 100 TB-scale path: candidate generation via
@@ -242,7 +242,9 @@ def jaccard_verify_candidates(
     exchange reuse does not collapse them). With a PERSISTED candidates
     table the round-5 numbers stand: 1.26x win at 18% coverage, 1.02x at
     100%. Hence ``prune="auto"`` (default): enabled iff ``candidates``
-    is itself a cached DataFrame; pass ``True``/``False`` to override.
+    is itself a cached DataFrame (a frame derived from a cached parent
+    reads as uncached, so pass ``True`` for it); pass ``True``/``False``
+    to override.
     Output is identical either way (pytest-asserted), including
     candidates whose ids carry no shingles.
     """

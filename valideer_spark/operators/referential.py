@@ -6,8 +6,8 @@ AQE's runtime rewrite; large ones take a shuffled-hash/sort-merge join
 with AQE skew splitting. Forcing a broadcast of a multi-million-key
 reference builds the hash relation single-threaded on the driver:
 at 2M docs / ~7M distinct refs the forced broadcast anti-join ran 5.5s
-vs 1.3s for the planner-chosen shuffled-hash join (local[32],
-tools/referential_experiment.py), so the hint is now opt-in
+vs 1.3s for the planner-chosen shuffled-hash join (local[32]; the
+round-6 experiment script is at commit 0ff93ec), so the hint is opt-in
 (``broadcast_ref=True``) for callers who know their reference is small
 but mis-estimated. The violating side is always the fact table: rows
 whose foreign key has no match in the reference relation.
@@ -44,46 +44,6 @@ def orphan_rows(
     return fact.filter(F.col(fact_key).isNotNull()).join(
         r, F.col(fact_key) == F.col("__ref_key"), "left_anti"
     )
-
-
-def salted_orphan_rows(
-    fact: DataFrame,
-    fact_key: str,
-    ref: DataFrame,
-    ref_key: str,
-    salt: int = 16,
-) -> DataFrame:
-    """Skew-proof anti-join for a NON-broadcastable reference: the fact
-    side gets a per-row salt, the reference side is exploded ``salt``
-    ways, and the join keys on (key, salt) — a hot foreign key (one
-    doc_id prefix holding 10^8 rows) spreads over ``salt`` reducers
-    instead of melting one.
-
-    Use when the reference is too large to broadcast AND the fact keys
-    are skewed beyond what AQE's skew-join splitting handles (AQE splits
-    by partition size after the fact; explicit salting bounds the
-    partition up front). Cost: |ref| × salt shuffle rows on the reference
-    side — acceptable when |ref| ≪ |fact|, which is the referential-check
-    shape.
-    """
-    salted_fact = fact.filter(F.col(fact_key).isNotNull()).withColumn(
-        "__salt",
-        F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt)).cast("int"),
-    )
-    exploded_ref = (
-        ref.select(F.col(ref_key).alias("__ref_key"))
-        .distinct()
-        .select(
-            "__ref_key",
-            F.explode(F.sequence(F.lit(0), F.lit(salt - 1))).alias("__salt"),
-        )
-    )
-    return salted_fact.join(
-        exploded_ref,
-        (F.col(fact_key) == F.col("__ref_key"))
-        & (salted_fact["__salt"] == exploded_ref["__salt"]),
-        "left_anti",
-    ).drop("__salt")
 
 
 def orphan_keys(
