@@ -76,10 +76,10 @@ def test_pattern_named_groups_lower_natively(spark):
     (underscores) still fall back to the kernel."""
     from valideer_spark.plans.lowering import translate_python_regex
 
-    assert translate_python_regex(r"(?P<d>\d+)$") == r"(?d)^(?:(?<d>\d+)$)"
+    assert translate_python_regex(r"(?P<d>\d+)$") == r"(?d)^(?:(?<d>[0-9\p{Nd}]+)$)"
     assert (
         translate_python_regex(r"(?P<d>\d+)-(?P=d)$")
-        == r"(?d)^(?:(?<d>\d+)-\k<d>$)"
+        == r"(?d)^(?:(?<d>[0-9\p{Nd}]+)-\k<d>$)"
     )
     # escaped paren before the group is not a group opener
     assert translate_python_regex(r"\(?P<d") == r"(?d)^(?:\(?P<d)"
@@ -366,6 +366,9 @@ def test_regex_screen_python_only_constructs(spark):
     # end-to-end: conditional-group pattern validates via the kernel
     run_case(spark, V.Pattern(r"(a)?(?(1)b|c)$"), T.StringType(),
              ["ab", "c", "ac", None], check_messages=True)
+    # flags given to re.compile are not in the pattern text: kernel too
+    run_case(spark, V.Pattern(re.compile(r"ab$", re.I)), T.StringType(),
+             ["ab", "AB", "ac", None], check_messages=True)
 
 
 def test_simhash_small_bits_no_sign_smear(spark):
@@ -516,12 +519,12 @@ def test_named_group_rewrite_is_character_class_aware(spark):
     # ...and a REAL group after the class still rewrites
     assert (
         translate_python_regex(r"[a(?P<b>](?P<d>\d)")
-        == r"(?d)^(?:[a(?P<b>](?<d>\d))"
+        == r"(?d)^(?:[a(?P<b>](?<d>[0-9\p{Nd}]))"
     )
     # negated class
     assert translate_python_regex(r"[^(?P=x]") == r"(?d)^(?:[^(?P=x])"
     # escaped '[' does NOT open a class: group after it rewrites
-    assert translate_python_regex(r"\[(?P<d>\d)") == r"(?d)^(?:\[(?<d>\d))"
+    assert translate_python_regex(r"\[(?P<d>\d)") == r"(?d)^(?:\[(?<d>[0-9\p{Nd}]))"
 
     # value-level parity on the ADVICE pattern: 'P' and '<' must match
     run_case(

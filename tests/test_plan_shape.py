@@ -188,21 +188,33 @@ def test_second_check_does_not_relower(spark):
     assert report.plan is plan and len(calls) == 1
 
 
+def _check_plan(df) -> str:
+    """The optimised plan above the cached input: the ``InMemoryRelation``
+    repeats the cached generator's own plan, which has ``format_string(``
+    of its own."""
+    plan = _optimized(df)
+    assert "InMemoryRelation" in plan
+    return plan.split("InMemoryRelation")[0]
+
+
 def test_violation_plans_build_each_violation_once(spark):
     """The violation explode is an outer generator plus an explicit index
     filter, so Catalyst infers no ``size(_violations) > 0`` filter that
-    would build every invalid row's violation array a second time."""
+    would build every invalid row's violation array a second time; the
+    metrics explode constraint codes and format no message at all."""
     from valideer_spark.engine import ValidationEngine
     from valideer_spark.flagship import doc_schema
     from valideer_spark.sources import synth_docs
 
-    # cached, so the counts are the check's own and not the generator's
     docs = synth_docs(spark, 100).cache()
     try:
         report = ValidationEngine(doc_schema()).check(docs)
-        for df in (report.violation_rows(), report.metrics()):
-            plan = _optimized(df)
-            assert 1 <= plan.count("format_string(") <= 22, len(plan)
-            assert 1 <= plan.count("zip_with(") <= 4, len(plan)
+        plan = _check_plan(report.violation_rows())
+        assert 1 <= plan.count("format_string(") <= 22, len(plan)
+        assert 1 <= plan.count("zip_with(") <= 4, len(plan)
+        for df in (report.metrics(), report.partition_metrics()):
+            plan = _check_plan(df)
+            assert plan.count("format_string(") == 0, len(plan)
+            assert 1 <= plan.count("zip_with(") <= 2, len(plan)
     finally:
         docs.unpersist()

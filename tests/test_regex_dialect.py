@@ -17,6 +17,7 @@ asserted once in test_lowering_matrix.py.
 """
 
 import re
+import string
 
 import pytest
 from hypothesis import HealthCheck, assume, given, settings
@@ -27,7 +28,10 @@ from hypothesis import strategies as st
 # (line-terminator semantics are the classic Java/Python '.'/'$' delta)
 _LIT = list("abc01 _")
 _CLASS_ATOMS = ["a", "b", "c", "0", "1", "a-c", "0-1", "_", "-", "]", "^", "?", "(", "P", "<", "[", "&"]
-_ESCAPES = [r"\d", r"\w", r"\s", r"\.", r"\\", r"\]", r"\["]
+_ESCAPES = [
+    r"\d", r"\w", r"\s", r"\D", r"\W", r"\S", r"\b", r"\v",
+    r"\.", r"\\", r"\]", r"\[",
+]
 _QUANTS = ["", "", "", "*", "+", "?", "{1,2}", "{2}", "*?", "+?"]
 
 
@@ -84,7 +88,13 @@ def _pattern(draw):
     return prefix + body + suffix
 
 
-_SUBJECT_CHARS = list("abc01 _]-P<\r\n.")
+# non-ASCII digits (Arabic-Indic, full-width), spaces (NBSP, em space,
+# ideographic), letters (Latin, the case-folding odd ones İ ı ſ and the
+# KELVIN SIGN, Greek, CJK) and a superscript digit, which Python's
+# Unicode \d/\s/\w/IGNORECASE treat differently from Java's defaults
+_SUBJECT_CHARS = list("abc01 _]-P<\r\n.") + list(
+    "\u0661\uff11\u00a0\u2003\u3000\u00e9\u0130\u0131\u017f\u212a\u03a9\u4e2d\u00b2"
+)
 _EDGE_SUBJECTS = ["", "\n", "a\n", "a\r", "abc", "a-c", "]", "P", "a\rb"]
 
 
@@ -134,3 +144,95 @@ def test_translated_patterns_agree_with_kernel(spark, data):
             "dialect mismatch on pattern %r (java %r) subject %r: "
             "python re.match=%s, java find=%s" % (pat, translated, s, py, jv)
         )
+
+
+# Every construct translate_python_regex spells differently for Java, on
+# its own, inside a class and negated, plus IGNORECASE over them and over
+# the ASCII letters (one alternation; each letter is then checked on the
+# alternation's matches): compared with CPython on every code point.
+_SHORTHANDS = [r"\d", r"\D", r"\w", r"\W", r"\s", r"\S", r"\v"]
+_ASCII_LETTERS = "(?:" + "|".join(string.ascii_letters) + ")"
+_CODE_POINT_PROBES = (
+    _SHORTHANDS
+    + [r"[\d]", r"[\D]", r"[^\d]", r"[^\D]", r"[\w-]", r"[^\w]", r"[\s]", r"[^\s]"]
+    + ["(?i)" + p for p in _SHORTHANDS + [_ASCII_LETTERS]]
+)
+
+
+def test_translated_classes_agree_on_every_code_point(spark):
+    r"""Exhaustive over U+0000..U+10FFFF (surrogates excluded: Spark strings
+    are UTF-8). The only allowed disagreements are code points unassigned
+    in either Unicode version, the JVM's (Java 17: Unicode 13) or
+    CPython's (3.11: Unicode 14): the 10 Tangsa digits for \d."""
+    import unicodedata
+
+    from pyspark.sql import functions as F
+
+    from valideer_spark.plans.lowering import translate_python_regex
+
+    java = [translate_python_regex(p) for p in _CODE_POINT_PROBES]
+    assert None not in java
+
+    # every probe matches one character, so scanning all of them as one
+    # string finds each code point it matches once
+    text = "".join(chr(c) for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF)
+    majority, expected = [], []
+    for p in _CODE_POINT_PROBES:
+        rx = re.compile(p)
+        hits = rx.findall(text)
+        # each probe is compared on its minority side: matches, or misses
+        # when most code points match
+        majority.append(len(hits) > len(text) // 2)
+        expected.append({ord(c) for c in (rx.sub("", text) if majority[-1] else hits)})
+
+    cp = F.col("id")
+    # a leading "A" keeps a decoded U+FEFF from being read as a byte order mark
+    utf32 = F.unhex(F.concat(F.lit("00000041"), F.lpad(F.hex(cp), 8, "0")))
+    s = F.substring(F.decode(utf32, "UTF-32"), 2, 1)
+    flagged = (
+        spark.range(0x110000)
+        .filter(~cp.between(0xD800, 0xDFFF))
+        .select(
+            cp.alias("cp"),
+            s.rlike(r"^\p{Cn}").alias("jvm_unassigned"),
+            F.array_compact(
+                F.array(
+                    *[
+                        F.when(s.rlike(j) != F.lit(m), F.lit(k))
+                        for k, (j, m) in enumerate(zip(java, majority))
+                    ]
+                )
+            ).alias("minority"),
+        )
+        .filter(F.col("jvm_unassigned") | (F.size("minority") > 0))
+        .collect()
+    )
+    actual = [set() for _ in java]
+    jvm_unassigned = set()
+    for r in flagged:
+        if r.jvm_unassigned:
+            jvm_unassigned.add(r.cp)
+        for k in r.minority:
+            actual[k].add(r.cp)
+    assert len(jvm_unassigned) > 800_000  # the decode reached every plane
+
+    def assigned(c):
+        return c not in jvm_unassigned and unicodedata.category(chr(c)) != "Cn"
+
+    for k, p in enumerate(_CODE_POINT_PROBES):
+        differ = sorted(c for c in expected[k] ^ actual[k] if assigned(c))
+        assert not differ, "%r (java %r) disagrees on %s" % (
+            p, java[k], ", ".join("U+%04X" % c for c in differ[:10])
+        )
+
+    # each letter on its own, over every code point the alternation matches
+    folded = expected[_CODE_POINT_PROBES.index("(?i)" + _ASCII_LETTERS)]
+    assert len(folded) > len(string.ascii_letters)  # İ ı ſ K fold too
+    compile_java = spark._jvm.java.util.regex.Pattern.compile
+    for letter in string.ascii_letters:
+        py = re.compile("(?i)" + letter)
+        jv = compile_java(translate_python_regex("(?i)" + letter))
+        for c in folded:
+            assert bool(py.match(chr(c))) == jv.matcher(chr(c)).find(), (
+                letter, "U+%04X" % c
+            )

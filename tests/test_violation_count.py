@@ -8,7 +8,14 @@ lowering: the flagship docs (Object/sequence-of-struct/Enum/Range/Pattern/
 conditions, null spans, empty sequences), the typed validator matrix
 (Mapping, heterogeneous tuples, AnyOf/AllOf/ChainOf, AdaptTo, Nullable,
 String bounds), and the open-extras map side channel.
+
+The codes-only violation array (``FramePlan.violation_codes_col``, what
+the metrics explode) must carry the same constraints in the same order as
+the full one on every row, over the same corpora plus the kernel-fallback
+nodes.
 """
+
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -26,24 +33,22 @@ def _assert_counts_match(report):
     assert df.filter(~F.col("_valid") & (F.col("_n_violations") == 0)).count() == 0
 
 
-def test_count_matches_size_flagship(spark):
+def _flagship_report(spark):
     from valideer_spark.flagship import doc_schema
     from valideer_spark.sources import synth_docs
 
-    report = ValidationEngine(doc_schema()).check(synth_docs(spark, 5000))
-    _assert_counts_match(report)
+    return ValidationEngine(doc_schema()).check(synth_docs(spark, 5000))
 
 
-def test_count_matches_size_typed_matrix(spark):
+def _typed_report(spark):
     from valideer_spark.sources.typed import typed_rows, typed_schema
 
-    report = ValidationEngine(typed_schema(), id_col="rec_id").check(
+    return ValidationEngine(typed_schema(), id_col="rec_id").check(
         typed_rows(spark, 3000)
     )
-    _assert_counts_match(report)
 
 
-def test_count_matches_size_open_extras(spark):
+def _open_extras_reports(spark):
     from valideer_spark import core as V
 
     df = spark.range(500).select(
@@ -70,11 +75,78 @@ def test_count_matches_size_open_extras(spark):
         required={"id": V.Pattern(r"x-\d{6}$")},
         additional=V.Range("integer", min_value=0),
     )
-    _assert_counts_match(ValidationEngine(schema, id_col="id").check(df))
     # additional=False: the extras map present → ONE object.additional
     # violation regardless of entry count
     closed = V.Object(required={"id": V.Pattern(r"x-\d{6}$")}, additional=False)
-    _assert_counts_match(ValidationEngine(closed, id_col="id").check(df))
+    return [
+        ValidationEngine(schema, id_col="id").check(df),
+        ValidationEngine(closed, id_col="id").check(df),
+    ]
+
+
+def _kernel_fallback_report(spark):
+    """Scalar and nested kernel fallbacks (Python-callable conditions, a
+    pattern the regex translator rejects), alone and beside native
+    nodes."""
+    from valideer_spark import core as V
+
+    df = spark.range(400).select(
+        F.col("id").alias("n"),
+        F.when(F.col("id") % 5 == 0, F.lit("ac"))
+        .when(F.col("id") % 7 == 0, F.lit(None))
+        .otherwise(F.lit("ab"))
+        .alias("s"),
+        F.when(
+            F.col("id") % 3 == 0, F.array(F.col("id"), F.col("id") + 1)
+        ).otherwise(F.array(F.col("id"))).alias("xs"),
+    )
+    schema = V.Object(
+        required={
+            "n": V.AllOf(V.Condition(lambda x: x % 4 != 0), V.Range(max_value=300)),
+            "s": V.Pattern(r"(a)?(?(1)b|c)$"),
+            "xs": V.Condition(lambda xs: len(xs) == 1),
+        }
+    )
+    return ValidationEngine(schema, id_col="n").check(df)
+
+
+def test_count_matches_size_flagship(spark):
+    _assert_counts_match(_flagship_report(spark))
+
+
+def test_count_matches_size_typed_matrix(spark):
+    _assert_counts_match(_typed_report(spark))
+
+
+def test_count_matches_size_open_extras(spark):
+    for report in _open_extras_reports(spark):
+        _assert_counts_match(report)
+
+
+@pytest.mark.parametrize(
+    "reports",
+    [
+        lambda spark: [_flagship_report(spark)],
+        lambda spark: [_typed_report(spark)],
+        _open_extras_reports,
+        lambda spark: [_kernel_fallback_report(spark)],
+    ],
+    ids=["flagship", "typed_matrix", "open_extras", "kernel_fallback"],
+)
+def test_codes_match_violation_constraints(spark, reports):
+    for report in reports(spark):
+        df = report.annotated
+        codes = report.plan.violation_codes_col(df)
+        rows = df.select(
+            "_valid",
+            F.col("_violations.constraint").alias("full"),
+            codes.constraint.alias("codes"),
+            F.exists(codes, lambda v: v.path.isNotNull() | v.message.isNotNull())
+            .alias("formatted"),
+        )
+        assert rows.filter(~F.col("_valid")).count() > 0
+        assert rows.filter(~F.col("full").eqNullSafe(F.col("codes"))).count() == 0
+        assert rows.filter(F.col("formatted")).count() == 0
 
 
 def test_verdicts_plan_prunes_violation_structs(spark):

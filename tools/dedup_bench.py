@@ -28,10 +28,12 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,7 +85,7 @@ def kernel_bracket():
     call before the first timed pass and after every timed pass, then
     report max drift — >15% between any two readings means external
     contention moved DURING the run and the numbers are rejects."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(REPO, "tools"))
     from scaling_bench import kernel_rate
 
     kernel_rate(5_000)  # warm-up, discarded (first call reads ~25% cold)

@@ -4,7 +4,8 @@ the scale-design claims: pushdown, pruning, broadcast, partial aggs)."""
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession, functions as F
 
@@ -142,7 +143,7 @@ def main() -> None:
                 head.append("… (elided)")
                 break
         out += [f"## {title}", "", "```", *head, "```", ""]
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print("wrote PLANS.md")
     spark.stop()

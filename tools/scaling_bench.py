@@ -19,6 +19,9 @@ import subprocess
 import sys
 import time
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _cli_args():
     # parsed lazily so `from scaling_bench import kernel_rate` (the
     # dedup_bench window bracket) does not trip over THIS script's argv
@@ -34,7 +37,7 @@ ITERS = int(os.environ.get("SCALING_ITERS", "2"))
 
 PREP_TEMPLATE = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[32]")
          .config("spark.driver.memory", "24g")
@@ -47,7 +50,7 @@ spark.stop()
 
 RUN_TEMPLATE = r"""
 import sys, time, json
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession, functions as F
 from valideer_spark.conf import recommended_conf
 builder = (SparkSession.builder.master("local[{cpus}]")
@@ -92,13 +95,15 @@ spark.stop()
 
 
 def prepare_input(n_docs: int, parquet_dir: str) -> None:
-    code = PREP_TEMPLATE.format(n_docs=n_docs, parquet_dir=parquet_dir)
+    code = PREP_TEMPLATE.format(n_docs=n_docs, parquet_dir=parquet_dir, repo=REPO)
     subprocess.run([sys.executable, "-c", code], check=True, timeout=1800,
                    capture_output=True)
 
 
 def run(cpus: int, parquet_dir: str) -> dict:
-    code = RUN_TEMPLATE.format(cpus=cpus, parquet_dir=parquet_dir, iters=ITERS)
+    code = RUN_TEMPLATE.format(
+        cpus=cpus, parquet_dir=parquet_dir, iters=ITERS, repo=REPO
+    )
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True, timeout=3600
     )
@@ -109,7 +114,7 @@ def run(cpus: int, parquet_dir: str) -> dict:
 
 
 def kernel_rate(n_docs: int = 20_000) -> float:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from valideer_spark.flagship import doc_schema
 
     schema = doc_schema()

@@ -9,10 +9,7 @@ from __future__ import annotations
 from typing import Dict
 
 
-def recommended_conf(
-    executor_cores: int = 8,
-    target_partitions: int | None = None,
-) -> Dict[str, str]:
+def recommended_conf(target_partitions: int | None = None) -> Dict[str, str]:
     """Engine-recommended configs.
 
     * AQE on (runtime coalescing + skew-join splitting) — the referential

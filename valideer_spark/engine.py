@@ -180,9 +180,15 @@ class CheckReport:
             .limit(k)
         )
 
+    def _violation_codes(self, cols=()) -> DataFrame:
+        """Exploded violations with constraint codes only: counting
+        constraints never builds a path, value repr or message."""
+        codes = self.plan.violation_codes_col(self.annotated)
+        return explode_violations(self.annotated, cols, violations=codes)
+
     def metrics(self) -> DataFrame:
         """Violation counts by constraint (map-side combinable agg)."""
-        return explode_violations(self.annotated).groupBy("constraint").count()
+        return self._violation_codes().groupBy("constraint").count()
 
     def partition_metrics(self) -> DataFrame:
         """Violation counts by (partition, constraint) — the per-partition
@@ -191,7 +197,7 @@ class CheckReport:
         exploded aggregation shape as :meth:`metrics`, keyed on
         (bucket, constraint) — shuffle is O(buckets × constraints)."""
         return (
-            explode_violations(self.annotated, [F.col("_part_id").alias("part_id")])
+            self._violation_codes([F.col("_part_id").alias("part_id")])
             .groupBy("part_id", "constraint")
             .agg(F.count(F.lit(1)).alias("n"))
         )

@@ -39,12 +39,16 @@ def _row_struct(fields: Tuple[str, ...]) -> Column:
 
 
 def explode_violations(
-    annotated: DataFrame, cols: Sequence[Any] = (), prefix: str = ""
+    annotated: DataFrame,
+    cols: Sequence[Any] = (),
+    prefix: str = "",
+    violations: Any = "_violations",
 ) -> DataFrame:
     """One row per (invalid document, violation) of a :meth:`FramePlan.check`
     output with violations: ``cols``, then ``violation_index`` and the
     violation's ``path``, ``constraint`` and ``message``, each named with
-    ``prefix``.
+    ``prefix``. ``violations`` is the array exploded: ``_violations``, or
+    :meth:`FramePlan.violation_codes_col` when only constraints are read.
 
     The generator is ``posexplode_outer`` followed by an explicit
     ``violation_index IS NOT NULL`` filter: from a plain ``posexplode``
@@ -56,7 +60,7 @@ def explode_violations(
     exploded = (
         annotated.filter(~F.col("_valid"))
         .select(
-            *cols, F.posexplode_outer("_violations").alias("violation_index", "_v")
+            *cols, F.posexplode_outer(violations).alias("violation_index", "_v")
         )
         .filter(F.col("violation_index").isNotNull())
     )
@@ -105,6 +109,14 @@ class FramePlan:
         kernel traversal order (element 0 == kernel fail-fast error)."""
         return self._memoised(
             "violations", df, lambda row: self.lowered.violations(row, F.lit(""))
+        )
+
+    def violation_codes_col(self, df: DataFrame) -> Column:
+        """:meth:`violations_col` with NULL paths and messages: the same
+        constraints in the same order, without value reprs or message
+        formatting, for consumers that only count constraints."""
+        return self._memoised(
+            "codes", df, lambda row: self.lowered.violations(row, None)
         )
 
     def violation_count_col(self, df: DataFrame) -> Column:

@@ -9,7 +9,8 @@ bundle of pure ``Column`` expression builders:
 * ``violations(col, path)`` — ``array<struct<path,constraint,message>>`` of
   ALL violations in kernel traversal order, so element 0 equals the
   kernel's fail-fast error (full violation report at scale, first-error
-  parity per row);
+  parity per row); ``path=None`` builds the same array with NULL paths
+  and messages (constraint codes only, no value reprs or formatting);
 * ``msg(col)``         — bare message of the first failure (used by AnyOf
   to join alternatives with ``" or "``).
 
@@ -85,7 +86,7 @@ class Lowered:
     out_type: T.DataType
     predicate: Callable[[Column], Column]
     adapt: Callable[[Column], Column]
-    violations: Callable[[Column, Column], Column]
+    violations: Callable[[Column, Optional[Column]], Column]
     msg: Callable[[Column], Column]
     #: value-independent bare message, when one exists (leaf "must be X")
     static_msg: Optional[str] = None
@@ -117,22 +118,28 @@ class Lowered:
 
 def _count_of(node: "Lowered") -> Callable[[Column], Column]:
     """The node's violation-count expression (cheap native counter when
-    lowered, else size of the full violations array)."""
+    lowered, else size of the codes-only violations array)."""
     if node.count is not None:
         return node.count
-    return lambda col: F.size(node.violations(col, F.lit("")))
+    return lambda col: F.size(node.violations(col, None))
 
 
 def _no_violations() -> Column:
     return F.array().cast(VIOLATION_TYPE)
 
 
-def _violation(path: Column, constraint: str, message: Column) -> Column:
+def _violation(
+    path: Optional[Column], constraint: str, message: Callable[[], Column]
+) -> Column:
+    """One-element violation array. ``path=None`` is the codes-only form:
+    path and message are NULL, and ``message`` (a thunk, as value reprs
+    are large trees to build) is never called."""
+    null = F.lit(None).cast(T.StringType())
     return F.array(
         F.struct(
-            path.alias("path"),
+            (null if path is None else path).alias("path"),
             F.lit(constraint).alias("constraint"),
-            message.alias("message"),
+            (null if path is None else message()).alias("message"),
         )
     )
 
@@ -148,18 +155,23 @@ def _invalid_value_msg(col: Column, dtype: T.DataType, bare: Column) -> Column:
     )
 
 
-def extend_path(path: Column, context_bare: Column, context_repr: Column) -> Column:
-    """Kernel context rendering: first element bare, rest ``[repr]``."""
+def extend_path(
+    path: Optional[Column], context_bare: Column, context_repr: Column
+) -> Optional[Column]:
+    """Kernel context rendering: first element bare, rest ``[repr]``. A
+    codes-only build (``path=None``) stays codes-only."""
+    if path is None:
+        return None
     return F.when(path == "", context_bare).otherwise(
         F.concat(path, F.lit("["), context_repr, F.lit("]"))
     )
 
 
-def _extend_path_prop(path: Column, name: str) -> Column:
+def _extend_path_prop(path: Optional[Column], name: str) -> Optional[Column]:
     return extend_path(path, F.lit(name), F.lit(repr(name)))
 
 
-def _extend_path_index(path: Column, idx: Column) -> Column:
+def _extend_path_index(path: Optional[Column], idx: Column) -> Optional[Column]:
     s = idx.cast("string")
     return extend_path(path, s, s)
 
@@ -203,12 +215,14 @@ def _leaf(
             )
         return expr.otherwise(F.lit(None)) if expr is not None else F.lit(None)
 
-    def violations(col: Column, path: Column) -> Column:
+    def violations(col: Column, path: Optional[Column]) -> Column:
         expr = None
         for c in checks:
             clause = _nullsafe(c.fails(col))
             vio = _violation(
-                path, c.constraint, _invalid_value_msg(col, dtype, c.bare_msg(col))
+                path,
+                c.constraint,
+                lambda: _invalid_value_msg(col, dtype, c.bare_msg(col)),
             )
             expr = F.when(clause, vio) if expr is None else expr.when(clause, vio)
         return expr.otherwise(_no_violations()) if expr is not None else _no_violations()
@@ -375,10 +389,50 @@ def _rewrite_named_groups(pattern: str) -> Optional[str]:
     return "".join(out)
 
 
-def _normalize_classes(pattern: str) -> str:
-    """Escape the characters that are literals inside a Python character
-    class but syntax inside a Java one (deltas found by the dialect
-    property test, tests/test_regex_dialect.py):
+# Python's str-pattern \s: the 29 code points of str.isspace(). Java's
+# \s is the 6 ASCII ones, so the class is spelled out.
+_PY_SPACE = (
+    "\\t-\\r\\x1C-\\x20\\x85\\xA0\\u1680\\u2000-\\u200A"
+    "\\u2028\\u2029\\u202F\\u205F\\u3000"
+)
+
+# Escapes whose Java meaning differs from Python's, as (spelling outside a
+# class, spelling inside one); None = no exact Java spelling, so the
+# pattern takes the kernel fallback. Python's str-pattern \d is Unicode
+# category Nd and \w is categories L and N plus "_" (Java's are ASCII);
+# \b/\B border on that \w (Java's on isLetterOrDigit); \v is one
+# character in Python and a class in Java; \Z is Java's \z. The other
+# escapes mean the same in both and are copied.
+_JAVA_ESCAPES = {
+    "d": ("[0-9\\p{Nd}]", "0-9\\p{Nd}"),
+    "D": ("[^0-9\\p{Nd}]", "\\P{Nd}"),
+    "w": ("[\\p{L}\\p{N}_]", "\\p{L}\\p{N}_"),
+    "W": ("[^\\p{L}\\p{N}_]", None),
+    "s": ("[" + _PY_SPACE + "]", _PY_SPACE),
+    "S": ("[^" + _PY_SPACE + "]", None),
+    "b": (None, None),
+    "B": (None, None),
+    "v": ("\\x0B", "\\x0B"),
+    "Z": ("\\z", None),
+}
+
+# an inline flag group that sets or clears IGNORECASE: (?i) (?si:…) (?-i:…)
+_CASE_FLAG = re.compile(r"\(\?[aiLmsux-]*i")
+
+# Under IGNORECASE with UNICODE_CASE, Java and Python agree on every code
+# point for ASCII literals and the escapes above, but not for class
+# ranges ((?i)[A-Z] and U+212A), non-ASCII literals or backreferences.
+_CASE_UNSAFE_ESCAPES = set("xuUNk0123456789")
+
+
+def _translate_body(pattern: str, ignore_case: bool) -> Optional[str]:
+    """Rewrite a Python pattern body into Java syntax with the same
+    matches, or None when there is no exact Java spelling.
+
+    Escapes follow ``_JAVA_ESCAPES``. Inside a character class, the
+    characters that are literals in Python but syntax in Java are escaped
+    (deltas found by the dialect property test,
+    tests/test_regex_dialect.py):
 
     * ``]`` as the first member (``[]a]`` / ``[^]a]``) — legal literal in
       Python, unclosed-class error in Java → ``\\]``;
@@ -387,7 +441,8 @@ def _normalize_classes(pattern: str) -> str:
       operator → ``\\&`` (escaping single ``&`` is harmless and makes
       ``&&`` safe).
 
-    Escape-aware scan; text outside classes is returned untouched."""
+    ``ignore_case`` (the pattern sets the ``i`` flag) also rejects
+    character classes and the ``_CASE_UNSAFE_ESCAPES``."""
     out = []
     i, n = 0, len(pattern)
     in_class = False
@@ -395,7 +450,16 @@ def _normalize_classes(pattern: str) -> str:
     while i < n:
         c = pattern[i]
         if c == "\\" and i + 1 < n:
-            out.append(pattern[i : i + 2])
+            e = pattern[i + 1]
+            if ignore_case and e in _CASE_UNSAFE_ESCAPES:
+                return None
+            if e in _JAVA_ESCAPES:
+                spelled = _JAVA_ESCAPES[e][in_class]
+                if spelled is None:
+                    return None
+                out.append(spelled)
+            else:
+                out.append(pattern[i : i + 2])
             i += 2
             continue
         if in_class:
@@ -412,6 +476,8 @@ def _normalize_classes(pattern: str) -> str:
             i += 1
             continue
         if c == "[":
+            if ignore_case:
+                return None
             in_class = True
             class_open_i = i
             out.append(c)
@@ -427,7 +493,8 @@ def translate_python_regex(pattern: str) -> Optional[str]:
     start only (``re.match`` semantics). Named groups and backrefs are
     rewritten to Java spellings; returns None if not translatable (the
     caller takes the kernel-fallback path instead of risking a runtime
-    PatternSyntaxException on the executors)."""
+    PatternSyntaxException on the executors, or a different verdict on
+    non-ASCII text)."""
     if _JAVA_INCOMPATIBLE.search(pattern):
         return None
     if "(?P" in pattern:
@@ -435,14 +502,20 @@ def translate_python_regex(pattern: str) -> Optional[str]:
         if rewritten is None:
             return None
         pattern = rewritten
-    pattern = _normalize_classes(pattern)
-    # Python \Z (absolute end) == Java \z
-    translated = re.sub(r"(?<!\\)\\Z", r"\\z", pattern)
+    ignore_case = _CASE_FLAG.search(pattern) is not None
+    if ignore_case and not pattern.isascii():
+        return None
+    translated = _translate_body(pattern, ignore_case)
+    if translated is None:
+        return None
     # (?d) = UNIX_LINES: shrink Java's line-terminator set (LF, CR, CRLF,
     # U+0085, U+2028, U+2029) to LF alone for '.', '^' and '$', matching
     # CPython's LF-only rule — found by the dialect property test on
-    # subject "a<CR>" vs pattern "a$" (tests/test_regex_dialect.py)
-    return "(?d)^(?:" + translated + ")"
+    # subject "a<CR>" vs pattern "a$" (tests/test_regex_dialect.py).
+    # (?u) = UNICODE_CASE: Python's IGNORECASE folds non-ASCII subjects
+    # too ("(?i)k" matches U+212A KELVIN SIGN).
+    flags = "(?du)" if ignore_case else "(?d)"
+    return flags + "^(?:" + translated + ")"
 
 
 # ---------------------------------------------------------------------------
@@ -571,18 +644,7 @@ def kernel_fallback(
         msg = lambda col: msg_udf(col)
         _adapt = adapt_scalar_udf()
         adapt = lambda col: _adapt(col)
-
-        def violations(col: Column, path: Column) -> Column:
-            v = vio_udf(col)
-            return F.when(
-                v.getField("message").isNull(), _no_violations()
-            ).otherwise(
-                _violation(
-                    F.concat(path, F.coalesce(v.getField("suffix"), F.lit(""))),
-                    "kernel:" + validator.__class__.__name__,
-                    v.getField("message"),
-                )
-            )
+        encode = lambda col: col
 
     else:
         predicate = lambda col: _nullsafe(ok_json_udf(F.to_json(col)))
@@ -607,18 +669,24 @@ def kernel_fallback(
             return s.map(one)
 
         adapt = lambda col: F.from_json(adapt_json_udf(F.to_json(col)), out_type)
+        encode = F.to_json
 
-        def violations(col: Column, path: Column) -> Column:
-            v = vio_udf(F.to_json(col))
-            return F.when(
-                v.getField("message").isNull(), _no_violations()
-            ).otherwise(
-                _violation(
-                    F.concat(path, F.coalesce(v.getField("suffix"), F.lit(""))),
-                    "kernel:" + validator.__class__.__name__,
-                    v.getField("message"),
-                )
+    code = "kernel:" + validator.__class__.__name__
+
+    def violations(col: Column, path: Optional[Column]) -> Column:
+        if path is None:
+            # codes only: the verdict UDF decides, no message UDF runs
+            return F.when(predicate(col), _no_violations()).otherwise(
+                _violation(None, code, lambda: None)
             )
+        v = vio_udf(encode(col))
+        return F.when(v.getField("message").isNull(), _no_violations()).otherwise(
+            _violation(
+                F.concat(path, F.coalesce(v.getField("suffix"), F.lit(""))),
+                code,
+                lambda: v.getField("message"),
+            )
+        )
 
     return Lowered(
         out_type=out_type,
@@ -668,7 +736,8 @@ def _lower_string(v: K.String, dtype: T.DataType) -> Lowered:
 def _lower_pattern(v: K.Pattern, dtype: T.DataType) -> Lowered:
     ok = isinstance(dtype, T.StringType)
     java_pattern = translate_python_regex(v.regexp.pattern)
-    if java_pattern is None:
+    # flags passed to re.compile (not written inline) are not in the text
+    if java_pattern is None or re.compile(v.regexp.pattern).flags != v.regexp.flags:
         return kernel_fallback(v, dtype)
     # kernel parity: Pattern overrides error(), so BOTH the type failure and
     # the regex failure raise "must match pattern …" (validators.py:445-452)
@@ -802,7 +871,7 @@ def _lower_range(v: K.Range, dtype: T.DataType) -> Lowered:
             p = inner.predicate(col) & p
         return _nullsafe(p)
 
-    def violations(col: Column, path: Column) -> Column:
+    def violations(col: Column, path: Optional[Column]) -> Column:
         own = bounds.violations(adapted(col), path)
         if inner:
             iv = inner.violations(col, path)
@@ -844,7 +913,7 @@ def _lower_nullable(v: K.Nullable, dtype: T.DataType) -> Lowered:
             col.isNull(), F.lit(default).cast(inner.out_type)
         ).otherwise(inner.adapt(col))
 
-    def violations(col: Column, path: Column) -> Column:
+    def violations(col: Column, path: Optional[Column]) -> Column:
         return F.when(col.isNull(), _no_violations()).otherwise(
             inner.violations(col, path)
         )
@@ -876,9 +945,9 @@ def _lower_nonnullable(v: K.NonNullable, dtype: T.DataType) -> Lowered:
             p = p & inner.predicate(col)
         return _nullsafe(p)
 
-    def violations(col: Column, path: Column) -> Column:
+    def violations(col: Column, path: Optional[Column]) -> Column:
         null_vio = _violation(
-            path, "non_null", _invalid_value_msg(col, dtype, F.lit(bare))
+            path, "non_null", lambda: _invalid_value_msg(col, dtype, F.lit(bare))
         )
         rest = inner.violations(col, path) if inner else _no_violations()
         return F.when(col.isNull(), null_vio).otherwise(rest)
@@ -920,10 +989,12 @@ def _lower_anyof(v: K.AnyOf, dtype: T.DataType) -> Lowered:
         def msg_mixed(col: Column) -> Column:
             return F.concat_ws(" or ", *[c.msg(col) for c in children])
 
-        def violations_mixed(col: Column, path: Column) -> Column:
+        def violations_mixed(col: Column, path: Optional[Column]) -> Column:
             return F.when(predicate_mixed(col), _no_violations()).otherwise(
                 _violation(
-                    path, "any_of", _invalid_value_msg(col, dtype, msg_mixed(col))
+                    path,
+                    "any_of",
+                    lambda: _invalid_value_msg(col, dtype, msg_mixed(col)),
                 )
             )
 
@@ -959,9 +1030,11 @@ def _lower_anyof(v: K.AnyOf, dtype: T.DataType) -> Lowered:
         # all children failed → join their messages with " or "
         return F.concat_ws(" or ", *[c.msg(col) for c in children])
 
-    def violations(col: Column, path: Column) -> Column:
+    def violations(col: Column, path: Optional[Column]) -> Column:
         return F.when(predicate(col), _no_violations()).otherwise(
-            _violation(path, "any_of", _invalid_value_msg(col, dtype, msg(col)))
+            _violation(
+                path, "any_of", lambda: _invalid_value_msg(col, dtype, msg(col))
+            )
         )
 
     return Lowered(
@@ -987,7 +1060,7 @@ def _lower_allof(v: K.AllOf, dtype: T.DataType) -> Lowered:
     def adapt(col: Column) -> Column:
         return children[-1].adapt(col) if children else col
 
-    def violations(col: Column, path: Column) -> Column:
+    def violations(col: Column, path: Optional[Column]) -> Column:
         arrays = [c.violations(col, path) for c in children]
         return F.concat(*arrays) if arrays else _no_violations()
 
@@ -1039,7 +1112,7 @@ def _lower_chainof(v: K.ChainOf, dtype: T.DataType) -> Lowered:
     def adapt(col: Column) -> Column:
         return threaded(col)
 
-    def violations(col: Column, path: Column) -> Column:
+    def violations(col: Column, path: Optional[Column]) -> Column:
         arrays = [node.violations(prev(col), path) for node, prev in stages]
         return F.concat(*arrays) if arrays else _no_violations()
 
@@ -1381,7 +1454,7 @@ def _lower_homogeneous_sequence(v: K.HomogeneousSequence, dtype: T.DataType) -> 
     def adapt(col: Column) -> Column:
         return F.transform(col, lambda x: item.adapt(x))
 
-    def violations(col: Column, path: Column) -> Column:
+    def violations(col: Column, path: Optional[Column]) -> Column:
         own_v = own.violations(col, path)
         items_v = F.flatten(
             F.transform(
@@ -1452,7 +1525,7 @@ def _lower_heterogeneous_sequence(
             elems = [e.cast("string") for e in elems]
         return F.array(*elems)
 
-    def violations(col: Column, path: Column) -> Column:
+    def violations(col: Column, path: Optional[Column]) -> Column:
         own_v = own.violations(col, path)
         parts = [
             node.violations(
@@ -1520,11 +1593,11 @@ def _lower_heterogeneous_struct(
             ]
         )
 
-    def violations(col: Column, path: Column) -> Column:
+    def violations(col: Column, path: Optional[Column]) -> Column:
         expr = None
         for cond, bare in own_checks(col):
             vio = _violation(
-                path, "tuple", _invalid_value_msg(col, dtype, bare)
+                path, "tuple", lambda: _invalid_value_msg(col, dtype, bare)
             )
             expr = F.when(_nullsafe(cond), vio) if expr is None else expr.when(
                 _nullsafe(cond), vio
@@ -1586,7 +1659,7 @@ def _lower_mapping(v: K.Mapping, dtype: T.DataType) -> Lowered:
             out = F.transform_keys(out, lambda k, x: kv.adapt(k))
         return out
 
-    def violations(col: Column, path: Column) -> Column:
+    def violations(col: Column, path: Optional[Column]) -> Column:
         own_v = own.violations(col, path)
         parts = []
         if vv:
@@ -1808,13 +1881,13 @@ def _lower_object(v: K.Object, dtype: T.DataType) -> Lowered:
                 out_fields.append(fld.alias(name))
         return F.struct(*out_fields)
 
-    def violations(col: Column, path: Column) -> Column:
+    def violations(col: Column, path: Optional[Column]) -> Column:
         own_v = own.violations(col, path)
         missing = _missing_arr(col)
         missing_v = _violation(
             path,
             "object.required",
-            _invalid_value_msg(
+            lambda: _invalid_value_msg(
                 col,
                 dtype,
                 F.format_string(
@@ -1862,7 +1935,7 @@ def _lower_object(v: K.Object, dtype: T.DataType) -> Lowered:
                     _violation(
                         path,
                         "object.additional",
-                        _invalid_value_msg(
+                        lambda: _invalid_value_msg(
                             col,
                             dtype,
                             F.format_string(
