@@ -117,6 +117,25 @@ def test_enum(spark):
     run_case(spark, V.Enum([1, 2, 3]), T.LongType(), [1, 3, 0, 4, None])
 
 
+def _in_list(col_text: str) -> list:
+    m = re.search(r"in\(x, ([^)]*)\)", col_text)
+    assert m, col_text
+    return [v.strip() for v in m.group(1).split(",")]
+
+
+def test_enum_in_list_is_in_repr_order(spark):
+    """The IN-list follows ``repr`` order, as the message does, so the plan
+    text does not depend on the process's set iteration order
+    (``PYTHONHASHSEED``)."""
+    words = ["text", "image", "audio", "video", "table", "figure"]
+    pred = lower(V.parse(V.Enum(words)), T.StringType()).predicate(F.col("x"))
+    assert _in_list(str(pred)) == [repr(w) for w in sorted(words)]
+    # small ints iterate a set in hash (numeric) order, not repr order
+    ints = [1, 2, 3, 10, 20, 100]
+    pred = lower(V.parse(V.Enum(ints)), T.LongType()).predicate(F.col("x"))
+    assert _in_list(str(pred)) == sorted(str(i) for i in ints)
+
+
 def test_nullable_with_default(spark):
     run_case(spark, V.Nullable("integer", -1), T.LongType(),
              [None, 0, 5])

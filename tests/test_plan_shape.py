@@ -166,6 +166,35 @@ def test_column_trees_are_built_once_per_column_set(spark):
     )
 
 
+def test_violations_build_each_value_repr_once(spark, monkeypatch):
+    """A fresh flagship violations tree builds one top-level value repr per
+    distinct (column, type) pair: the spans, a span, a span's kind, text,
+    media_ref and offset, the doc id and the row; one repr per message
+    would be 14. Nothing is kept after a build: a second plan builds its
+    own."""
+    from valideer_spark.flagship import doc_schema
+    from valideer_spark.plans import compile_plan, lowering
+    from valideer_spark.sources import DOCS_SCHEMA
+
+    calls = []
+    py_repr = lowering.py_repr
+
+    def counting(col, dtype):
+        calls.append(dtype)
+        return py_repr(col, dtype)
+
+    monkeypatch.setattr(lowering, "py_repr", counting)
+    df = spark.createDataFrame([], DOCS_SCHEMA)
+    per_build = []
+    for _ in range(2):
+        calls.clear()
+        compile_plan(doc_schema(), DOCS_SCHEMA).violations_col(df)
+        per_build.append(len(calls))
+    assert 1 <= per_build[0] <= 8, per_build
+    assert per_build[1] == per_build[0], per_build
+    assert lowering._REPR_MEMO.get() is None
+
+
 def test_second_check_does_not_relower(spark):
     from valideer_spark.engine import ValidationEngine
     from valideer_spark.flagship import doc_schema

@@ -16,6 +16,32 @@ if [ "$h1" != "$h2" ]; then
   exit 1
 fi
 echo "oracle text hash stable: $h1"
+echo "== flagship predicate text is process-independent (PYTHONHASHSEED) =="
+# the lowered plan text keys Spark's codegen cache and makes plans
+# comparable across processes; lambda variable names (x_12) come from a
+# JVM-wide counter, so they are normalised before comparing
+predicate_hash() {
+  PYTHONHASHSEED=$1 python - <<'PY' 2>/dev/null | tail -1
+import hashlib, re
+from pyspark.sql import SparkSession
+from valideer_spark.flagship import doc_schema
+from valideer_spark.plans import compile_plan
+from valideer_spark.sources import DOCS_SCHEMA
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+df = spark.createDataFrame([], DOCS_SCHEMA)
+text = str(compile_plan(doc_schema(), DOCS_SCHEMA).is_valid_col(df))
+spark.stop()
+print(hashlib.md5(re.sub(r"\b([a-z])_\d+\b", r"\1", text).encode()).hexdigest())
+PY
+}
+p1=$(predicate_hash 101)
+p2=$(predicate_hash 202)
+if [ -z "$p1" ] || [ "$p1" != "$p2" ]; then
+  echo "FAIL: flagship predicate text differs across PYTHONHASHSEED ($p1 vs $p2)"
+  exit 1
+fi
+echo "predicate text hash stable: $p1"
 echo "== correctness gate (sf0.01) =="
 timeout 1200 python tools/check_oracle.py
 echo "== entry smoke =="

@@ -22,6 +22,14 @@ def recommended_conf(target_partitions: int | None = None) -> Dict[str, str]:
       fallback, t-digest, multimodal decode).
     * ``target_partitions`` sets the shuffle width: every shuffle starts
       there and AQE coalesces the small ones.
+    * PySpark's DataFrame debugging off. With it on, classic PySpark wraps
+      every ``Column`` method in a call-site capture that walks the Python
+      stack and makes several extra py4j calls, which about doubles
+      what building an engine's Column trees costs on the driver. PySpark
+      reads the setting once per process, from the first active session.
+      Trade-off: Spark analysis errors then carry no Python call site.
+      The call sites captured while the engine builds its trees point
+      into ``valideer_spark/plans/lowering.py``, not into user code.
     """
     conf = {
         "spark.sql.adaptive.enabled": "true",
@@ -33,6 +41,7 @@ def recommended_conf(target_partitions: int | None = None) -> Dict[str, str]:
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
         "spark.sql.parquet.aggregatePushdown": "true",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
     if target_partitions:
         conf["spark.sql.shuffle.partitions"] = str(target_partitions)

@@ -106,7 +106,8 @@ def shingle_hash_frame(
     built WITHOUT materializing shingle strings: tokens are xxhash64'd
     once into a staged column, then each shingle's hash is the fold
     xxhash64(…xxhash64(h_i, h_{i+1})…, h_{i+n-1}) over n aligned slices
-    (zip_with — pure 64-bit math, whole-stage codegen).
+    (zip_with — pure 64-bit math, no strings; the lambda is interpreted,
+    ``CodegenFallback``).
 
     Set-equivalent to hashing :func:`word_shingles` output (collisions
     aside, negligible at 64 bits): per-doc distinct-set CARDINALITY was
@@ -143,8 +144,9 @@ def _gram_hashes(th: Column, n: int) -> Column:
     """ORDERED (positional, non-distinct) n-gram hashes over a staged
     token-hash array: element i is the fold
     xxhash64(…xxhash64(h_i, h_{i+1})…, h_{i+n-1}) via n aligned slices
-    (zip_with — no strings, whole-stage codegen). ``th`` MUST be a real
-    column, not an inline expression (see :func:`shingle_hash_frame`).
+    (zip_with — no strings; interpreted, ``CodegenFallback``). ``th`` MUST
+    be a real column, not an inline expression (see
+    :func:`shingle_hash_frame`).
     Empty-safe: fewer than n tokens → empty array."""
     ln = F.greatest(F.size(th) - F.lit(n - 1), F.lit(0))
     comb = F.slice(th, F.lit(1), ln)
@@ -442,7 +444,7 @@ def minhash_signatures_arrow(
     universal hashes evaluated in ONE vectorized numpy kernel
     (``mapInPandas``) instead of k interpreted array-lambda transforms.
 
-    Shingling and the per-shingle xxhash64 stay JVM-side (codegen); the
+    Shingling and the per-shingle xxhash64 stay JVM-side; the
     Arrow batch then computes the full (total_shingles x num_hashes)
     modular-hash matrix with uint64 broadcasting (a*h+b < 2^62 for
     P = 2^31-1, no overflow) and segment-mins it per document with

@@ -15,7 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..core.registry import Validator, parse
-from .lowering import VIOLATION_TYPE, Lowered, _count_of, lower
+from .lowering import VIOLATION_TYPE, Lowered, _count_of, lower, repr_memo
 
 
 # engine-reserved column names never treated as document properties: a
@@ -77,11 +77,14 @@ class FramePlan:
 
     All expression builders are pure-Column; nothing is executed until the
     returned DataFrames are acted on, so Catalyst sees one declarative plan
-    (predicate pushdown + whole-stage codegen apply).
+    (predicate pushdown applies; the array checks' higher-order lambdas are
+    interpreted, so the operators holding them run outside whole-stage
+    codegen).
 
     Each builder's Column tree is made once per plan and row column set:
     lowering a wide schema costs thousands of py4j calls, and a frame with
-    the same document columns reads the same tree.
+    the same document columns reads the same tree. Within one build, each
+    value repr is built once (:func:`~.lowering.repr_memo`).
     """
 
     validator: Validator
@@ -96,8 +99,10 @@ class FramePlan:
         key = (kind, _row_fields(df))
         col = self._columns.get(key)
         if col is None:
+            with repr_memo():
+                built = build(_row_struct(key[1]))
             # setdefault: callers racing on a first build all get one tree
-            col = self._columns.setdefault(key, build(_row_struct(key[1])))
+            col = self._columns.setdefault(key, built)
         return col
 
     def is_valid_col(self, df: DataFrame) -> Column:

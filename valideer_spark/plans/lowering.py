@@ -14,7 +14,10 @@ bundle of pure ``Column`` expression builders:
 * ``msg(col)``         — bare message of the first failure (used by AnyOf
   to join alternatives with ``" or "``).
 
-Everything stays inside Catalyst/whole-stage codegen. Validators with no
+Everything stays inside Catalyst as JVM expressions; checks over arrays
+run as higher-order-function lambdas (``transform``, ``zip_with``,
+``forall``...), which Spark 4.1 interprets (``CodegenFallback``), so the
+operator holding them runs outside whole-stage codegen. Validators with no
 native lowering (arbitrary ``Condition`` predicates, ``AdaptBy`` with a
 Python callable) fall back to an Arrow-vectorized pandas UDF that runs the
 kernel itself — the documented escape hatch, never used by the built-in
@@ -38,10 +41,12 @@ from __future__ import annotations
 
 import json
 import re
+from contextlib import contextmanager
+from contextvars import ContextVar
 from dataclasses import dataclass
 
 import pandas as pd  # module-level: pandas_udf type hints resolve here
-from typing import Any, Callable, List, Optional, Tuple
+from typing import Any, Callable, Dict, Iterator, List, Optional, Tuple
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -98,10 +103,10 @@ class Lowered:
     #: validator checks a StructType value through per-field checks only
     #: (Object over struct, AllOf of such, 2-field ColumnConditions). Used
     #: by HomogeneousSequence over array<struct>: evaluating each check as
-    #: a lambda over the EXTRACTED field arrays (GetArrayStructFields —
-    #: whole-stage codegen) instead of one lambda over the struct array
-    #: removes the per-element interpreted struct access, the measured
-    #: hot-path ceiling (BENCH.md — 1.8x on the flagship verdict).
+    #: a lambda over the EXTRACTED field arrays (GetArrayStructFields, once
+    #: per row) instead of one lambda over the struct array removes the
+    #: per-element struct access from the interpreted lambda bodies, the
+    #: measured hot-path ceiling (BENCH.md — 1.8x on the flagship verdict).
     soa_checks: Optional[List[SoaCheck]] = None
     #: the SoA conjunction is False for a NULL element (e.g. a required
     #: property presence term exists). Without this, SoA cannot be used:
@@ -148,10 +153,49 @@ def _nullsafe(pred: Column) -> Column:
     return F.coalesce(pred, F.lit(False))
 
 
+#: the value reprs of the tree build in progress (see :func:`repr_memo`),
+#: keyed by (builder, id(col), dtype); None outside a build
+_REPR_MEMO: ContextVar[Optional[Dict[Any, Tuple[Column, Column]]]] = ContextVar(
+    "_REPR_MEMO", default=None
+)
+
+
+@contextmanager
+def repr_memo() -> Iterator[None]:
+    """Build each value repr once while the block runs. A value checked by
+    several constraints appears in several messages (the flagship
+    violations tree shows 8 values in 14 messages), and a struct's repr
+    costs hundreds of py4j calls to build. The memo holds each Column it
+    keys, so no id is reused while it lives, and it is dropped on exit: no
+    Column outlives the build. It lives in a context variable, so threads
+    racing on a first build each get their own."""
+    token = _REPR_MEMO.set({})
+    try:
+        yield
+    finally:
+        _REPR_MEMO.reset(token)
+
+
+def _memo_repr(
+    build: Callable[[Column, T.DataType], Column], col: Column, dtype: T.DataType
+) -> Column:
+    memo = _REPR_MEMO.get()
+    if memo is None:
+        return build(col, dtype)
+    key = (build, id(col), dtype)
+    hit = memo.get(key)
+    if hit is None:
+        hit = memo[key] = (col, build(col, dtype))
+    return hit[1]
+
+
 def _invalid_value_msg(col: Column, dtype: T.DataType, bare: Column) -> Column:
     """Kernel parity: ``Invalid value <repr> (<type>): <msg>``."""
     return F.format_string(
-        "Invalid value %s (%s): %s", py_repr(col, dtype), type_name_col(col, dtype), bare
+        "Invalid value %s (%s): %s",
+        _memo_repr(py_repr, col, dtype),
+        _memo_repr(type_name_col, col, dtype),
+        bare,
     )
 
 
@@ -802,7 +846,10 @@ def _comparable_enum_values(values: list, dtype: T.DataType) -> Optional[list]:
 
 
 def _lower_enum(v: K.Enum, dtype: T.DataType) -> Lowered:
-    values = list(v.values)
+    # repr order, as in Enum.humanized_name: a set iterates in
+    # PYTHONHASHSEED order, which would make the IN-list (and so the plan
+    # text and codegen cache key) differ between processes
+    values = sorted(v.values, key=repr)
     if not all(_enum_literal_ok(x) for x in values):
         return kernel_fallback(v, dtype)
     bare = "must be %s" % v.humanized_name
@@ -1195,7 +1242,7 @@ def _lower_adapt_to(v: K.AdaptTo, dtype: T.DataType) -> Lowered:
                     lambda col: ~col.rlike(_INT_LITERAL),
                     lambda col: F.format_string(
                         "invalid literal for int() with base 10: %s",
-                        py_repr(col, dtype),
+                        _memo_repr(py_repr, col, dtype),
                     ),
                 ),
             ]
@@ -1235,7 +1282,7 @@ def _lower_adapt_to(v: K.AdaptTo, dtype: T.DataType) -> Lowered:
                     lambda col: col.try_cast(T.DoubleType()).isNull(),
                     lambda col: F.format_string(
                         "could not convert string to float: %s",
-                        py_repr(col, dtype),
+                        _memo_repr(py_repr, col, dtype),
                     ),
                 )
             ]
@@ -1301,10 +1348,12 @@ def _lower_adapt_by(v: K.AdaptBy, dtype: T.DataType) -> Lowered:
 def _soa_forall(col: Column, terms: List[SoaCheck]) -> Column:
     """Evaluate per-element checks over an array<struct> column in
     struct-of-arrays form: ``col.getField(f)`` extracts each referenced
-    field ONCE per row as a primitive array (GetArrayStructFields, covered
-    by whole-stage codegen), and each check runs as a lambda over the
-    extracted array(s) — primitive lambda variables only, no interpreted
-    per-element struct access. Equivalent to
+    field ONCE per row as a primitive array (GetArrayStructFields), and
+    each check runs as a lambda over the extracted array(s) — primitive
+    lambda variables only, no per-element struct access. The lambdas
+    themselves are interpreted (``CodegenFallback``), and so is the
+    operator holding them: the predicate's Filter and Project run outside
+    whole-stage codegen. Equivalent to
     ``_nullsafe(F.forall(col, lambda x: item.predicate(x)))`` when the
     terms decompose ``item.predicate`` (see ``Lowered.soa_checks``);
     term-wise null-safing is Kleene-equivalent to whole-conjunction

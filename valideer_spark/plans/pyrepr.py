@@ -6,7 +6,10 @@ The violation message format (kernel parity, core/errors.py) is::
     Invalid value <repr(value)> (<type name>): <msg> (at <path>)
 
 Building the repr in pure Spark SQL expressions keeps violation-row
-construction JVM-side (whole-stage codegen) for all scalar column types.
+construction JVM-side for all scalar column types, with no Python UDF.
+Array reprs (and every repr under an array check) sit inside
+higher-order-function lambdas, which Spark 4.1 interprets
+(``CodegenFallback``).
 Non-printable escaping inside strings is limited to backslash + quote
 (tame data); exotic strings fall back byte-identical via the kernel pandas
 path used in parity tests.
@@ -90,26 +93,24 @@ def py_repr(col: Column, dtype: T.DataType) -> Column:
     elif isinstance(dtype, T.StructType):
         # NULL struct field ≡ absent property (engine convention), so nulls
         # are omitted from the dict repr — concat_ws skips null elements.
-        parts = [
-            F.when(
-                col.getField(f.name).isNotNull(),
-                F.concat(
-                    F.lit("%r: " % f.name),
-                    py_repr_nullable(col.getField(f.name), f.dataType),
-                ),
+        parts = []
+        for f in dtype.fields:
+            value = col.getField(f.name)
+            parts.append(
+                F.when(
+                    value.isNotNull(),
+                    F.concat(
+                        F.lit("%r: " % f.name),
+                        py_repr(value, f.dataType),
+                    ),
+                )
             )
-            for f in dtype.fields
-        ]
         body = F.concat(
             F.lit("{"), F.concat_ws(", ", *parts), F.lit("}")
         ) if parts else F.lit("{}")
     else:
         body = col.cast("string")
     return F.when(col.isNull(), F.lit("None")).otherwise(body)
-
-
-def py_repr_nullable(col: Column, dtype: T.DataType) -> Column:
-    return py_repr(col, dtype)
 
 
 def py_list_repr_of_strings(arr: Column) -> Column:

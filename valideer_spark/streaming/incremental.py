@@ -4,13 +4,18 @@ The batch engine (``valideer_spark.engine``) already resumes from a
 partition-keyed checkpoint; this module covers the *continuous* variant:
 validate documents as they arrive (new parquet files in a directory — the
 sandbox stand-in for Iceberg snapshot-incremental reads) and append
-verdict + violation micro-batch outputs exactly once, driven by Spark's
-own streaming checkpoint/WAL.
+verdict + violation micro-batch outputs, driven by Spark's own streaming
+checkpoint/WAL.
+
+``foreachBatch`` is at-least-once: a failure after the verdict write and
+before the violation write replays the micro-batch, and its verdict rows
+are appended twice. Each sink write also re-scans the micro-batch, which
+is not persisted. ROADMAP.md item 2 ("Make replays safe and failures
+loud") tracks both.
 
 The check plan is stateless (pure per-row predicates), so no watermark or
-state store is involved — each micro-batch reuses the same compiled
-whole-stage-codegen expressions as the batch path. ``foreachBatch`` fans
-the annotated frame into the two sinks without recomputing the scan.
+state store is involved — each micro-batch reuses the engine's compiled
+Column trees, the same expressions as the batch path.
 """
 
 from __future__ import annotations
