@@ -100,6 +100,33 @@ def test_resume_partial_progress(spark, tmp_path):
     assert got == [4, 5, 6, 7]
 
 
+def _listing(root):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, files in os.walk(root)
+        for f in files
+    )
+
+
+def test_unreadable_checkpoint_raises(spark, tmp_path):
+    """A checkpoint that exists but cannot be read is an error, not
+    "nothing done": resuming must neither revalidate every partition nor
+    append a second set of verdict rows to it."""
+    docs = synth_docs(spark, 200)
+    eng = ValidationEngine(doc_schema(), buckets=4, checkpoint_dir=str(tmp_path))
+    assert eng.run_with_checkpoint(docs, run_id="r1").count() == 4
+    ck = eng._checkpoint_path()
+    data = [f for f in _listing(ck) if f.endswith(".parquet")]
+    assert data
+    for f in data:
+        with open(os.path.join(ck, f), "wb") as fh:
+            fh.write(b"not a parquet file")
+    listing = _listing(ck)
+    with pytest.raises(Exception):
+        eng.run_with_checkpoint(docs, run_id="r2")
+    assert _listing(ck) == listing
+
+
 def test_checkpoint_lineage_columns(spark, tmp_path):
     """Checkpoint rows carry full lineage: run id, timestamps, measured
     wall seconds, and the input-file fingerprint (stable across runs of

@@ -217,33 +217,84 @@ def test_second_check_does_not_relower(spark):
     assert report.plan is plan and len(calls) == 1
 
 
-def _check_plan(df) -> str:
-    """The optimised plan above the cached input: the ``InMemoryRelation``
-    repeats the cached generator's own plan, which has ``format_string(``
-    of its own."""
-    plan = _optimized(df)
-    assert "InMemoryRelation" in plan
-    return plan.split("InMemoryRelation")[0]
+def _frame_plans(df):
+    """The optimised plan of a report output split at its
+    ``InMemoryRelation``s: the plan above the report frame, the frame's
+    own plan, and the cached input's."""
+    above, frame, _ = _optimized(df).split("InMemoryRelation")
+    return above, frame
 
 
 def test_violation_plans_build_each_violation_once(spark):
     """The violation explode is an outer generator plus an explicit index
     filter, so Catalyst infers no ``size(_violations) > 0`` filter that
     would build every invalid row's violation array a second time; the
-    metrics explode constraint codes and format no message at all."""
+    metrics explode constraint codes and format no message at all. Above
+    the report frame no predicate pass (``zip_with``) runs again; inside
+    it the predicate runs once."""
     from valideer_spark.engine import ValidationEngine
     from valideer_spark.flagship import doc_schema
     from valideer_spark.sources import synth_docs
 
     docs = synth_docs(spark, 100).cache()
+    report = ValidationEngine(doc_schema()).check(docs)
     try:
-        report = ValidationEngine(doc_schema()).check(docs)
-        plan = _check_plan(report.violation_rows())
-        assert 1 <= plan.count("format_string(") <= 22, len(plan)
-        assert 1 <= plan.count("zip_with(") <= 4, len(plan)
+        above, frame = _frame_plans(report.violation_rows())
+        assert 1 <= above.count("format_string(") <= 22, len(above)
+        assert above.count("zip_with(") == 0, len(above)
+        assert 1 <= frame.count("zip_with(") <= 2, len(frame)
+        assert frame.count("format_string(") == 0, len(frame)
         for df in (report.metrics(), report.partition_metrics()):
-            plan = _check_plan(df)
-            assert plan.count("format_string(") == 0, len(plan)
-            assert 1 <= plan.count("zip_with(") <= 2, len(plan)
+            above, frame = _frame_plans(df)
+            assert above.count("format_string(") == 0, len(above)
+            assert above.count("zip_with(") == 0, len(above)
+            assert 1 <= frame.count("zip_with(") <= 2, len(frame)
     finally:
+        report.unpersist()
         docs.unpersist()
+
+
+def _frame_scans(df, frame_columns):
+    """(report-frame scans, other in-memory scans, parquet scans) of the
+    executed plan of ``df``."""
+    found = {"frame": 0, "other": 0, "parquet": 0}
+
+    def walk(plan):
+        name = plan.getClass().getSimpleName()
+        if name == "InMemoryTableScanExec":
+            output = plan.relation().output()
+            names = [output.apply(i).name() for i in range(output.size())]
+            found["frame" if names == frame_columns else "other"] += 1
+        elif name == "FileSourceScanExec":
+            found["parquet"] += 1
+        if name == "AdaptiveSparkPlanExec":
+            return walk(plan.executedPlan())
+        if name.endswith("QueryStageExec"):
+            return walk(plan.plan())
+        children = plan.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found["frame"], found["other"], found["parquet"]
+
+
+def test_report_outputs_read_one_cached_frame(spark, tmp_path):
+    """After ``verdicts()`` has run, the violation and metrics outputs of
+    the same report scan its cached frame once each and never the
+    parquet input: the predicate is not evaluated again."""
+    from valideer_spark.engine import ValidationEngine
+    from valideer_spark.flagship import doc_schema
+    from valideer_spark.sources import synth_docs
+
+    path = str(tmp_path / "docs")
+    synth_docs(spark, 400).write.parquet(path)
+    report = ValidationEngine(doc_schema(), buckets=16).check(spark.read.parquet(path))
+    try:
+        assert report.verdicts().collect()
+        frame_columns = ["_part_id", "_valid", "_n_violations", "doc_id", "spans"]
+        for df in (report.violation_rows(), report.metrics(), report.partition_metrics()):
+            assert df.collect()
+            assert _frame_scans(df, frame_columns) == (1, 0, 0)
+    finally:
+        report.unpersist()

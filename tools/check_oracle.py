@@ -4,6 +4,7 @@ compare row count, sorted schema and an order-insensitive value hash."""
 
 from __future__ import annotations
 
+import gc
 import hashlib
 import math
 import os
@@ -145,6 +146,12 @@ def main():
         if problems:
             failures += 1
         print(f"{name:35s} {status} rows={len(srows)} spark={spark_s:.1f}s duck={duck_s:.1f}s {'; '.join(problems)}")
+    # a query that reads report outputs must not leave the report's
+    # cached frame behind once its DataFrames are gone
+    gc.collect()
+    if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+        failures += 1
+        print("FAIL cached relations remain after the queries")
     spark.stop()
     sys.exit(1 if failures else 0)
 

@@ -13,7 +13,11 @@ documents DataFrame and emits the artifacts mandated by the target design:
 
 Scale notes: everything below is declarative DataFrame code — the verdict
 aggregation is a single map-side-combinable hash aggregation on a
-low-cardinality key; no collect(), no per-row Python. Checkpointing
+low-cardinality key; no collect(), no per-row Python. A
+:class:`CheckReport` evaluates the predicate at most once per row: its
+first output persists a compact frame (bucket id, verdict and violation
+count per row, plus the payload of invalid rows only) that every later
+output reads, and releases it with the report. Checkpointing
 filters resumed runs with a broadcast anti-join on the (small) completed
 partition list, which Catalyst turns into a partition-pruned scan when the
 storage layout is bucketed by the same key.
@@ -22,15 +26,18 @@ storage layout is bucketed by the same key.
 from __future__ import annotations
 
 import os
+import threading
 import time
 import uuid
-from dataclasses import dataclass
+import weakref
+from dataclasses import dataclass, field
 from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .plans import FramePlan, compile_plan, explode_violations
+from .plans.frame import RESERVED_COLUMNS
 
 DEFAULT_BUCKETS = 256
 
@@ -123,34 +130,94 @@ def write_partitioned(
     _write_bucketed(out, path, fmt, buckets, files_per_bucket, id_col)
 
 
+def _verdict_counts(grouped, *extra) -> DataFrame:
+    """Doc, valid and violation counts of a grouped ``_valid`` /
+    ``_n_violations`` frame, plus the ``pass`` flag: the verdict
+    aggregation of :meth:`CheckReport.verdicts` and
+    :meth:`ValidationEngine.run_with_checkpoint`."""
+    return grouped.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(F.col("_valid").cast("long")).alias("n_valid"),
+        F.sum("_n_violations").alias("n_violations"),
+        *extra,
+    ).withColumn("pass", F.col("n_valid") == F.col("n_docs"))
+
+
+def _release_frame(frame: DataFrame, sc) -> None:
+    # a stopped SparkContext has dropped its cache, and its JVM may be gone
+    if sc._jsc is not None:
+        frame.unpersist()
+
+
 @dataclass
 class CheckReport:
-    annotated: DataFrame  # input + _part_id, _valid
+    """The outputs of one checked frame.
+
+    The first output called persists the report's frame: ``_part_id``,
+    ``_valid`` and ``_n_violations`` of every row, and the document
+    columns of invalid rows only (NULL on valid rows). Every output but
+    :meth:`adapted` reads it, so the predicate runs once per row per
+    report; violations and constraint codes are built from the cached
+    invalid rows. The frame costs a few bytes per row plus the invalid
+    payload, and lives until :meth:`unpersist` or until the report is
+    dropped."""
+
+    annotated: DataFrame  # input + _part_id, _valid, _violations, _n_violations
     plan: FramePlan
     id_col: str
     buckets: int = DEFAULT_BUCKETS
+    _frame_df: Optional[DataFrame] = field(
+        default=None, init=False, repr=False, compare=False
+    )
+    _release: Optional[weakref.finalize] = field(
+        default=None, init=False, repr=False, compare=False
+    )
+    _lock: Any = field(
+        default_factory=threading.Lock, init=False, repr=False, compare=False
+    )
+
+    def _frame(self) -> DataFrame:
+        with self._lock:
+            if self._frame_df is None:
+                invalid = ~F.col("_valid")
+                docs = [
+                    F.when(invalid, F.col(c)).alias(c)
+                    for c in self.annotated.columns
+                    if c not in RESERVED_COLUMNS
+                ]
+                # document columns keep their names, so the plan's Column
+                # trees read the frame without a rebuild
+                frame = self.annotated.select(
+                    "_part_id", "_valid", "_n_violations", *docs
+                ).persist()
+                self._release = weakref.finalize(
+                    self, _release_frame, frame, frame.sparkSession.sparkContext
+                )
+                self._release.atexit = False
+                self._frame_df = frame
+            return self._frame_df
+
+    def unpersist(self) -> None:
+        """Release the cached frame now (idempotent). Outputs already
+        built still return the same rows; later calls cache a new one."""
+        with self._lock:
+            if self._release is not None:
+                self._release()
+            self._frame_df = self._release = None
 
     def verdicts(self) -> DataFrame:
-        """Per-partition pass/fail + counts (one row per partition bucket).
-
-        Single scan: the violation expressions are CASE-guarded behind the
-        predicate, so valid rows pay only the predicate (measured: the
-        combined projection costs the same as predicate-only)."""
-        return (
-            self.annotated.groupBy("_part_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(F.col("_valid").cast("long")).alias("n_valid"),
-                F.sum("_n_violations").alias("n_violations"),
-            )
-            .withColumn("pass", F.col("n_valid") == F.col("n_docs"))
-        )
+        """Per-partition pass/fail + counts (one row per partition bucket),
+        a map-side combinable aggregation of the report frame."""
+        return _verdict_counts(self._frame().groupBy("_part_id"))
 
     def violation_rows(self) -> DataFrame:
         """(doc_id, part_id, violation_index, path, constraint, message)
         rows."""
+        frame = self._frame()
         return explode_violations(
-            self.annotated, [self.id_col, F.col("_part_id").alias("part_id")]
+            frame,
+            [self.id_col, F.col("_part_id").alias("part_id")],
+            violations=self.plan.violations_col(frame),
         )
 
     def verdict_rollup(self) -> DataFrame:
@@ -159,15 +226,9 @@ class CheckReport:
         ``_part_id`` row is the overall verdict. Spark computes both
         grouping sets in a single partial+final hash agg — one scan, one
         shuffle, versus two jobs for verdicts() + totals."""
-        return (
-            self.annotated.rollup("_part_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(F.col("_valid").cast("long")).alias("n_valid"),
-                F.sum("_n_violations").alias("n_violations"),
-                F.grouping("_part_id").alias("is_total"),
-            )
-            .withColumn("pass", F.col("n_valid") == F.col("n_docs"))
+        return _verdict_counts(
+            self._frame().rollup("_part_id"),
+            F.grouping("_part_id").alias("is_total"),
         )
 
     def worst_partitions(self, k: int = 10) -> DataFrame:
@@ -183,8 +244,9 @@ class CheckReport:
     def _violation_codes(self, cols=()) -> DataFrame:
         """Exploded violations with constraint codes only: counting
         constraints never builds a path, value repr or message."""
-        codes = self.plan.violation_codes_col(self.annotated)
-        return explode_violations(self.annotated, cols, violations=codes)
+        frame = self._frame()
+        codes = self.plan.violation_codes_col(frame)
+        return explode_violations(frame, cols, violations=codes)
 
     def metrics(self) -> DataFrame:
         """Violation counts by constraint (map-side combinable agg)."""
@@ -193,8 +255,8 @@ class CheckReport:
     def partition_metrics(self) -> DataFrame:
         """Violation counts by (partition, constraint) — the per-partition
         metrics rows of the checkpoint design: which buckets produce which
-        failures (hotspot debugging without re-scanning). Same single
-        exploded aggregation shape as :meth:`metrics`, keyed on
+        failures (hotspot debugging from the cached invalid rows). Same
+        single exploded aggregation shape as :meth:`metrics`, keyed on
         (bucket, constraint) — shuffle is O(buckets × constraints)."""
         return (
             self._violation_codes([F.col("_part_id").alias("part_id")])
@@ -203,7 +265,8 @@ class CheckReport:
         )
 
     def adapted(self) -> DataFrame:
-        """Adapted documents (valid rows only), schema = adapted row struct."""
+        """Adapted documents (valid rows only), schema = adapted row struct.
+        Reads ``annotated``: the report frame has no valid payloads."""
         base = self.annotated.filter(F.col("_valid")).drop(
             "_part_id", "_valid", "_violations", "_n_violations"
         )
@@ -310,16 +373,15 @@ class ValidationEngine:
         return os.path.join(self.checkpoint_dir, "partition_checkpoints")
 
     def completed_partitions(self, spark: SparkSession) -> Optional[DataFrame]:
-        if self.checkpoint_format == "iceberg":
-            from .sources.iceberg import iceberg_available, read_table
+        from .sources.iceberg import _hadoop_fs, iceberg_available, read_table
 
+        if self.checkpoint_format == "iceberg":
             if iceberg_available(spark):
-                try:
-                    return read_table(
-                        spark, self.checkpoint_table, fmt="iceberg"
-                    ).select("part_id").distinct()
-                except Exception:
+                if not spark.catalog.tableExists(self.checkpoint_table):
                     return None
+                return read_table(
+                    spark, self.checkpoint_table, fmt="iceberg"
+                ).select("part_id").distinct()
             # jars absent: the engine maintains the same MERGE semantics
             # on a parquet layout under checkpoint_dir (emulated branch
             # of run_with_checkpoint); no checkpoint_dir -> nothing to
@@ -327,10 +389,12 @@ class ValidationEngine:
             if not self.checkpoint_dir:
                 return None
         path = self._checkpoint_path()
-        try:
-            return spark.read.parquet(path).select("part_id").distinct()
-        except Exception:
+        fs, hpath = _hadoop_fs(spark, path)
+        # a missing checkpoint means nothing done; an unreadable one raises,
+        # never revalidating (and re-appending) partitions already done
+        if not fs.exists(hpath):
             return None
+        return spark.read.parquet(path).select("part_id").distinct()
 
     def run_with_checkpoint(
         self, df: DataFrame, run_id: Optional[str] = None
@@ -386,12 +450,10 @@ class ValidationEngine:
             annotated = annotated.join(
                 F.broadcast(done), annotated["_part_id"] == done["part_id"], "left_anti"
             )
-        pending = CheckReport(
-            annotated=annotated, plan=report.plan, id_col=self.id_col, buckets=self.buckets
-        )
         t_run0 = time.time()
+        # one output read once: aggregate annotated directly, no report frame
         verdicts = (
-            pending.verdicts()
+            _verdict_counts(annotated.groupBy("_part_id"))
             .withColumn("run_id", F.lit(run_id))
             .withColumn("completed_at", F.lit(int(time.time())).cast("long"))
             .withColumn("input_fingerprint", F.lit(_input_fingerprint(df)))

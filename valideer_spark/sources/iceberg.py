@@ -55,29 +55,22 @@ def _checkpoint_exists(spark: SparkSession, path: str) -> bool:
     marker probed through the Hadoop FS, mirroring how
     ``completed_partitions`` reads the same path through Spark)."""
     jvm = spark._jvm  # type: ignore[union-attr]
-    try:
-        fs, _ = _hadoop_fs(spark, path)
-        return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(path, "_SUCCESS")))
-    except Exception:
-        return False
+    fs, _ = _hadoop_fs(spark, path)
+    return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(path, "_SUCCESS")))
 
 
 def snapshot_versions(spark: SparkSession, path: str) -> List[int]:
     """Sorted snapshot version numbers retained under a parquet-fallback
     checkpoint directory (empty when snapshots were never enabled)."""
-    snap_root = _snapshot_root(path)
-    try:
-        fs, hroot = _hadoop_fs(spark, snap_root)
-        if not fs.exists(hroot):
-            return []
-        out = []
-        for st in fs.listStatus(hroot):
-            m = re.fullmatch(r"v=(\d+)", st.getPath().getName())
-            if m:
-                out.append(int(m.group(1)))
-        return sorted(out)
-    except Exception:
+    fs, hroot = _hadoop_fs(spark, _snapshot_root(path))
+    if not fs.exists(hroot):
         return []
+    out = []
+    for st in fs.listStatus(hroot):
+        m = re.fullmatch(r"v=(\d+)", st.getPath().getName())
+        if m:
+            out.append(int(m.group(1)))
+    return sorted(out)
 
 
 def iceberg_available(spark: SparkSession) -> bool:

@@ -7,11 +7,14 @@ sandbox stand-in for Iceberg snapshot-incremental reads) and append
 verdict + violation micro-batch outputs, driven by Spark's own streaming
 checkpoint/WAL.
 
+Both sinks of a micro-batch are written from one report, so the
+predicate runs once per row: the verdict write fills the report's cached
+frame and the violation write reads it.
+
 ``foreachBatch`` is at-least-once: a failure after the verdict write and
 before the violation write replays the micro-batch, and its verdict rows
-are appended twice. Each sink write also re-scans the micro-batch, which
-is not persisted. ROADMAP.md item 2 ("Make replays safe and failures
-loud") tracks both.
+are appended twice. ROADMAP.md item 2 ("Make replays safe and failures
+loud") tracks this.
 
 The check plan is stateless (pure per-row predicates), so no watermark or
 state store is involved — each micro-batch reuses the engine's compiled
@@ -55,17 +58,20 @@ class IncrementalValidator:
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         report = self.engine.check(batch_df)
-        verdicts = (
-            report.verdicts()
-            .withColumnRenamed("_part_id", "part_id")
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        verdicts.write.mode("append").parquet(
-            os.path.join(self.output_dir, "verdicts")
-        )
-        report.violation_rows().withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(os.path.join(self.output_dir, "violations"))
+        try:
+            verdicts = (
+                report.verdicts()
+                .withColumnRenamed("_part_id", "part_id")
+                .withColumn("batch_id", F.lit(batch_id))
+            )
+            verdicts.write.mode("append").parquet(
+                os.path.join(self.output_dir, "verdicts")
+            )
+            report.violation_rows().withColumn(
+                "batch_id", F.lit(batch_id)
+            ).write.mode("append").parquet(os.path.join(self.output_dir, "violations"))
+        finally:
+            report.unpersist()
 
     def start(
         self,
