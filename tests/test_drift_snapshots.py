@@ -1,6 +1,7 @@
 """Drift compared ACROSS SNAPSHOTS of one table (north-star sentence:
 "distribution-drift checks via t-digest quantile sketches compared
-across snapshots").
+across snapshots"; the persisted sketches are KLL, see
+``operators/drift.py::quantile_sketch_table``).
 
 ``drift_across_snapshots`` reads two retained versions through
 ``read_table(version=...)`` — real Iceberg ``snapshot-id`` scans when

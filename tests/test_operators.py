@@ -8,17 +8,35 @@ from pyspark.sql import functions as F
 
 from valideer_spark.operators import (
     column_profile,
+    drift_between_sketch_tables,
     duplicate_keys,
     orphan_keys,
     orphan_rows,
     quantile_drift,
-    tdigest_quantiles,
+    quantile_sketch_table,
 )
-from valideer_spark.operators.drift import (
-    tdigest_build,
-    tdigest_merge,
-    tdigest_quantile,
-)
+
+# KLL sketches are randomized, so sketch tests never compare values from
+# two builds; they bound each returned quantile's exact rank instead.
+RANK_EPS = 0.005
+
+
+def _assert_rank_bound(df, column, probs, quantiles):
+    """``cnt_lt(q)/n <= p + eps`` and ``cnt_le(q)/n >= p - eps`` for each
+    (p, q), with exact counts over the non-NULL, non-NaN values."""
+    v = F.col(column).cast("double")
+    vals = df.select(v.alias("v")).filter(~F.isnan("v"))
+    row = vals.agg(
+        F.count("v").alias("n"),
+        *[F.sum((F.col("v") < q).cast("long")).alias("lt%d" % i)
+          for i, q in enumerate(quantiles)],
+        *[F.sum((F.col("v") <= q).cast("long")).alias("le%d" % i)
+          for i, q in enumerate(quantiles)],
+    ).first()
+    n = row["n"]
+    for i, (p, q) in enumerate(zip(probs, quantiles)):
+        assert row["lt%d" % i] / n <= p + RANK_EPS, (p, q, row["lt%d" % i], n)
+        assert row["le%d" % i] / n >= p - RANK_EPS, (p, q, row["le%d" % i], n)
 
 
 def test_column_profile(spark):
@@ -53,34 +71,53 @@ def test_orphans(spark):
     assert [(r["fk"], r["n_rows"]) for r in keys] == [(9, 1)]
 
 
-def test_tdigest_kernel_accuracy():
-    import numpy as np
-
-    rng = np.random.RandomState(42)
-    values = rng.normal(100.0, 15.0, 50000)
-    m, w = tdigest_build(values)
-    assert w.sum() == pytest.approx(50000)
-    for q in (0.01, 0.25, 0.5, 0.75, 0.99):
-        est = tdigest_quantile(m, w, q)
-        exact = float(np.quantile(values, q))
-        assert abs(est - exact) < 1.0, q
-
-    # mergeability: split-merge equals whole-build within tolerance
-    parts = [tdigest_build(values[i::4]) for i in range(4)]
-    mm, mw = tdigest_merge(parts)
-    assert mw.sum() == pytest.approx(50000)
-    for q in (0.1, 0.5, 0.9):
-        assert abs(
-            tdigest_quantile(mm, mw, q) - float(np.quantile(values, q))
-        ) < 1.5
-
-
-def test_tdigest_quantiles_distributed(spark):
-    df = spark.range(20000).select(
-        (F.col("id") % 1000).cast("double").alias("v")
+def _normal_frame(spark, n=50000):
+    # seeded randn over a fixed partitioning: every rescan sees the same rows
+    return spark.range(0, n, 1, 4).select(
+        (F.randn(42) * 15.0 + 100.0).alias("v")
     )
-    qs = tdigest_quantiles(df, "v", probs=[0.5], groups=8)
-    assert abs(qs[0] - 499.5) < 15
+
+
+def test_kll_tail_rank_bound(spark):
+    """Quantiles read from one sketch table hold the rank bound at both
+    tails and the median, on a normal column and on one where a single
+    value fills 90% of the rows."""
+    probs = [0.01, 0.5, 0.99]
+    normal = _normal_frame(spark)
+    skewed = spark.range(50000).select(
+        F.when(F.col("id") % 10 == 0, F.col("id").cast("double"))
+        .otherwise(F.lit(7.0))
+        .alias("v")
+    )
+    for df in (normal, skewed):
+        table = quantile_sketch_table(df, "v")
+        rows = drift_between_sketch_tables(table, table, probs)
+        assert [r[0] for r in rows] == probs
+        _assert_rank_bound(df, "v", probs, [r[1] for r in rows])
+        _assert_rank_bound(df, "v", probs, [r[2] for r in rows])
+
+
+def test_kll_merged_slices_rank_bound(spark):
+    """Four disjoint slices sketched separately and merged hold the same
+    rank bound as a one-shot sketch of the whole column, and their counts
+    add up to the row count."""
+    probs = [0.01, 0.25, 0.5, 0.75, 0.99]
+    df = _normal_frame(spark, n=20000).withColumn(
+        "slice", F.monotonically_increasing_id() % 4
+    )
+    slices = [
+        quantile_sketch_table(df.filter(F.col("slice") == i), "v")
+        for i in range(4)
+    ]
+    merged = slices[0].unionByName(slices[1]).unionByName(
+        slices[2]
+    ).unionByName(slices[3])
+    assert merged.agg(F.sum("n")).first()[0] == 20000
+    rows = drift_between_sketch_tables(
+        merged, quantile_sketch_table(df, "v"), probs
+    )
+    _assert_rank_bound(df, "v", probs, [r[1] for r in rows])
+    _assert_rank_bound(df, "v", probs, [r[2] for r in rows])
 
 
 def test_quantile_drift(spark):
@@ -113,28 +150,61 @@ def test_worst_partitions(spark):
 
 
 def test_sketch_table_snapshot_drift(spark, tmp_path):
-    """Persisted sketch tables: write one t-digest table per 'snapshot',
-    reload, and compute drift WITHOUT rescanning the data; quantiles from
-    the round-tripped sketches match the direct computation."""
-    from valideer_spark.operators import (
-        drift_between_sketch_tables,
-        tdigest_quantiles,
-        tdigest_sketch_table,
-    )
-
+    """Persisted sketch tables: write one KLL table per 'snapshot', read
+    them back, and compute drift WITHOUT rescanning the data; each side's
+    quantiles hold the rank bound, so the 100-unit shift is recovered."""
+    probs = [0.25, 0.5, 0.75]
     a = spark.range(20000).selectExpr("CAST(id % 1000 AS DOUBLE) AS v")
     b = spark.range(20000).selectExpr("CAST(id % 1000 + 100 AS DOUBLE) AS v")
     pa, pb = str(tmp_path / "sk_a"), str(tmp_path / "sk_b")
-    tdigest_sketch_table(a, "v", groups=8).write.parquet(pa)
-    tdigest_sketch_table(b, "v", groups=8).write.parquet(pb)
+    quantile_sketch_table(a, "v").write.parquet(pa)
+    quantile_sketch_table(b, "v").write.parquet(pb)
+    read_a, read_b = spark.read.parquet(pa), spark.read.parquet(pb)
+    assert read_a.agg(F.sum("n")).first()[0] == 20000
+    assert read_b.agg(F.sum("n")).first()[0] == 20000
 
-    rows = drift_between_sketch_tables(
-        spark.read.parquet(pa), spark.read.parquet(pb), probs=[0.25, 0.5, 0.75]
+    rows = drift_between_sketch_tables(read_a, read_b, probs)
+    _assert_rank_bound(a, "v", probs, [r[1] for r in rows])
+    _assert_rank_bound(b, "v", probs, [r[2] for r in rows])
+    for p, qa, qb, d in rows:
+        # one value per unit over 1000 units: the rank bound on each side
+        # moves a quantile by at most eps * 1000 units
+        assert abs(d - 100.0) <= 2 * RANK_EPS * 1000 + 1, (p, qa, qb)
+
+
+def test_sketch_table_empty_and_null_input(spark):
+    """A side whose sketch holds no value (an empty frame, or a column of
+    only NULL and NaN) yields NaN quantiles instead of a Spark error."""
+    empty = spark.createDataFrame([], "v double")
+    nulls = spark.range(100).selectExpr(
+        "IF(id % 2 = 0, CAST(NULL AS DOUBLE), CAST('NaN' AS DOUBLE)) AS v"
     )
-    direct = tdigest_quantiles(a, "v", probs=[0.25, 0.5, 0.75], groups=8)
-    for (p, qa, qb, d), dq in zip(rows, direct):
-        assert abs(qa - dq) < 1e-9          # round-trip is lossless
-        assert abs(d - 100.0) < 15.0        # shift recovered (sketch approx)
+    full = spark.range(1000).selectExpr("CAST(id AS DOUBLE) AS v")
+    for side in (empty, nulls):
+        table = quantile_sketch_table(side, "v")
+        assert [r["n"] for r in table.collect()] == [0]
+        rows = drift_between_sketch_tables(
+            table, quantile_sketch_table(full, "v"), [0.01, 0.5]
+        )
+        assert all(math.isnan(qa) and math.isnan(d) for _, qa, _, d in rows)
+        _assert_rank_bound(full, "v", [0.01, 0.5], [r[2] for r in rows])
+    rows = drift_between_sketch_tables(
+        quantile_sketch_table(empty, "v"), quantile_sketch_table(nulls, "v"), [0.5]
+    )
+    assert math.isnan(rows[0][1]) and math.isnan(rows[0][2])
+
+
+def test_quantile_sketch_table_plan_shape(spark):
+    """The sketch is one JVM aggregate: a partial aggregate per task and a
+    single-partition merge, with no Python worker and no shuffle of rows
+    by value."""
+    df = spark.range(1000).selectExpr("CAST(id % 37 AS DOUBLE) AS v")
+    qe = quantile_sketch_table(df, "v")._jdf.queryExecution()
+    for plan in (qe.optimizedPlan().toString(), qe.executedPlan().toString()):
+        assert "kll_sketch_agg_double" in plan, plan
+        for node in ("FlatMapGroupsInPandas", "ArrowEvalPython"):
+            assert node not in plan, plan
+        assert "Exchange hashpartitioning" not in plan, plan
 
 
 def test_histogram_and_top_values(spark):

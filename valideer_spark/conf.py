@@ -19,7 +19,7 @@ def recommended_conf(target_partitions: int | None = None) -> Dict[str, str]:
       set (spans arrays + violation buffers) comfortably in executor
       memory at wide schemas.
     * Arrow batches sized for the pandas-UDF escape hatches (kernel
-      fallback, t-digest, multimodal decode).
+      fallback, multimodal decode).
     * ``target_partitions`` sets the shuffle width: every shuffle starts
       there and AQE coalesces the small ones.
     * PySpark's DataFrame debugging off. With it on, classic PySpark wraps

@@ -13,8 +13,7 @@ from .drift import (
     drift_between_sketch_tables,
     psi_drift,
     quantile_drift,
-    tdigest_quantiles,
-    tdigest_sketch_table,
+    quantile_sketch_table,
 )
 from .dedup import (
     exact_duplicates,
@@ -55,8 +54,7 @@ __all__ = [
     "orphan_keys",
     "psi_drift",
     "quantile_drift",
-    "tdigest_quantiles",
-    "tdigest_sketch_table",
+    "quantile_sketch_table",
     "drift_between_sketch_tables",
     "drift_across_snapshots",
     "exact_duplicates",

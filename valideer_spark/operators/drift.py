@@ -1,178 +1,81 @@
 """Distribution-drift constraints across snapshots.
 
-Two quantile paths:
+Two quantile paths, both JVM-side aggregates:
 
 * :func:`quantile_drift` — built-in ``percentile_approx`` (Greenwald-
-  Khanna variant, JVM-side, mergeable) compared between two snapshots.
-* :func:`tdigest_quantiles` — mergeable t-digest sketches built per
-  partition group with an Arrow-batched ``applyInPandas`` (numpy inside,
-  no per-row Python), merged algebraically. The per-group digests are a
-  few KB each, so the final merge is a trivially small reduce.
+  Khanna, deterministic) compared between two snapshots it scans.
+* :func:`quantile_sketch_table` — a persistable one-row KLL sketch of a
+  column (``kll_sketch_agg_double``: a map-side partial aggregate, no
+  Python worker, no shuffle by value). :func:`drift_between_sketch_tables`
+  merges two such tables and compares their quantiles without rescanning
+  the snapshots they were built from.
 
-Drift score = max |q_a - q_b| over the probed quantiles, optionally
-normalized by the snapshot-A IQR (a location/scale-robust PSI stand-in).
+:func:`psi_drift` scores drift over fixed buckets, exactly, and
+:func:`drift_across_snapshots` runs either score on two retained table
+versions.
 """
 
 from __future__ import annotations
 
 from typing import List, Sequence, Tuple
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 DEFAULT_PROBS = [0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99]
 
-
-# ---------------------------------------------------------------------------
-# merging t-digest (scale function k1; deterministic, mergeable)
-# ---------------------------------------------------------------------------
-
-def _tdigest_compress(
-    means: np.ndarray, weights: np.ndarray, compression: float
-) -> Tuple[np.ndarray, np.ndarray]:
-    order = np.argsort(means, kind="mergesort")
-    means, weights = means[order], weights[order]
-    total = weights.sum()
-    out_means: List[float] = []
-    out_weights: List[float] = []
-    cur_mean, cur_w = float(means[0]), float(weights[0])
-    w_so_far = 0.0
-    for m, w in zip(means[1:], weights[1:]):
-        q0 = w_so_far / total
-        q2 = (w_so_far + cur_w + w) / total
-        # k0-style scale bound: a cluster may hold at most this much weight
-        # given how close it sits to the distribution tails
-        limit = 4.0 * total * min(q2, 1.0 - q0) / compression
-        if cur_w + w <= max(limit, 1.0):
-            cur_mean = (cur_mean * cur_w + float(m) * float(w)) / (cur_w + w)
-            cur_w += float(w)
-        else:
-            out_means.append(cur_mean)
-            out_weights.append(cur_w)
-            w_so_far += cur_w
-            cur_mean, cur_w = float(m), float(w)
-    out_means.append(cur_mean)
-    out_weights.append(cur_w)
-    return np.asarray(out_means), np.asarray(out_weights)
+# KLL accuracy: a-priori single-sided rank error about 2.296 / k**0.9723,
+# 0.0014 here against 0.013 at Spark's default k=200, for a sketch of
+# about 40 KB that builds no slower.
+_KLL_K = 2000
 
 
-def tdigest_build(values: np.ndarray, compression: float = 200.0):
-    values = np.asarray(values, dtype=np.float64)
-    values = values[~np.isnan(values)]
-    if values.size == 0:
-        return np.array([]), np.array([])
-    return _tdigest_compress(values, np.ones_like(values), compression)
+def quantile_sketch_table(df: DataFrame, column: str) -> DataFrame:
+    """Persistable quantile sketch of one numeric column: a single row
+    ``(n bigint, sketch binary)`` holding a KLL sketch of the column cast
+    to double, with NULL and NaN left out and ``n`` the number of values
+    the sketch holds.
 
-
-def tdigest_merge(
-    digests: Sequence[Tuple[np.ndarray, np.ndarray]], compression: float = 200.0
-):
-    means = np.concatenate([d[0] for d in digests if len(d[0])]) if digests else np.array([])
-    weights = np.concatenate([d[1] for d in digests if len(d[1])]) if digests else np.array([])
-    if means.size == 0:
-        return np.array([]), np.array([])
-    return _tdigest_compress(means, weights, compression)
-
-
-def tdigest_quantile(means: np.ndarray, weights: np.ndarray, q: float) -> float:
-    if len(means) == 0:
-        return float("nan")
-    if len(means) == 1:
-        return float(means[0])
-    cum = np.cumsum(weights) - weights / 2.0
-    target = q * weights.sum()
-    return float(np.interp(target, cum, means))
-
-
-_DIGEST_SCHEMA = T.StructType(
-    [
-        T.StructField("group_id", T.IntegerType()),
-        T.StructField("means", T.ArrayType(T.DoubleType())),
-        T.StructField("weights", T.ArrayType(T.DoubleType())),
-    ]
-)
-
-
-def tdigest_sketch_table(
-    df: DataFrame,
-    column: str,
-    compression: float = 200.0,
-    groups: int = 64,
-) -> DataFrame:
-    """Distributed t-digest sketch TABLE: hash-bucket rows into ``groups``,
-    one mergeable digest per bucket via applyInPandas (Arrow/numpy).
-
-    This is the persistable artifact for snapshot drift at scale: write
-    one sketch table per Iceberg snapshot (a few KB × groups, regardless
-    of input size), then compare any two snapshots WITHOUT rescanning
-    them (:func:`drift_between_sketch_tables`). The digests merge
-    algebraically, so sketch tables from different partitionings/cluster
-    sizes compose."""
-    import pandas as pd
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        m, w = tdigest_build(pdf[column].to_numpy(), compression)
-        return pd.DataFrame(
-            {
-                "group_id": [int(pdf["_g"].iloc[0]) if len(pdf) else 0],
-                "means": [m.tolist()],
-                "weights": [w.tolist()],
-            }
-        )
-
-    bucketed = df.select(column).withColumn(
-        "_g", F.pmod(F.xxhash64(F.col(column)), F.lit(groups)).cast("int")
+    The sketch is a JVM partial aggregate: each task builds a sketch of
+    its rows and one final step merges them, so no row is shuffled by
+    value. Write one table per snapshot and compare any two with
+    :func:`drift_between_sketch_tables` without rescanning either.
+    Sketch tables merge, so tables written under different partitionings
+    or cluster sizes can be unioned. KLL is randomized: two builds of the
+    same data give different sketches, each within its rank bound."""
+    sketch = F.kll_sketch_agg_double(F.col(column).cast("double"), _KLL_K)
+    return df.agg(sketch.alias("sketch")).select(
+        F.kll_sketch_get_n_double("sketch").alias("n"), "sketch"
     )
-    return bucketed.groupBy("_g").applyInPandas(build, schema=_DIGEST_SCHEMA)
-
-
-def merge_sketch_table(
-    sketches: DataFrame, compression: float = 200.0
-) -> Tuple[np.ndarray, np.ndarray]:
-    """Collect and algebraically merge a sketch table (KB-size rows — the
-    documented mergeable-sketch pattern, not a data collect)."""
-    digests = sketches.collect()
-    return tdigest_merge(
-        [(np.asarray(r["means"]), np.asarray(r["weights"])) for r in digests],
-        compression,
-    )
-
-
-def tdigest_quantiles(
-    df: DataFrame,
-    column: str,
-    probs: Sequence[float] = tuple(DEFAULT_PROBS),
-    compression: float = 200.0,
-    groups: int = 64,
-) -> List[float]:
-    """One-shot distributed t-digest quantiles (build + merge +
-    interpolate); see :func:`tdigest_sketch_table` for the persisted
-    snapshot-drift variant."""
-    merged_m, merged_w = merge_sketch_table(
-        tdigest_sketch_table(df, column, compression, groups), compression
-    )
-    return [tdigest_quantile(merged_m, merged_w, q) for q in probs]
 
 
 def drift_between_sketch_tables(
     sketch_a: DataFrame,
     sketch_b: DataFrame,
     probs: Sequence[float] = tuple(DEFAULT_PROBS),
-    compression: float = 200.0,
 ) -> List[Tuple[float, float, float, float]]:
     """Quantile drift between two PERSISTED sketch tables (e.g. written at
-    two Iceberg snapshots): rows of (prob, q_a, q_b, abs_diff) computed
-    from the merged digests — no rescan of either snapshot."""
-    ma, wa = merge_sketch_table(sketch_a, compression)
-    mb, wb = merge_sketch_table(sketch_b, compression)
-    out = []
-    for p in probs:
-        qa = tdigest_quantile(ma, wa, p)
-        qb = tdigest_quantile(mb, wb, p)
-        out.append((p, qa, qb, abs(qa - qb)))
-    return out
+    two Iceberg snapshots): rows of (prob, q_a, q_b, abs_diff) read from
+    each table's merged sketch, with no rescan of either snapshot. A side
+    whose sketch holds no value yields NaN quantiles."""
+    probs = [float(p) for p in probs]
+    ranks = F.array(*[F.lit(p) for p in probs])
+
+    def quantiles(sketches: DataFrame, name: str) -> DataFrame:
+        merged = sketches.agg(F.kll_merge_agg_double("sketch", _KLL_K).alias("s"))
+        return merged.select(
+            F.when(
+                F.kll_sketch_get_n_double("s") > 0,
+                F.kll_sketch_get_quantile_double("s", ranks),
+            ).alias(name)
+        )
+
+    row = quantiles(sketch_a, "qa").crossJoin(quantiles(sketch_b, "qb")).first()
+    nan = [float("nan")] * len(probs)
+    return [
+        (p, qa, qb, abs(qa - qb))
+        for p, qa, qb in zip(probs, row["qa"] or nan, row["qb"] or nan)
+    ]
 
 
 def quantile_drift(
@@ -302,7 +205,9 @@ def drift_across_snapshots(
     a time and has no notion of table history; this operator is part of
     the mandated engine surface (BASELINE.json north_star: "distribution-
     drift checks via t-digest quantile sketches compared across
-    snapshots").
+    snapshots"). The persisted sketches are KLL
+    (:func:`quantile_sketch_table`), not t-digest: KLL carries a rank
+    guarantee and merges as a native Spark aggregate.
     """
     from valideer_spark.sources.iceberg import read_table, snapshot_versions
 
