@@ -54,6 +54,38 @@ def test_iceberg_probe_and_skip(spark):
     assert eng.completed_partitions(spark) is None  # graceful, no raise
 
 
+def test_iceberg_probe_raises_other_errors():
+    """Only a missing class (a Py4J error) reads as "no Iceberg"; any
+    other failure of the probe raises."""
+    from types import SimpleNamespace
+
+    def for_name(_):
+        raise RuntimeError("probe-broken")
+
+    jvm = SimpleNamespace(java=SimpleNamespace(lang=SimpleNamespace(
+        Class=SimpleNamespace(forName=for_name))))
+    with pytest.raises(RuntimeError, match="probe-broken"):
+        iceberg_available(SimpleNamespace(_jvm=jvm))
+
+
+def test_input_fingerprint_of_range_is_empty_and_failures_raise(
+    spark, monkeypatch
+):
+    """A frame with no input files fingerprints as ""; an ``inputFiles()``
+    that fails raises instead of dropping the input identity."""
+    from valideer_spark.engine import _input_fingerprint
+
+    df = spark.range(10)
+    assert _input_fingerprint(df) == ""
+
+    def broken(self):
+        raise RuntimeError("input-files-broken")
+
+    monkeypatch.setattr(type(df), "inputFiles", broken)
+    with pytest.raises(RuntimeError, match="input-files-broken"):
+        _input_fingerprint(df)
+
+
 def test_resume_prunes_partitioned_scan(spark, tmp_path):
     """With the write_partitioned layout, a resumed run filters _part_id
     at the SOURCE: completed buckets appear in PartitionFilters and the

@@ -12,6 +12,7 @@ from valideer_spark.operators import (
     duplicate_keys,
     orphan_keys,
     orphan_rows,
+    psi_drift,
     quantile_drift,
     quantile_sketch_table,
 )
@@ -21,7 +22,7 @@ from valideer_spark.operators import (
 RANK_EPS = 0.005
 
 
-def _assert_rank_bound(df, column, probs, quantiles):
+def _assert_rank_bound(df, column, probs, quantiles, eps=RANK_EPS):
     """``cnt_lt(q)/n <= p + eps`` and ``cnt_le(q)/n >= p - eps`` for each
     (p, q), with exact counts over the non-NULL, non-NaN values."""
     v = F.col(column).cast("double")
@@ -35,8 +36,8 @@ def _assert_rank_bound(df, column, probs, quantiles):
     ).first()
     n = row["n"]
     for i, (p, q) in enumerate(zip(probs, quantiles)):
-        assert row["lt%d" % i] / n <= p + RANK_EPS, (p, q, row["lt%d" % i], n)
-        assert row["le%d" % i] / n >= p - RANK_EPS, (p, q, row["le%d" % i], n)
+        assert row["lt%d" % i] / n <= p + eps, (p, q, row["lt%d" % i], n)
+        assert row["le%d" % i] / n >= p - eps, (p, q, row["le%d" % i], n)
 
 
 def test_column_profile(spark):
@@ -126,6 +127,41 @@ def test_quantile_drift(spark):
     rows = quantile_drift(a, b, "v", probs=[0.5]).collect()
     assert len(rows) == 1
     assert rows[0]["abs_diff"] == pytest.approx(50.0, abs=2.0)
+
+
+def test_drift_paths_leave_out_nan(spark):
+    """PSI, GK and KLL read the same values of a column that mixes them
+    with NULL and NaN: NULL and NaN are left out, ±inf are the extreme
+    values. Side a = 0..99 and ±inf; side b = 0..69, 30 NaN and 5 NULL."""
+    inf = float("inf")
+    vals_a = [float(i) for i in range(100)] + [inf, -inf]
+    vals_b = [float(i) for i in range(70)]
+    a = spark.createDataFrame([(v,) for v in vals_a], "v double")
+    b = spark.createDataFrame(
+        [(v,) for v in vals_b] + [(float("nan"),)] * 30 + [(None,)] * 5, "v double"
+    )
+
+    breaks = [25.0, 50.0, 75.0]
+
+    def counts(vals):
+        return [sum(sum(v > c for c in breaks) == k for v in vals) for k in range(4)]
+
+    rows = psi_drift(a, b, "v", breaks).collect()
+    assert [r["n_a"] for r in rows] == counts(vals_a)
+    assert [r["n_b"] for r in rows] == counts(vals_b)  # no value of b is > 75
+
+    probs, accuracy = [0.5, 0.99], 10000
+    gk = quantile_drift(a, b, "v", probs=probs, accuracy=accuracy).collect()
+    q_b = [r["q_b"] for r in gk]
+    assert not any(math.isnan(q) for q in q_b)
+    _assert_rank_bound(b, "v", probs, q_b, eps=1.0 / accuracy)
+    _assert_rank_bound(a, "v", probs, [r["q_a"] for r in gk], eps=1.0 / accuracy)
+
+    table_b = quantile_sketch_table(b, "v")
+    assert table_b.first()["n"] == len(vals_b)
+    kll = drift_between_sketch_tables(quantile_sketch_table(a, "v"), table_b, probs)
+    _assert_rank_bound(b, "v", probs, [r[2] for r in kll])
+    _assert_rank_bound(a, "v", probs, [r[1] for r in kll])
 
 
 def test_domain_diff(spark):

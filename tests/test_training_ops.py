@@ -283,26 +283,6 @@ def test_duplicate_keys_salted_deterministic(spark, docs_df):
     assert runs[0] == runs[1] == runs[2]
 
 
-def test_minhash_arrow_matches_expressions(spark):
-    """The vectorized numpy signature kernel must produce BYTE-IDENTICAL
-    signatures to the expression path (same coefficients, same modular
-    math) on real text including short/empty docs."""
-    from valideer_spark.operators.dedup import (
-        minhash_signatures,
-        minhash_signatures_arrow,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"w{i % 7} x{i % 13} common words tail {i}") for i in range(200)]
-        + [(900, ""), (901, "one"), (902, "two words only")],
-        "doc_id long, text string",
-    )
-    a = {r["id"]: list(r["signature"]) for r in minhash_signatures(docs).collect()}
-    b = {r["id"]: list(r["signature"]) for r in minhash_signatures_arrow(docs).collect()}
-    assert a == b
-    assert len(a) > 0
-
-
 def test_ivf_train_sample_is_bounded(spark):
     """The IVF quantizer must fit on a bounded sample: _ivf_train_frame
     caps rows via limit/sample, and ivf_index with a small cap still

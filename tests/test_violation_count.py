@@ -164,3 +164,76 @@ def test_verdicts_plan_prunes_violation_structs(spark):
     assert "Invalid value" not in plan
     assert "missing required properties" not in plan
     assert "must be one of" not in plan
+
+
+def _python_udf_types(df):
+    """Return types of the Python UDFs that ``df``'s physical plan
+    evaluates, cached relations and adaptive plans included."""
+    out = []
+
+    def walk(node):
+        name = node.nodeName()
+        if name in ("ArrowEvalPython", "BatchEvalPython"):
+            udfs = node.udfs()
+            out.extend(
+                udfs.apply(i).dataType().simpleString() for i in range(udfs.size())
+            )
+        if name == "InMemoryTableScan":
+            walk(node.relation().cachedPlan())
+        if name == "AdaptiveSparkPlan":
+            walk(node.executedPlan())
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def test_report_frame_runs_one_boolean_udf_per_fallback_node(spark):
+    """The report frame evaluates each of the corpus's three fallback
+    nodes through ONE boolean verdict UDF: the verdict and the violation
+    count share the call, and no message is formatted on that path (a
+    verdict folded into the error struct measured slower)."""
+    report = _kernel_fallback_report(spark)
+    try:
+        assert _python_udf_types(report._frame()) == ["boolean"] * 3
+    finally:
+        report.unpersist()
+
+
+def test_raising_callable_fails_every_output(spark, tmp_path):
+    """A kernel error other than ``ValidationError`` (a callable raising
+    with ``traps=()``) fails the job on every output: no UDF turns it
+    into a verdict or a message."""
+    from valideer_spark import core as V
+    from valideer_spark.engine import write_quarantine
+
+    def raising(x):  # local, so the workers unpickle it by value
+        if x % 10 == 3:
+            raise TypeError("kernel-fallback-boom")
+        return x % 2 == 0
+
+    df = spark.range(200).select(F.col("id").alias("n"))
+    schema = V.Object(required={"n": V.Condition(raising, traps=())})
+    engine = ValidationEngine(
+        schema, id_col="n", checkpoint_dir=str(tmp_path / "ckpt")
+    )
+    report = engine.check(df)
+    outputs = {
+        "verdicts": lambda: report.verdicts().collect(),
+        "metrics": lambda: report.metrics().collect(),
+        "violation_rows": lambda: report.violation_rows().collect(),
+        "adapted": lambda: report.adapted().collect(),
+        "write_quarantine": lambda: write_quarantine(
+            report, str(tmp_path / "valid"), str(tmp_path / "quarantine")
+        ),
+        "run_with_checkpoint": lambda: engine.run_with_checkpoint(df).collect(),
+    }
+    try:
+        for name, run in outputs.items():
+            with pytest.raises(Exception, match="kernel-fallback-boom"):
+                run()
+                pytest.fail("%s swallowed the kernel error" % name)
+    finally:
+        report.unpersist()

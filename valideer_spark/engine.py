@@ -50,13 +50,12 @@ def deterministic_partition_id(doc_id_col, buckets: int = DEFAULT_BUCKETS):
 
 def _input_fingerprint(df: DataFrame) -> str:
     """Lineage fingerprint of a file-backed frame: md5 over the sorted
-    input file list (empty for non-file frames, e.g. synthetic ranges)."""
+    input file list (empty for non-file frames, e.g. synthetic ranges,
+    whose ``inputFiles()`` is empty). A failing ``inputFiles()`` raises:
+    the lineage row never silently loses its input identity."""
     import hashlib
 
-    try:
-        files = sorted(df.inputFiles())
-    except Exception:
-        files = []
+    files = sorted(df.inputFiles())
     if not files:
         return ""
     h = hashlib.md5()

@@ -28,7 +28,6 @@ from typing import List, Literal, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # Mersenne prime for universal hashing (fits in signed 64-bit arithmetic
 # after the modulo; products use Spark's 64-bit ops on 31-bit coefficients)
@@ -75,26 +74,6 @@ def exact_duplicates(
     )
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct n-word shingles of a text column, as STRINGS (empty-safe).
-
-    Kept for callers that need the shingle text itself; the dedup hot
-    paths use :func:`shingle_hash_frame` instead — building ~|tokens|
-    small strings per document is the measured cost driver of the whole
-    MinHash pipeline (BENCH.md round 4: 18.2s vs 0.96s for the hashed
-    form on 500k docs)."""
-    tokens = F.split(normalized_text(col), " ")
-    k = F.size(tokens) - (n - 1)
-    return F.when(k <= 0, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), k - 1),
-                lambda i: F.array_join(F.slice(tokens, i + 1, n), " "),
-            )
-        )
-    )
-
-
 def shingle_hash_frame(
     df: DataFrame,
     text_col: str = "text",
@@ -109,10 +88,11 @@ def shingle_hash_frame(
     (zip_with — pure 64-bit math, no strings; the lambda is interpreted,
     ``CodegenFallback``).
 
-    Set-equivalent to hashing :func:`word_shingles` output (collisions
-    aside, negligible at 64 bits): per-doc distinct-set CARDINALITY was
-    verified equal on 500k real docs, and identical text still yields
-    identical hash sets, which is all Jaccard/MinHash semantics need.
+    Set-equivalent to hashing the distinct n-word shingle strings
+    (collisions aside, negligible at 64 bits): per-doc distinct-set
+    CARDINALITY was verified equal on 500k real docs, and identical text
+    still yields identical hash sets, which is all Jaccard/MinHash
+    semantics need.
     The hash VALUES differ from xxhash64(shingle-string) — they are
     engine-internal either way. Measured 19x faster than the string
     path (BENCH.md round 4): string shingling was ~50% of MinHash
@@ -251,10 +231,7 @@ def jaccard_verify_candidates(
     candidates whose ids carry no shingles.
     """
     if prune == "auto":
-        try:
-            prune = candidates.is_cached
-        except Exception:
-            prune = False
+        prune = candidates.is_cached
     sh = shingle_hash_frame(df, text_col, id_col, n).filter(F.size("sh") > 0)
     cand = candidates.select("a_id", "b_id")
     if prune:
@@ -430,96 +407,6 @@ def minhash_signatures_oph(
         )
     )
     return folded.select("id", sig.alias("signature"))
-
-
-def minhash_signatures_arrow(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    shingle_n: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """Bit-identical twin of :func:`minhash_signatures` with the k
-    universal hashes evaluated in ONE vectorized numpy kernel
-    (``mapInPandas``) instead of k interpreted array-lambda transforms.
-
-    Shingling and the per-shingle xxhash64 stay JVM-side; the
-    Arrow batch then computes the full (total_shingles x num_hashes)
-    modular-hash matrix with uint64 broadcasting (a*h+b < 2^62 for
-    P = 2^31-1, no overflow) and segment-mins it per document with
-    ``np.minimum.reduceat``. Same coefficients, same modular math ⇒
-    byte-identical signatures (asserted by
-    tests/test_training_ops.py::test_minhash_arrow_matches_expressions).
-
-    MEASURED NEGATIVE RESULT (BENCH.md round 3, 1.1M docs / 58 shingles
-    / 64 hashes, local[32]): this variant does NOT beat the expression
-    path (79s vs 81s) because Arrow serialization of the nested
-    shingle-hash lists dominates — a passthrough mapInPandas that ships
-    the lists and returns only counts costs 170s by itself, 2x the
-    ENTIRE expression pipeline. Keep :func:`minhash_signatures` as the
-    default; use this variant only when the per-shingle work must
-    happen in Python anyway (e.g. a custom tokenizer), where the
-    transfer is already paid."""
-    import numpy as np
-    import pandas as pd
-
-    coeffs = _hash_coefficients(num_hashes, seed)
-    A = np.array([a for a, _ in coeffs], dtype=np.uint64)
-    B = np.array([b for _, b in coeffs], dtype=np.uint64)
-    P = np.uint64(_P)
-
-    # identical staging to minhash_signatures (bit-identical contract)
-    staged = (
-        shingle_hash_frame(df, text_col, id_col, shingle_n, out_col="_sh")
-        .select(
-            "id",
-            F.transform(
-                F.col("_sh"), lambda h: F.pmod(h, F.lit(_P))
-            ).alias("_hashes"),
-        )
-        .filter(F.size("_hashes") > 0)
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id", staged.schema["id"].dataType),
-            T.StructField("signature", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    # sub-batch so the (shingles x num_hashes) uint64 matrix stays small
-    # per python worker: 32 concurrent workers x full-batch temporaries
-    # (~1 GB each at 10k rows x 58 shingles x 64 hashes x 3 temps) thrash
-    # memory; 1k-doc chunks with in-place ops peak at ~30 MB per worker
-    CHUNK = 1000
-
-    def kernel(batches):
-        for pdf in batches:
-            for lo in range(0, len(pdf), CHUNK):
-                sub = pdf.iloc[lo : lo + CHUNK]
-                if not len(sub):
-                    continue
-                lens = sub["_hashes"].map(len).to_numpy()
-                flat = np.concatenate(
-                    [np.asarray(h, dtype=np.uint64) for h in sub["_hashes"]]
-                )
-                # (total_shingles, num_hashes) modular universal hashes,
-                # built with in-place ops (one temporary)
-                m = flat[:, None] * A[None, :]
-                m += B[None, :]
-                m %= P
-                offsets = np.zeros(len(lens), dtype=np.int64)
-                np.cumsum(lens[:-1], out=offsets[1:])
-                sigs = np.minimum.reduceat(m, offsets, axis=0)
-                yield pd.DataFrame(
-                    {
-                        "id": sub["id"].to_numpy(),
-                        "signature": [row.astype(np.int64) for row in sigs],
-                    }
-                )
-
-    return staged.mapInPandas(kernel, schema=out_schema)
 
 
 # Documented (num_hashes, bands) presets for banded MinHash LSH. The

@@ -13,6 +13,11 @@ Two quantile paths, both JVM-side aggregates:
 :func:`psi_drift` scores drift over fixed buckets, exactly, and
 :func:`drift_across_snapshots` runs either score on two retained table
 versions.
+
+All three paths read the same values of a column: NULL and NaN are left
+out (the rule ``kll_sketch_agg_double`` applies), and ±inf are values,
+ordered beyond every finite one — the KLL and GK sketches rank them as
+their extreme quantiles, and PSI puts them in its first and last bucket.
 """
 
 from __future__ import annotations
@@ -21,6 +26,7 @@ from typing import List, Sequence, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 DEFAULT_PROBS = [0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99]
 
@@ -30,11 +36,22 @@ DEFAULT_PROBS = [0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99]
 _KLL_K = 2000
 
 
+def _observed(df: DataFrame, column: str) -> DataFrame:
+    """Rows of ``df`` whose ``column`` holds a value: NULL and, for a
+    floating-point column, NaN left out, as the KLL sketch leaves them."""
+    c = F.col(column)
+    keep = c.isNotNull()
+    if isinstance(df.select(c).schema[0].dataType, (T.FloatType, T.DoubleType)):
+        keep = keep & ~F.isnan(c)
+    return df.filter(keep)
+
+
 def quantile_sketch_table(df: DataFrame, column: str) -> DataFrame:
     """Persistable quantile sketch of one numeric column: a single row
     ``(n bigint, sketch binary)`` holding a KLL sketch of the column cast
     to double, with NULL and NaN left out and ``n`` the number of values
-    the sketch holds.
+    the sketch holds. ±inf are held as values: a column with k of them
+    at +inf has its top k ranks at +inf.
 
     The sketch is a JVM partial aggregate: each task builds a sketch of
     its rows and one final step merges them, so no row is shuffled by
@@ -86,11 +103,15 @@ def quantile_drift(
     accuracy: int = 10000,
 ) -> DataFrame:
     """Per-quantile comparison of one column across two snapshots using the
-    JVM mergeable GK sketch; returns (prob, q_a, q_b, abs_diff)."""
+    JVM mergeable GK sketch; returns (prob, q_a, q_b, abs_diff).
+
+    NULL and NaN are left out, as in :func:`quantile_sketch_table` (GK
+    alone sorts NaN above +inf, so a few NaN turn the top quantiles into
+    NaN); ±inf are values."""
     probs = list(probs)
 
     def side(df: DataFrame, name: str) -> DataFrame:
-        return df.agg(
+        return _observed(df, column).agg(
             F.percentile_approx(column, probs, accuracy).alias(name)
         )
 
@@ -125,7 +146,9 @@ def psi_drift(
     paths, which are approximate by construction).
 
     ``len(breaks) + 1`` buckets: bucket i = number of breaks the value
-    exceeds. NULLs are excluded (PSI is defined over observed values).
+    exceeds. NULL and NaN are excluded, as in the sketch paths (PSI is
+    defined over observed values); -inf falls in bucket 0 and +inf in the
+    last bucket.
     Per side: one bounded-key aggregation — shuffle is O(buckets), never
     O(rows), so the plan is 100 TB-safe by the same argument as
     column_histogram. Returns one row per bucket:
@@ -142,7 +165,7 @@ def psi_drift(
         for cut in breaks:
             b = b + (F.col(column) > F.lit(float(cut))).cast("int")
         return (
-            df.filter(F.col(column).isNotNull())
+            _observed(df, column)
             .select(b.alias("bucket"))
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).alias(name))

@@ -4,8 +4,8 @@
   the dot product is a JVM ``zip_with``/``aggregate`` fold (double
   precision, deterministic left-to-right order). The baseline and the
   recall oracle for the ANN path.
-* :func:`lsh_bucket` / :func:`ann_lsh_topk` — random-hyperplane LSH:
-  sign-bit bucket of H deterministic hyperplanes; query probes its own
+* :func:`lsh_band_keys` / :func:`ann_lsh_topk` — random-hyperplane LSH:
+  sign-bit band keys of H deterministic hyperplanes; query probes its own
   bucket plus all 1-bit-flip neighbors (multiprobe), then scores exactly
   within candidates. At 10^12 vectors the bucket column becomes the
   table's partition key so a query touches H+1 partitions, not the table.
@@ -117,12 +117,6 @@ def _query_band_keys(
             key = key * 2 + (1 if signs[l * bits + i] >= 0 else 0)
         keys.append(key)
     return keys
-
-
-def lsh_bucket(vec: Column, planes: np.ndarray) -> Column:
-    """Single sign-bit bucket id (long) against fixed hyperplanes —
-    one-band special case of :func:`lsh_band_keys`."""
-    return F.element_at(lsh_band_keys(vec, planes, 1), 1)
 
 
 def ann_lsh_topk(

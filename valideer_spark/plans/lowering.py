@@ -19,9 +19,9 @@ run as higher-order-function lambdas (``transform``, ``zip_with``,
 ``forall``...), which Spark 4.1 interprets (``CodegenFallback``), so the
 operator holding them runs outside whole-stage codegen. Validators with no
 native lowering (arbitrary ``Condition`` predicates, ``AdaptBy`` with a
-Python callable) fall back to an Arrow-vectorized pandas UDF that runs the
-kernel itself — the documented escape hatch, never used by the built-in
-schema constructs.
+Python callable, a ``Pattern`` the regex translator rejects) fall back to
+:func:`kernel_fallback`: three Arrow-vectorized pandas UDFs that run the
+kernel itself — the documented escape hatch.
 
 Reference-semantics notes (citations into /root/reference/valideer/):
 
@@ -573,11 +573,18 @@ def _is_scalar_type(dtype: T.DataType) -> bool:
 def kernel_fallback(
     validator: Validator, dtype: T.DataType, out_type: Optional[T.DataType] = None
 ) -> Lowered:
-    """Run the kernel validator inside Arrow-batched pandas UDFs.
+    """Run the kernel validator inside three Arrow-batched pandas UDFs: a
+    boolean verdict, a ``struct<suffix, message, bare>`` of the first
+    error, and the adapted value. Spark evaluates identical UDF calls once
+    per operator, so predicate and count share one verdict call, and
+    violations and msg one error call. The verdict stays its own UDF:
+    folded into the error struct, it formats a message for every invalid
+    row on the verdict path (measured slower on ``verdicts()``).
 
     Scalar columns are passed through directly; nested columns round-trip
     through JSON (``to_json`` omits null struct fields, which matches the
-    engine's null-field == absent-property convention).
+    engine's null-field == absent-property convention). A kernel exception
+    other than ``ValidationError`` fails the task on every output.
     """
     out_type = out_type or dtype
     scalar = _is_scalar_type(dtype)
@@ -600,135 +607,91 @@ def kernel_fallback(
             return bool(x)
         return x
 
-    @F.pandas_udf(T.BooleanType())
-    def ok_udf(s: pd.Series) -> pd.Series:
-        return s.map(lambda x: validator.is_valid(to_py(x)))
-
-    def decode(x):
-        if scalar:
-            return to_py(x)
-        return None if x is None else json.loads(x)
+    if scalar:
+        decode, encode = to_py, (lambda col: col)
+    else:
+        decode = lambda x: None if x is None else json.loads(x)
+        encode = F.to_json
 
     @F.pandas_udf(T.BooleanType())
-    def ok_json_udf(s: pd.Series) -> pd.Series:
+    def valid_udf(s: pd.Series) -> pd.Series:
         return s.map(lambda x: validator.is_valid(decode(x)))
 
-    @F.pandas_udf(T.StringType())
-    def msg_udf(s: pd.Series) -> pd.Series:
-        def one(x):
-            try:
-                validator.validate(decode(x), adapt=False)
-                return None
-            except ValidationError as ex:
-                return ex.msg
-            except Exception:
-                return "invalid"
-
-        return s.map(one)
-
-    # (suffix, full "Invalid value ..." body) of the first kernel error
-    vio_fields = T.StructType(
+    # the first kernel error: its context suffix, its full "Invalid value
+    # ..." body and its bare message (all NULL on a valid value)
+    error_fields = T.StructType(
         [
             T.StructField("suffix", T.StringType()),
             T.StructField("message", T.StringType()),
+            T.StructField("bare", T.StringType()),
         ]
     )
 
-    @F.pandas_udf(vio_fields)
-    def vio_udf(s: pd.Series) -> pd.DataFrame:
-        suffixes, messages = [], []
-        for x in s:
+    @F.pandas_udf(error_fields)
+    def error_udf(s: pd.Series) -> pd.DataFrame:
+        def one(x):
             try:
                 validator.validate(decode(x), adapt=False)
-                suffixes.append(None)
-                messages.append(None)
+                return None, None, None
             except ValidationError as ex:
-                suffixes.append(
-                    "".join("[%r]" % c for c in reversed(ex.context))
-                )
-                base = ex.context
+                suffix = "".join("[%r]" % c for c in reversed(ex.context))
                 ex.context = []
-                messages.append(ex.to_string())
-                ex.context = base
-        return pd.DataFrame({"suffix": suffixes, "message": messages})
+                return suffix, ex.to_string(), ex.msg
 
-    def adapt_scalar_udf():
-        # a mixed-adapt validator (e.g. AnyOf(AdaptTo(int), Enum(["N/A"])))
-        # produces per-row python types that cannot all fit one Spark
-        # column type; coerce into out_type's python class (engine
-        # convention: declare `spark_out_type` to pick the column type,
-        # default keeps the input dtype) — uncoercible values become NULL
-        # instead of failing the Arrow serializer mid-job
-        target_cls = _python_class_for(out_type)
+        return pd.DataFrame([one(x) for x in s], columns=error_fields.names)
 
-        @F.pandas_udf(out_type)
-        def adapt_udf(s: pd.Series) -> pd.Series:
-            def one(x):
+    # a mixed-adapt validator (e.g. AnyOf(AdaptTo(int), Enum(["N/A"])))
+    # produces per-row python types that cannot all fit one Spark column
+    # type; coerce into out_type's python class (engine convention:
+    # declare `spark_out_type` to pick the column type, default keeps the
+    # input dtype) — uncoercible values become NULL instead of failing
+    # the Arrow serializer mid-job
+    target_cls = _python_class_for(out_type)
+
+    @F.pandas_udf(out_type if scalar else T.StringType())
+    def adapt_udf(s: pd.Series) -> pd.Series:
+        def one(x):
+            try:
+                r = validator.validate(decode(x), adapt=True)
+            except ValidationError:
+                return None
+            if not scalar:
                 try:
-                    r = validator.validate(to_py(x), adapt=True)
-                except ValidationError:
-                    return None
-                if (
-                    r is not None
-                    and target_cls is not object
-                    and not isinstance(r, target_cls)
-                ):
-                    try:
-                        return target_cls(r)
-                    except Exception:
-                        return None
-                return r
-
-            return s.map(one)
-
-        return adapt_udf
-
-    if scalar:
-        predicate = lambda col: _nullsafe(ok_udf(col))
-        msg = lambda col: msg_udf(col)
-        _adapt = adapt_scalar_udf()
-        adapt = lambda col: _adapt(col)
-        encode = lambda col: col
-
-    else:
-        predicate = lambda col: _nullsafe(ok_json_udf(F.to_json(col)))
-        msg = lambda col: msg_udf(F.to_json(col))
-
-        @F.pandas_udf(T.StringType())
-        def adapt_json_udf(s: pd.Series) -> pd.Series:
-            def one(x):
-                if x is None:
-                    return None
-                try:
-                    return json.dumps(validator.validate(json.loads(x), adapt=True))
-                except ValidationError:
-                    return None
+                    return json.dumps(r)
                 except (TypeError, ValueError):
                     # adaptor produced a non-JSON-representable value
-                    # (datetime/Decimal/...): nested fallback adaptation is
-                    # JSON-bounded by design — report NULL instead of
+                    # (datetime/Decimal/...): nested fallback adaptation
+                    # is JSON-bounded by design — report NULL instead of
                     # failing the whole job inside the UDF
                     return None
+            if r is None or target_cls is object or isinstance(r, target_cls):
+                return r
+            try:
+                return target_cls(r)
+            except Exception:
+                return None
 
-            return s.map(one)
+        return s.map(one)
 
-        adapt = lambda col: F.from_json(adapt_json_udf(F.to_json(col)), out_type)
-        encode = F.to_json
-
+    predicate = lambda col: _nullsafe(valid_udf(encode(col)))
+    if scalar:
+        adapt = adapt_udf
+    else:
+        adapt = lambda col: F.from_json(adapt_udf(encode(col)), out_type)
     code = "kernel:" + validator.__class__.__name__
 
     def violations(col: Column, path: Optional[Column]) -> Column:
         if path is None:
-            # codes only: the verdict UDF decides, no message UDF runs
+            # codes only: the verdict UDF decides, the error UDF never runs
             return F.when(predicate(col), _no_violations()).otherwise(
                 _violation(None, code, lambda: None)
             )
-        v = vio_udf(encode(col))
-        return F.when(v.getField("message").isNull(), _no_violations()).otherwise(
+        e = error_udf(encode(col))
+        return F.when(e.getField("message").isNull(), _no_violations()).otherwise(
             _violation(
-                F.concat(path, F.coalesce(v.getField("suffix"), F.lit(""))),
+                F.concat(path, F.coalesce(e.getField("suffix"), F.lit(""))),
                 code,
-                lambda: v.getField("message"),
+                lambda: e.getField("message"),
             )
         )
 
@@ -737,7 +700,7 @@ def kernel_fallback(
         predicate=predicate,
         adapt=adapt,
         violations=violations,
-        msg=msg,
+        msg=lambda col: error_udf(encode(col)).getField("bare"),
         # the kernel round-trip reports at most ONE violation
         count=lambda col: F.when(predicate(col), F.lit(0)).otherwise(F.lit(1)),
     )

@@ -26,6 +26,7 @@ from __future__ import annotations
 import re
 from typing import List, Optional, Sequence
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 #: suffix of the SIBLING directory (``<table>_snapshots/v=<n>``) holding
@@ -74,13 +75,15 @@ def snapshot_versions(spark: SparkSession, path: str) -> List[int]:
 
 
 def iceberg_available(spark: SparkSession) -> bool:
-    """True when the Iceberg runtime is on the classpath."""
+    """True when the Iceberg runtime is on the classpath. A missing class
+    reaches Python as a ``Py4JJavaError`` wrapping
+    ``ClassNotFoundException``; any other failure raises."""
     try:
         spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
             "org.apache.iceberg.spark.SparkCatalog"
         )
         return True
-    except Exception:
+    except Py4JJavaError:
         return False
 
 
