@@ -22,3 +22,25 @@ def spark():
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` calls ``fn()`` and returns ``(result, jobs)``:
+    the number of Spark jobs the call started. Job ids only grow, so they
+    are the ids in Spark's status store above the largest one seen before
+    the call. The store is filled from the listener bus after an action
+    returns, so the bus is drained before each read."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def last_job_id():
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+    def count(fn):
+        before = last_job_id()
+        result = fn()
+        return result, last_job_id() - before
+
+    return count

@@ -159,6 +159,76 @@ def test_unreadable_checkpoint_raises(spark, tmp_path):
     assert _listing(ck) == listing
 
 
+def test_all_done_resume_scans_nothing(spark, tmp_path, count_jobs, monkeypatch):
+    """With every bucket checkpointed, a resume over the write_partitioned
+    layout reads the checkpoint and nothing else: at most 2 jobs (the
+    checkpoint's schema and its ids), no predicate planned, no input file
+    read, nothing appended; it returns no rows with the checkpoint's
+    columns."""
+    docs = synth_docs(spark, 400)
+    data_path = str(tmp_path / "docs_bucketed")
+    write_partitioned(docs, data_path, buckets=8)
+    eng = ValidationEngine(
+        doc_schema(), buckets=8, checkpoint_dir=str(tmp_path / "ckpt")
+    )
+    assert eng.run_with_checkpoint(spark.read.parquet(data_path), run_id="r1").count() == 8
+    ck = eng._checkpoint_path()
+    listing = _listing(ck)
+
+    stored = spark.read.parquet(data_path)
+    for f in _listing(data_path):
+        if f.endswith(".parquet"):  # any scan of the input now fails
+            with open(os.path.join(data_path, f), "wb") as fh:
+                fh.write(b"not a parquet file")
+
+    def no_check(*args, **kwargs):
+        raise AssertionError("an all-done resume planned the predicate")
+
+    monkeypatch.setattr(ValidationEngine, "check", no_check)
+    out, jobs = count_jobs(lambda: eng.run_with_checkpoint(stored, run_id="r2"))
+    assert jobs <= 2
+    assert out.collect() == []
+    assert out.columns == spark.read.parquet(ck).columns
+    assert _listing(ck) == listing
+
+
+def test_one_checkpoint_file_per_run(spark, tmp_path):
+    """Each run appends one data file to the checkpoint, and returns the
+    rows that file holds for its run id."""
+    docs = synth_docs(spark, 400)
+    eng = ValidationEngine(doc_schema(), buckets=8, checkpoint_dir=str(tmp_path))
+    ck = eng._checkpoint_path()
+    bucket = F.pmod(F.xxhash64("doc_id"), F.lit(8))
+    for run_id, frame, n_rows, n_files in (
+        ("r1", docs.filter(bucket < 3), 3, 1),
+        ("r2", docs, 5, 2),
+    ):
+        returned = eng.run_with_checkpoint(frame, run_id=run_id).collect()
+        assert len(returned) == n_rows
+        assert len([f for f in _listing(ck) if f.endswith(".parquet")]) == n_files
+        stored = spark.read.parquet(ck).filter(F.col("run_id") == run_id)
+        assert sorted(returned) == sorted(stored.collect())
+
+
+def test_completed_at_is_stamped_after_the_work(spark, tmp_path):
+    """``completed_at`` is taken when the verdict rows are in, not when
+    the run is planned: on a slowed input it is at least the run's start
+    plus its measured wall seconds."""
+    import time
+
+    slow = F.udf(lambda s: (time.sleep(0.1), s)[1], "string")
+    docs = synth_docs(spark, 25).coalesce(1).withColumn("doc_id", slow("doc_id"))
+    eng = ValidationEngine(doc_schema(), buckets=4, checkpoint_dir=str(tmp_path))
+    t0 = time.time()
+    rows = eng.run_with_checkpoint(docs, run_id="r1").collect()
+    t1 = time.time()
+    assert rows
+    for r in rows:
+        assert r["wall_secs"] >= 2.0
+        # wall_secs is rounded to milliseconds
+        assert int(t0 + r["wall_secs"] - 0.001) <= r["completed_at"] <= t1
+
+
 def test_checkpoint_lineage_columns(spark, tmp_path):
     """Checkpoint rows carry full lineage: run id, timestamps, measured
     wall seconds, and the input-file fingerprint (stable across runs of

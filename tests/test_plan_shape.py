@@ -80,20 +80,69 @@ def test_verdict_agg_is_partial_final(spark):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_checkpoint_resume_uses_broadcast_anti_join(spark, tmp_path):
+def _subtree(nodes, i):
+    """The nodes of the subtree rooted at ``nodes[i]``, a pre-order
+    ``TreeNode.toJSON`` list."""
+    end, pending = i, 1
+    while pending:
+        pending += nodes[end]["num-children"] - 1
+        end += 1
+    return nodes[i:end]
+
+
+def test_checkpoint_resume_filters_done_ids_without_join(spark, tmp_path):
+    """The engine's resume over an unpartitioned input: the verdict
+    aggregation it collects has no join, and one Filter keeps the rows
+    whose recomputed bucket id (an xxhash64 bucket) is NOT IN the
+    checkpointed ids."""
+    import json
+
+    import pyspark.sql.classic.dataframe as classic
+
     from valideer_spark.engine import ValidationEngine
     from valideer_spark.flagship import doc_schema
     from valideer_spark.sources import synth_docs
 
     docs = synth_docs(spark, 200)
     eng = ValidationEngine(doc_schema(), buckets=16, checkpoint_dir=str(tmp_path))
-    eng.run_with_checkpoint(docs, run_id="r1")
-    done = eng.completed_partitions(spark)
-    report = eng.check(docs)
-    joined = report.annotated.join(
-        F.broadcast(done), report.annotated["_part_id"] == done["part_id"], "left_anti"
-    )
-    assert "BroadcastHashJoin" in _plan(joined.select("_part_id"))
+    bucket = F.pmod(F.xxhash64("doc_id"), F.lit(16))
+    first = eng.run_with_checkpoint(docs.filter(bucket < 5), run_id="r1")
+    done = sorted(r["part_id"] for r in first.collect())
+    assert done == [0, 1, 2, 3, 4]
+
+    collected = []
+    collect = classic.DataFrame.collect
+
+    def spy(self):
+        collected.append(self)
+        return collect(self)
+
+    classic.DataFrame.collect = spy
+    try:
+        rest = eng.run_with_checkpoint(docs, run_id="r2")
+    finally:
+        classic.DataFrame.collect = collect
+    assert sorted(r["part_id"] for r in rest.collect()) == list(range(5, 16))
+    verdicts = [df for df in collected if "n_docs" in df.columns]
+    assert len(verdicts) == 1
+    qe = verdicts[0]._jdf.queryExecution()
+    assert "Join" not in qe.optimizedPlan().toString()
+    assert "Join" not in qe.executedPlan().toString()
+
+    nodes = json.loads(qe.optimizedPlan().toJSON())
+    filters = [n["condition"] for n in nodes if n["class"].endswith(".Filter")]
+    resume = []
+    for cond in filters:
+        for i, e in enumerate(cond):
+            if e["class"].endswith(".In"):
+                tree = _subtree(cond, i)
+                value = _subtree(tree, 1)
+                literals = tree[1 + len(value):]
+                resume.append((value, sorted(int(l["value"]) for l in literals)))
+    assert len(resume) == 1
+    value, ids = resume[0]
+    assert ids == done
+    assert any(e["class"].endswith(".XxHash64") for e in value)
 
 
 def test_lsh_candidates_plan_has_no_join(spark):

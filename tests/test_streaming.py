@@ -42,6 +42,24 @@ def test_incremental_validation(spark, tmp_path):
     assert "message" in viol.columns
 
 
+def test_verdicts_read_back_without_schema_inference(spark, tmp_path, count_jobs):
+    """``run_available`` reads the verdict sink with the schema its
+    batches write, so a drained re-run starts no Spark job (parquet
+    schema inference would start one)."""
+    input_dir = str(tmp_path / "incoming")
+    synth_docs(spark, 100).coalesce(1).write.parquet(input_dir)
+    output_dir = str(tmp_path / "out")
+    iv = IncrementalValidator(doc_schema(), DOCS_SCHEMA, output_dir)
+    verdicts = iv.run_available(spark, input_dir)
+    written = spark.read.parquet(os.path.join(output_dir, "verdicts"))
+    assert verdicts.schema == written.schema
+    assert verdicts.agg(F.sum("n_docs")).collect()[0][0] == 100
+
+    again, jobs = count_jobs(lambda: iv.run_available(spark, input_dir))
+    assert jobs == 0
+    assert again.schema == written.schema
+
+
 def test_stateful_dedup_stream(spark, tmp_path):
     """applyInPandasWithState first-seen dedup: duplicates arriving in a
     LATER micro-batch are dropped (state survives across batches)."""

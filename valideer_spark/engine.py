@@ -17,14 +17,16 @@ low-cardinality key; no collect(), no per-row Python. A
 :class:`CheckReport` evaluates the predicate at most once per row: its
 first output persists a compact frame (bucket id, verdict and violation
 count per row, plus the payload of invalid rows only) that every later
-output reads, and releases it with the report. Checkpointing
-filters resumed runs with a broadcast anti-join on the (small) completed
-partition list, which Catalyst turns into a partition-pruned scan when the
-storage layout is bucketed by the same key.
+output reads, and releases it with the report. A checkpointed run reads
+the completed bucket ids once and filters the remaining rows on them,
+which Catalyst turns into a partition-pruned scan when the storage layout
+is bucketed by the same key; a resume with every bucket done returns
+without planning the predicate or reading the input.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import threading
 import time
@@ -35,6 +37,7 @@ from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .plans import FramePlan, compile_plan, explode_violations
 from .plans.frame import RESERVED_COLUMNS
@@ -334,11 +337,12 @@ class ValidationEngine:
         if self.partition_expr is not None:
             # A custom partition_expr SHOULD be total over the id domain,
             # but if it is not (e.g. a numeric-suffix mod over a
-            # non-conforming id yields NULL under non-ANSI casts), the
-            # NULL bucket ids would never match the checkpoint anti-join
-            # and those rows would be revalidated — and their verdict rows
-            # re-appended — on every resume. Coalesce NULLs to a sentinel
-            # bucket (-1) so the checkpoint converges for them too. The
+            # non-conforming id yields NULL under non-ANSI casts), a NULL
+            # bucket id would be checkpointed as a NULL part_id, and the
+            # resume's NOT IN filter is NULL (so drops the row) for every
+            # row once its id list holds a NULL. Coalesce NULLs to a
+            # sentinel bucket (-1) so the checkpoint converges for them
+            # and never hides pending buckets. The
             # sentinel is a RESERVED value (see __init__ docstring): a
             # custom expression legitimately emitting -1 would silently
             # alias real rows onto the NULL bucket, so that case raises
@@ -371,16 +375,16 @@ class ValidationEngine:
         assert self.checkpoint_dir, "engine built without checkpoint_dir"
         return os.path.join(self.checkpoint_dir, "partition_checkpoints")
 
-    def completed_partitions(self, spark: SparkSession) -> Optional[DataFrame]:
+    def _checkpoint_rows(self, spark: SparkSession) -> Optional[DataFrame]:
+        """The stored checkpoint table, or None when nothing is
+        checkpointed yet."""
         from .sources.iceberg import _hadoop_fs, iceberg_available, read_table
 
         if self.checkpoint_format == "iceberg":
             if iceberg_available(spark):
                 if not spark.catalog.tableExists(self.checkpoint_table):
                     return None
-                return read_table(
-                    spark, self.checkpoint_table, fmt="iceberg"
-                ).select("part_id").distinct()
+                return read_table(spark, self.checkpoint_table, fmt="iceberg")
             # jars absent: the engine maintains the same MERGE semantics
             # on a parquet layout under checkpoint_dir (emulated branch
             # of run_with_checkpoint); no checkpoint_dir -> nothing to
@@ -393,7 +397,11 @@ class ValidationEngine:
         # never revalidating (and re-appending) partitions already done
         if not fs.exists(hpath):
             return None
-        return spark.read.parquet(path).select("part_id").distinct()
+        return spark.read.parquet(path)
+
+    def completed_partitions(self, spark: SparkSession) -> Optional[DataFrame]:
+        stored = self._checkpoint_rows(spark)
+        return None if stored is None else stored.select("part_id").distinct()
 
     def run_with_checkpoint(
         self, df: DataFrame, run_id: Optional[str] = None
@@ -401,14 +409,24 @@ class ValidationEngine:
         """Validate only partitions not yet checkpointed; upsert verdicts +
         lineage into the checkpoint table. Returns this run's verdict rows.
 
+        The checkpoint is read once per run: its completed ids, at most
+        ``buckets`` of them, are collected and filter the recomputed
+        bucket id of every row (the filter runs before the predicate, so
+        done rows skip validation but are still scanned).
+
+        A resume with every bucket done validates nothing, so it returns
+        an empty frame with the checkpoint's columns without planning the
+        predicate, reading the input or appending to the checkpoint. That
+        holds for the parquet checkpoint with the default bucketing, whose
+        ids are exactly ``range(buckets)``; a custom ``partition_expr``
+        can emit any id, and the Iceberg checkpoint records a snapshot per
+        run, so those runs take the general path.
+
         Resume pruning: when the input carries a PHYSICAL ``_part_id``
         column (a layout written by :func:`write_partitioned`, i.e.
-        parquet/Iceberg partitioned by the deterministic bucket), the
-        completed ids — at most ``buckets`` of them — are collected and
-        applied as a NOT-IN source filter, which Spark turns into
-        partition pruning: completed partitions are never scanned. For
-        unpartitioned inputs the filter falls back to a broadcast
-        anti-join after the scan (rows skipped, I/O not).
+        parquet/Iceberg partitioned by the deterministic bucket), the same
+        ids are also applied as a NOT-IN source filter, which Spark turns
+        into partition pruning: completed partitions are never scanned.
 
         CONTRACT for source pruning: the stored layout's bucketing must
         be THIS engine's bucketing — :func:`write_partitioned` with the
@@ -421,53 +439,57 @@ class ValidationEngine:
         (``write_partitioned`` always uses the default scheme, so a
         stored layout cannot match a custom expression); for a layout
         written with a different ``buckets`` count, drop the stored
-        ``_part_id`` column before calling (the anti-join below then
-        handles resume correctness, at full-scan cost)."""
+        ``_part_id`` column before calling (the filter on the recomputed
+        bucket then handles resume correctness, at full-scan cost)."""
         spark = df.sparkSession
         run_id = run_id or uuid.uuid4().hex
-        done = self.completed_partitions(spark)
-
+        stored = self._checkpoint_rows(spark)
+        done = (
+            sorted({r[0] for r in stored.select("part_id").collect()})
+            if stored is not None
+            else []
+        )
+        default_buckets = self.partition_expr is None
         if (
-            done is not None
-            and "_part_id" in df.columns
-            and self.partition_expr is None
+            self.checkpoint_format == "parquet"
+            and default_buckets
+            and set(range(self.buckets)) <= set(done)
         ):
+            return stored.limit(0)
+
+        if done and "_part_id" in df.columns and default_buckets:
             # source pruning: with a write_partitioned layout the NOT-IN
             # filter becomes PartitionFilters (completed buckets never
             # scanned). Only sound when the stored bucketing matches this
             # engine's (contract above) — never applied with a custom
             # partition_expr.
-            done_ids = [r["part_id"] for r in done.collect()]  # ≤ buckets rows
-            if done_ids:
-                df = df.filter(~F.col("_part_id").isin(done_ids))
+            df = df.filter(~F.col("_part_id").isin(done))
 
-        report = self.check(df, adapt=False)
-        annotated = report.annotated
-        if done is not None:
-            # broadcast anti-join on the recomputed bucket id: the
-            # completed list is tiny (≤ buckets)
-            annotated = annotated.join(
-                F.broadcast(done), annotated["_part_id"] == done["part_id"], "left_anti"
-            )
+        annotated = self.check(df, adapt=False).annotated
+        if done:
+            # the recomputed bucket id is never NULL (a custom expression's
+            # NULL is the -1 sentinel), so NOT IN keeps exactly the rows of
+            # pending buckets
+            annotated = annotated.filter(~F.col("_part_id").isin(done))
+        fingerprint = _input_fingerprint(df)
         t_run0 = time.time()
         # one output read once: aggregate annotated directly, no report frame
-        verdicts = (
-            _verdict_counts(annotated.groupBy("_part_id"))
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("completed_at", F.lit(int(time.time())).cast("long"))
-            .withColumn("input_fingerprint", F.lit(_input_fingerprint(df)))
-            .withColumnRenamed("_part_id", "part_id")
+        verdicts = _verdict_counts(
+            annotated.groupBy(F.col("_part_id").alias("part_id"))
         )
         # materialize the (≤ buckets) verdict rows so the lineage can carry
         # the run's measured wall time — a tiny driver round-trip, not a
         # data collect
-        from pyspark.sql import types as T
-
         rows = verdicts.collect()
-        wall = round(time.time() - t_run0, 3)
-        schema = verdicts.schema.add(T.StructField("wall_secs", T.DoubleType()))
-        stamped = spark.createDataFrame(
-            [tuple(r) + (wall,) for r in rows], schema
+        now = time.time()
+        stamped = _stamped(
+            spark,
+            verdicts.schema,
+            rows,
+            run_id=run_id,
+            completed_at=int(now),
+            input_fingerprint=fingerprint,
+            wall_secs=round(now - t_run0, 3),
         )
         if self.checkpoint_format == "iceberg":
             from .sources.iceberg import (
@@ -493,10 +515,34 @@ class ValidationEngine:
                 keep_snapshots=self.checkpoint_snapshots,
             )
             return merged.filter(F.col("run_id") == run_id)
-        stamped.write.mode("append").parquet(self._checkpoint_path())
-        return spark.read.parquet(self._checkpoint_path()).filter(
-            F.col("run_id") == run_id
-        )
+        if rows:
+            stamped.coalesce(1).write.mode("append").parquet(
+                self._checkpoint_path()
+            )
+        return stamped
+
+
+#: lineage columns of a checkpoint row, after the verdict counts
+_LINEAGE = (
+    ("run_id", T.StringType()),
+    ("completed_at", T.LongType()),
+    ("input_fingerprint", T.StringType()),
+    ("wall_secs", T.DoubleType()),
+)
+
+
+def _stamped(spark: SparkSession, schema, rows, **lineage) -> DataFrame:
+    """The collected verdict ``rows`` with their ``lineage`` values, as a
+    frame the JVM builds from one JSON literal: a constant number of py4j
+    calls, and no Python worker when the frame is written or read (as a
+    ``createDataFrame`` of Python rows would need)."""
+    schema = T.StructType(
+        schema.fields + [T.StructField(name, typ) for name, typ in _LINEAGE]
+    )
+    payload = json.dumps([{**r.asDict(), **lineage} for r in rows])
+    return spark.range(1).select(
+        F.inline(F.from_json(F.lit(payload), T.ArrayType(schema)))
+    )
 
 
 def write_quarantine(

@@ -30,7 +30,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..engine import CheckReport, ValidationEngine, deterministic_partition_id
+from ..engine import ValidationEngine
+
+#: the verdict sink's schema: a report's verdict counts and the batch id.
+#: Reading the sink with it skips parquet's schema-inference job.
+VERDICTS_SCHEMA = T.StructType(
+    [
+        T.StructField("part_id", T.IntegerType()),
+        T.StructField("n_docs", T.LongType()),
+        T.StructField("n_valid", T.LongType()),
+        T.StructField("n_violations", T.LongType()),
+        T.StructField("pass", T.BooleanType()),
+        T.StructField("batch_id", T.IntegerType()),
+    ]
+)
 
 
 class IncrementalValidator:
@@ -105,4 +118,6 @@ class IncrementalValidator:
         """Drain all currently-available files, wait, return verdicts."""
         q = self.start(spark, input_dir, available_now=True)
         q.awaitTermination()
-        return spark.read.parquet(os.path.join(self.output_dir, "verdicts"))
+        return spark.read.schema(VERDICTS_SCHEMA).parquet(
+            os.path.join(self.output_dir, "verdicts")
+        )
