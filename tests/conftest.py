@@ -25,6 +25,16 @@ def spark():
 
 
 @pytest.fixture
+def _empty_plan_cache():
+    """Empties the process-wide plan cache (``plans/frame.py``) before the
+    test, so its first ``compile_plan`` of a schema lowers it."""
+    from valideer_spark.plans import frame
+
+    with frame._plans_lock:
+        frame._plans.clear()
+
+
+@pytest.fixture
 def count_jobs(spark):
     """``count_jobs(fn)`` calls ``fn()`` and returns ``(result, jobs)``:
     the number of Spark jobs the call started. Job ids only grow, so they

@@ -215,12 +215,12 @@ def test_column_trees_are_built_once_per_column_set(spark):
     )
 
 
-def test_violations_build_each_value_repr_once(spark, monkeypatch):
+def test_violations_build_each_value_repr_once(spark, monkeypatch, _empty_plan_cache):
     """A fresh flagship violations tree builds one top-level value repr per
     distinct (column, type) pair: the spans, a span, a span's kind, text,
     media_ref and offset, the doc id and the row; one repr per message
-    would be 14. Nothing is kept after a build: a second plan builds its
-    own."""
+    would be 14. Nothing is kept after a build, and a second compile of an
+    equal schema reuses the plan, so it builds no repr at all."""
     from valideer_spark.flagship import doc_schema
     from valideer_spark.plans import compile_plan, lowering
     from valideer_spark.sources import DOCS_SCHEMA
@@ -234,17 +234,18 @@ def test_violations_build_each_value_repr_once(spark, monkeypatch):
 
     monkeypatch.setattr(lowering, "py_repr", counting)
     df = spark.createDataFrame([], DOCS_SCHEMA)
-    per_build = []
+    plans, per_build = [], []
     for _ in range(2):
         calls.clear()
-        compile_plan(doc_schema(), DOCS_SCHEMA).violations_col(df)
+        plans.append(compile_plan(doc_schema(), DOCS_SCHEMA))
+        plans[-1].violations_col(df)
         per_build.append(len(calls))
     assert 1 <= per_build[0] <= 8, per_build
-    assert per_build[1] == per_build[0], per_build
+    assert plans[1] is plans[0] and per_build[1] == 0, per_build
     assert lowering._REPR_MEMO.get() is None
 
 
-def test_second_check_does_not_relower(spark):
+def test_second_check_does_not_relower(spark, monkeypatch, _empty_plan_cache):
     from valideer_spark.engine import ValidationEngine
     from valideer_spark.flagship import doc_schema
     from valideer_spark.sources import synth_docs
@@ -259,7 +260,7 @@ def test_second_check_does_not_relower(spark):
         calls.append(row)
         return lowered_predicate(row)
 
-    plan.lowered.predicate = counting
+    monkeypatch.setattr(plan.lowered, "predicate", counting)
     eng.check(docs)
     assert len(calls) == 1
     report = eng.check(docs)

@@ -16,32 +16,44 @@ if [ "$h1" != "$h2" ]; then
   exit 1
 fi
 echo "oracle text hash stable: $h1"
-echo "== flagship predicate text is process-independent (PYTHONHASHSEED) =="
+echo "== flagship plan text is process-independent and cache-independent =="
 # the lowered plan text keys Spark's codegen cache and makes plans
 # comparable across processes; lambda variable names (x_12) come from a
-# JVM-wide counter, so they are normalised before comparing
+# JVM-wide counter, so they are normalised before comparing. The
+# violations tree of a cached plan must read like one lowered afresh.
 predicate_hash() {
   PYTHONHASHSEED=$1 python - <<'PY' 2>/dev/null | tail -1
 import hashlib, re
 from pyspark.sql import SparkSession
 from valideer_spark.flagship import doc_schema
-from valideer_spark.plans import compile_plan
+from valideer_spark.plans import compile_plan, frame
 from valideer_spark.sources import DOCS_SCHEMA
 spark = (SparkSession.builder.master("local[1]")
          .config("spark.ui.enabled", "false").getOrCreate())
 df = spark.createDataFrame([], DOCS_SCHEMA)
-text = str(compile_plan(doc_schema(), DOCS_SCHEMA).is_valid_col(df))
+norm = lambda col: re.sub(r"\b([a-z])_\d+\b", r"\1", str(col))
+text = norm(compile_plan(doc_schema(), DOCS_SCHEMA).is_valid_col(df))
+hit = norm(compile_plan(doc_schema(), DOCS_SCHEMA).violations_col(df))
+frame._plans.clear()
+fresh = norm(compile_plan(doc_schema(), DOCS_SCHEMA).violations_col(df))
 spark.stop()
-print(hashlib.md5(re.sub(r"\b([a-z])_\d+\b", r"\1", text).encode()).hexdigest())
+if hit != fresh:
+    print("cache-dependent")
+else:
+    print(hashlib.md5((text + "\x1e" + hit).encode()).hexdigest())
 PY
 }
 p1=$(predicate_hash 101)
 p2=$(predicate_hash 202)
-if [ -z "$p1" ] || [ "$p1" != "$p2" ]; then
-  echo "FAIL: flagship predicate text differs across PYTHONHASHSEED ($p1 vs $p2)"
+if [ "$p1" = "cache-dependent" ] || [ "$p2" = "cache-dependent" ]; then
+  echo "FAIL: a cached flagship violations tree differs from a fresh lowering"
   exit 1
 fi
-echo "predicate text hash stable: $p1"
+if [ -z "$p1" ] || [ "$p1" != "$p2" ]; then
+  echo "FAIL: flagship predicate/violations text differs across PYTHONHASHSEED ($p1 vs $p2)"
+  exit 1
+fi
+echo "predicate and violations text hash stable: $p1"
 echo "== correctness gate (sf0.01) =="
 timeout 1200 python tools/check_oracle.py
 echo "== entry smoke =="

@@ -319,18 +319,13 @@ class ValidationEngine:
         self.checkpoint_format = checkpoint_format
         self.checkpoint_table = checkpoint_table
         self.checkpoint_snapshots = checkpoint_snapshots
-        self._plan: Optional[FramePlan] = None
-        self._plan_schema: Optional[str] = None
 
     def plan_for(self, df: DataFrame) -> FramePlan:
-        # compile once per (engine, frame schema) — the eager-compile
-        # memoization analog of reference base.py:158-160; recompile when a
-        # frame with a different schema arrives
-        schema_key = df.schema.simpleString()
-        if self._plan is None or self._plan_schema != schema_key:
-            self._plan = compile_plan(self.schema, df)
-            self._plan_schema = schema_key
-        return self._plan
+        """The schema compiled against ``df``'s document columns: lowered
+        once per process per (schema, row type) and shared with every
+        engine over an equal schema (:func:`~.plans.compile_plan`), the
+        eager-compile analog of reference base.py:158-160."""
+        return compile_plan(self.schema, df)
 
     def check(self, df: DataFrame, adapt: bool = False) -> CheckReport:
         plan = self.plan_for(df)

@@ -8,11 +8,16 @@ equivalent of the reference's ``validate(value)`` over a JSON object
 
 from __future__ import annotations
 
+import re
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field
-from typing import Any, Callable, Dict, Optional, Sequence, Tuple
+from typing import Any, Callable, Dict, List, Optional, Sequence, Set, Tuple
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..core.registry import Validator, parse
 from .lowering import VIOLATION_TYPE, Lowered, _count_of, lower, repr_memo
@@ -84,7 +89,9 @@ class FramePlan:
     Each builder's Column tree is made once per plan and row column set:
     lowering a wide schema costs thousands of py4j calls, and a frame with
     the same document columns reads the same tree. Within one build, each
-    value repr is built once (:func:`~.lowering.repr_memo`).
+    value repr is built once (:func:`~.lowering.repr_memo`). Plans are
+    shared by every engine in the process (:func:`compile_plan`), so the
+    trees are too.
     """
 
     validator: Validator
@@ -185,19 +192,92 @@ class FramePlan:
         return explode_violations(annotated, id_cols)
 
 
+#: how many compiled plans the process keeps (least recently used evicted)
+_PLAN_CACHE_SIZE = 32
+
+#: compiled plans shared by every engine: key -> (plan, objects the key
+#: names by id, kept alive so no id is reused while the entry lives)
+_plans: "OrderedDict[tuple, Tuple[FramePlan, List[Any]]]" = OrderedDict()
+_plans_lock = threading.Lock()
+
+_VALUE_TYPES = (type(None), bool, int, str, bytes)
+
+
+def _fingerprint(obj: Any, pinned: List[Any], active: Set[int]) -> Any:
+    """A hashable key equal for structurally equal validator trees: values
+    by type and value (floats by ``repr``), containers in order (sets
+    sorted), regexps by pattern and flags, Spark types by JSON, validators
+    by class and instance attributes. Anything else (callables, sentinels,
+    classes, cycles) is keyed by identity and appended to ``pinned``."""
+    kind = type(obj)
+    if kind is float:
+        return (kind, repr(obj))
+    if kind in _VALUE_TYPES:
+        return (kind, obj)
+    if kind is re.Pattern:
+        return (kind, obj.pattern, obj.flags)
+    if isinstance(obj, T.DataType):
+        return (T.DataType, obj.json())
+    attrs = getattr(obj, "__dict__", None) if isinstance(obj, Validator) else None
+    if id(obj) not in active and (
+        attrs is not None or kind in (list, tuple, dict, set, frozenset)
+    ):
+        active.add(id(obj))
+        try:
+            if attrs is not None:
+                return (kind, _fingerprint(attrs, pinned, active))
+            if kind is dict:
+                return (kind,) + tuple(
+                    (_fingerprint(k, pinned, active), _fingerprint(v, pinned, active))
+                    for k, v in obj.items()
+                )
+            parts = [_fingerprint(x, pinned, active) for x in obj]
+            if kind in (set, frozenset):
+                parts.sort(key=repr)
+            return (kind,) + tuple(parts)
+        finally:
+            active.discard(id(obj))
+    pinned.append(obj)
+    return (object, id(obj))
+
+
 def compile_plan(schema: Any, df_or_schema) -> FramePlan:
     """Compile a schema (mini-language or Validator) against a DataFrame or
-    StructType."""
+    StructType.
+
+    Lowering is paid once per process per (schema, row type): the last
+    ``_PLAN_CACHE_SIZE`` plans are shared by every caller, so a fresh
+    engine over an equal schema reuses the plan and the Column trees its
+    :class:`FramePlan` has built. The key is the validator's
+    :func:`_fingerprint`, the JSON of the document columns' type
+    (nullability included: lowering reads ``containsNull``) and the active
+    SparkContext, since the trees are JVM handles and a kernel-fallback
+    UDF is bound to its context."""
     validator = parse(schema)
     struct = (
         df_or_schema.schema if isinstance(df_or_schema, DataFrame) else df_or_schema
     )
-    from pyspark.sql import types as T
-
     struct = T.StructType(
         [f for f in struct.fields if f.name not in RESERVED_COLUMNS]
     )
-    return FramePlan(validator=validator, lowered=lower(validator, struct))
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return FramePlan(validator=validator, lowered=lower(validator, struct))
+    pinned: List[Any] = [sc]
+    key = (_fingerprint(validator, pinned, set()), struct.json(), id(sc))
+    with _plans_lock:
+        hit = _plans.get(key)
+        if hit is not None:
+            _plans.move_to_end(key)
+            return hit[0]
+    plan = FramePlan(validator=validator, lowered=lower(validator, struct))
+    with _plans_lock:
+        # setdefault: callers racing on a first compile all get one plan
+        plan = _plans.setdefault(key, (plan, pinned))[0]
+        _plans.move_to_end(key)
+        while len(_plans) > _PLAN_CACHE_SIZE:
+            _plans.popitem(last=False)
+    return plan
 
 
 def expect_frame_schema(df_or_schema, schema: Any) -> None:

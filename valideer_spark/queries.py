@@ -44,26 +44,14 @@ def _docs(spark: SparkSession) -> DataFrame:
     return synth_docs(spark, FLAGSHIP_N_DOCS)
 
 
-# process-level engine memo: each ValidationEngine compiles its check plan
-# once per (schema, frame schema); the gate runs many queries against the
-# same flagship/typed schemas, so sharing engines avoids recompiling the
-# ~1-2s expression tree per query (NOTES r1 cold-start item)
-_ENGINES: Dict[tuple, ValidationEngine] = {}
-
-
 def _flagship_engine(buckets: int = 256) -> ValidationEngine:
-    key = ("flagship", buckets)
-    if key not in _ENGINES:
-        _ENGINES[key] = ValidationEngine(doc_schema(), buckets=buckets)
-    return _ENGINES[key]
+    return ValidationEngine(doc_schema(), buckets=buckets)
 
 
 def _typed_engine() -> ValidationEngine:
     from .sources.typed import typed_schema
 
-    if "typed" not in _ENGINES:
-        _ENGINES["typed"] = ValidationEngine(typed_schema(), id_col="rec_id")
-    return _ENGINES["typed"]
+    return ValidationEngine(typed_schema(), id_col="rec_id")
 
 
 def _docs_cte() -> str:
@@ -125,16 +113,13 @@ FROM docs
 def _flagship_mod64_engine() -> ValidationEngine:
     """Gate engine with an externally-computable bucketing (numeric
     doc_id suffix mod 64) so DuckDB can rebuild per-partition rows."""
-    key = ("flagship-mod64",)
-    if key not in _ENGINES:
-        _ENGINES[key] = ValidationEngine(
-            doc_schema(),
-            buckets=64,
-            partition_expr=lambda c: F.pmod(
-                F.substring(c, 5, 12).cast("long"), F.lit(64)
-            ).cast("int"),
-        )
-    return _ENGINES[key]
+    return ValidationEngine(
+        doc_schema(),
+        buckets=64,
+        partition_expr=lambda c: F.pmod(
+            F.substring(c, 5, 12).cast("long"), F.lit(64)
+        ).cast("int"),
+    )
 
 
 def q_flagship_partition_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
