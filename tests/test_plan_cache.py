@@ -220,8 +220,14 @@ def test_cached_trees_plan_like_a_rebuild(spark, which):
         schema, df = doc_schema, synth_docs(spark, 20)
     else:
         schema, df = typed_schema, typed_rows(spark, 20)
-    compile_plan(schema(), df)
-    hit = _optimised_text(df, compile_plan(schema(), df))
+    first = compile_plan(schema(), df)
+    _optimised_text(df, first)
+    built = dict(first._columns)
+    # the hit reads the trees the first compile built, not new ones
+    cached = compile_plan(schema(), df)
+    hit = _optimised_text(df, cached)
+    assert cached is first and cached._columns.keys() == built.keys()
+    assert all(cached._columns[k] is col for k, col in built.items())
     with frame._plans_lock:
         frame._plans.clear()
     assert _optimised_text(df, compile_plan(schema(), df)) == hit
