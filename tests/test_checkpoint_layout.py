@@ -11,8 +11,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from valideer_spark.engine import ValidationEngine, write_partitioned
+from valideer_spark.engine import ValidationEngine, write_partitioned, write_quarantine
 from valideer_spark.flagship import doc_schema
+from valideer_spark.plans import explode_violations
 from valideer_spark.sources import synth_docs
 from valideer_spark.sources.iceberg import (
     checkpoint_merge_sql,
@@ -161,8 +162,8 @@ def test_unreadable_checkpoint_raises(spark, tmp_path):
 
 def test_all_done_resume_scans_nothing(spark, tmp_path, count_jobs, monkeypatch):
     """With every bucket checkpointed, a resume over the write_partitioned
-    layout reads the checkpoint and nothing else: at most 2 jobs (the
-    checkpoint's schema and its ids), no predicate planned, no input file
+    layout reads the checkpoint and nothing else: one job (its ids; the
+    schema is declared, not inferred), no predicate planned, no input file
     read, nothing appended; it returns no rows with the checkpoint's
     columns."""
     docs = synth_docs(spark, 400)
@@ -186,10 +187,50 @@ def test_all_done_resume_scans_nothing(spark, tmp_path, count_jobs, monkeypatch)
 
     monkeypatch.setattr(ValidationEngine, "check", no_check)
     out, jobs = count_jobs(lambda: eng.run_with_checkpoint(stored, run_id="r2"))
-    assert jobs <= 2
+    assert jobs <= 1
     assert out.collect() == []
     assert out.columns == spark.read.parquet(ck).columns
     assert _listing(ck) == listing
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "iceberg"])
+def test_declared_checkpoint_schema_is_the_stored_one(spark, tmp_path, fmt):
+    """A resume reads the checkpoint with ``_CHECKPOINT_SCHEMA`` instead of
+    inferring it: that schema is exactly what a run stores, on the parquet
+    checkpoint and on the jarless Iceberg emulation."""
+    from valideer_spark.engine import _CHECKPOINT_SCHEMA
+
+    if fmt == "iceberg" and iceberg_available(spark):
+        pytest.skip("iceberg present: the checkpoint is a table")
+    eng = ValidationEngine(
+        doc_schema(),
+        buckets=4,
+        checkpoint_dir=str(tmp_path),
+        checkpoint_format=fmt,
+        checkpoint_table="ckpt.partition_checkpoints",
+    )
+    docs = synth_docs(spark, 200)
+    assert eng.run_with_checkpoint(docs, run_id="r1").count() == 4
+    assert spark.read.parquet(eng._checkpoint_path()).schema == _CHECKPOINT_SCHEMA
+    assert eng._checkpoint_rows(spark).schema == _CHECKPOINT_SCHEMA
+    assert eng.run_with_checkpoint(docs, run_id="r2").count() == 0
+
+
+def test_custom_long_partition_expr_resumes_to_nothing(spark, tmp_path):
+    """A custom ``partition_expr`` stores a ``part_id`` of its own type (a
+    long here, not the default bucketing's int), so its checkpoint is read
+    with an inferred schema, and a resume over done buckets validates
+    nothing."""
+    docs = synth_docs(spark, 200)
+    eng = ValidationEngine(
+        doc_schema(),
+        buckets=4,
+        partition_expr=lambda c: F.pmod(F.substring(c, 5, 12).cast("long"), F.lit(4)),
+        checkpoint_dir=str(tmp_path),
+    )
+    assert eng.run_with_checkpoint(docs, run_id="r1").count() == 4
+    assert dict(spark.read.parquet(eng._checkpoint_path()).dtypes)["part_id"] == "bigint"
+    assert eng.run_with_checkpoint(docs, run_id="r2").count() == 0
 
 
 def test_one_checkpoint_file_per_run(spark, tmp_path):
@@ -367,6 +408,67 @@ def test_write_partitioned_files_per_bucket_bounds_files(spark, tmp_path):
     assert max(len(fs) for fs in files.values()) == 2
     back = spark.read.parquet(path).select(*docs.columns)
     assert sorted(map(repr, back.collect())) == sorted(map(repr, docs.collect()))
+
+
+@pytest.fixture
+def shuffle_conf(spark):
+    """``shuffle_conf(aqe, partitions)`` sets AQE and the shuffle width
+    for one test and restores both afterwards."""
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    saved = {k: spark.conf.get(k) for k in keys}
+
+    def set_conf(aqe, partitions):
+        spark.conf.set(keys[0], str(aqe).lower())
+        spark.conf.set(keys[1], str(partitions))
+
+    yield set_conf
+    for k, v in saved.items():
+        spark.conf.set(k, v)
+
+
+def _one_file_per_bucket(path, frame, cols):
+    """Every ``_part_id=`` directory under ``path`` holds exactly one
+    parquet file, one directory per bucket of ``frame``, and the layout
+    reads back ``frame``'s rows (order-free)."""
+    part_dirs = sorted(d for d in os.listdir(path) if d.startswith("_part_id="))
+    buckets = sorted(
+        "_part_id=%d" % r[0] for r in frame.select("_part_id").distinct().collect()
+    )
+    assert part_dirs == buckets
+    for d in part_dirs:
+        files = [f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+    back = frame.sparkSession.read.parquet(path).select(*cols)
+    assert sorted(map(repr, back.collect())) == sorted(
+        map(repr, frame.select(*cols).collect())
+    )
+
+
+@pytest.mark.parametrize("aqe", [True, False])
+@pytest.mark.parametrize("partitions", [3, 64])
+def test_one_file_per_bucket_under_any_shuffle_width(
+    spark, tmp_path, shuffle_conf, aqe, partitions
+):
+    """A bucketed write repartitions by ``_part_id`` alone, so its width
+    follows ``spark.sql.shuffle.partitions`` (below or above ``buckets``)
+    and AQE may coalesce it, yet every bucket directory of
+    ``write_partitioned`` and of both ``write_quarantine`` sinks holds one
+    file, with the rows the check produced."""
+    shuffle_conf(aqe, partitions)
+    docs = synth_docs(spark, 400)
+    path = str(tmp_path / "docs")
+    write_partitioned(docs, path, buckets=8)
+    bucketed = docs.withColumn("_part_id", F.pmod(F.xxhash64("doc_id"), F.lit(8)).cast("int"))
+    _one_file_per_bucket(path, bucketed, bucketed.columns)
+
+    report = ValidationEngine(doc_schema(), buckets=8).check(docs)
+    valid, bad = str(tmp_path / "valid"), str(tmp_path / "bad")
+    write_quarantine(report, valid, bad)
+    annotated = report.annotated
+    payload = [*docs.columns, "_part_id"]
+    _one_file_per_bucket(valid, annotated.filter(F.col("_valid")), payload)
+    quarantined = explode_violations(annotated, payload, prefix="violation_")
+    _one_file_per_bucket(bad, quarantined, quarantined.columns)
 
 
 def test_write_partitioned_rejects_unsupported_fmt(spark, tmp_path):

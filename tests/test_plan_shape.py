@@ -3,6 +3,7 @@ PLAN, not just the results — column pruning reaches the parquet scan,
 small reference sides broadcast, predicates stay in whole-stage codegen."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -143,6 +144,111 @@ def test_checkpoint_resume_filters_done_ids_without_join(spark, tmp_path):
     value, ids = resume[0]
     assert ids == done
     assert any(e["class"].endswith(".XxHash64") for e in value)
+
+
+def test_no_violation_tree_where_nothing_reads_it(
+    spark, tmp_path, monkeypatch, _empty_plan_cache
+):
+    """Checking a frame, a checkpointed run and a report's verdicts never
+    ask for the violation tree; ``write_quarantine`` asks once, for its
+    quarantine sink, and ``annotated`` once, on its first read. The
+    verdict aggregation a checkpointed run collects analyses no
+    ``_violations`` column and formats no message."""
+    import pyspark.sql.classic.dataframe as classic
+
+    from valideer_spark.engine import ValidationEngine, write_quarantine
+    from valideer_spark.flagship import doc_schema
+    from valideer_spark.plans import FramePlan
+    from valideer_spark.sources import synth_docs
+
+    calls = []
+    violations_col = FramePlan.violations_col
+
+    def counting(self, df):
+        calls.append(df)
+        return violations_col(self, df)
+
+    monkeypatch.setattr(FramePlan, "violations_col", counting)
+    # a parquet input: the generator's own plan formats its doc ids
+    path = str(tmp_path / "docs")
+    synth_docs(spark, 200).write.parquet(path)
+    docs = spark.read.parquet(path)
+    eng = ValidationEngine(doc_schema(), buckets=4, checkpoint_dir=str(tmp_path / "ck"))
+    report = eng.check(docs)
+    assert len(calls) == 0
+    try:
+        assert len(report.verdicts().collect()) == 4
+    finally:
+        report.unpersist()
+    assert len(calls) == 0
+
+    collected = []
+    collect = classic.DataFrame.collect
+
+    def spy(self):
+        collected.append(self)
+        return collect(self)
+
+    with monkeypatch.context() as patched:
+        patched.setattr(classic.DataFrame, "collect", spy)
+        run = eng.run_with_checkpoint(docs, run_id="r1")
+    assert len(run.collect()) == 4
+    assert len(calls) == 0
+    verdicts = [df for df in collected if "n_docs" in df.columns]
+    assert len(verdicts) == 1
+    analysed = verdicts[0]._jdf.queryExecution().analyzed().toString()
+    # attributes print as name#id; n_violations and _n_violations differ
+    assert re.search(r"(?<!\w)_n_violations#", analysed)
+    assert not re.search(r"(?<!\w)_violations#", analysed)
+    assert "format_string(" not in analysed
+
+    write_quarantine(eng.check(docs), str(tmp_path / "valid"), str(tmp_path / "bad"))
+    assert len(calls) == 1
+    report = eng.check(docs)
+    assert report.annotated is report.annotated
+    assert len(calls) == 2
+
+
+def _written_plans(monkeypatch, write):
+    """The executed plans of the frames ``write()`` hands to a parquet
+    writer."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return parquet(self, path, *args, **kwargs)
+
+    with monkeypatch.context() as patched:
+        patched.setattr(DataFrameWriter, "parquet", spy)
+        write()
+    return plans
+
+
+def test_bucketed_write_shuffle_is_coalescible(spark, tmp_path, monkeypatch):
+    """With one file per bucket the write's shuffle is a repartition by
+    column (``REPARTITION_BY_COL``), which AQE may coalesce, not one by a
+    fixed count of ``buckets`` tasks; a salted write keeps its count of
+    buckets × files_per_bucket, since spreading a bucket is its point."""
+    from valideer_spark.engine import write_partitioned
+    from valideer_spark.sources import synth_docs
+
+    docs = synth_docs(spark, 100)
+    plans = _written_plans(
+        monkeypatch, lambda: write_partitioned(docs, str(tmp_path / "a"), buckets=5)
+    )
+    assert len(plans) == 1
+    assert "REPARTITION_BY_COL" in plans[0] and "REPARTITION_BY_NUM" not in plans[0]
+    plans = _written_plans(
+        monkeypatch,
+        lambda: write_partitioned(
+            docs, str(tmp_path / "b"), buckets=5, files_per_bucket=3
+        ),
+    )
+    assert len(plans) == 1
+    assert ", 15), REPARTITION_BY_NUM" in plans[0]
 
 
 def test_lsh_candidates_plan_has_no_join(spark):

@@ -74,11 +74,12 @@ def test_dropping_the_report_releases_its_frame(spark, cache_manager):
 
 def test_racing_first_calls_persist_one_frame(spark, cache_manager):
     report = ValidationEngine(doc_schema(), buckets=8).check(synth_docs(spark, 100))
-    frames = []
+    frames, annotated = [], []
     barrier = threading.Barrier(8)
 
     def first_call():
         barrier.wait(timeout=60)
+        annotated.append(report.annotated)
         frames.append(report._frame())
 
     interval = sys.getswitchinterval()
@@ -93,6 +94,7 @@ def test_racing_first_calls_persist_one_frame(spark, cache_manager):
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads)
     assert len(frames) == 8 and all(f is frames[0] for f in frames)
+    assert len(annotated) == 8 and all(a is annotated[0] for a in annotated)
     report.unpersist()
     assert cache_manager.isEmpty()
 
@@ -114,3 +116,23 @@ def test_checkpoint_quarantine_and_stream_cache_nothing(spark, tmp_path, cache_m
     assert spark.read.parquet(os.path.join(str(tmp_path / "out"), "violations")).count() > 0
     gc.collect()
     assert cache_manager.isEmpty()
+
+
+@pytest.mark.parametrize(
+    "adapt, engine_cols",
+    [
+        (False, ["_valid", "_violations", "_n_violations", "_part_id"]),
+        (True, ["_valid", "_violations", "_n_violations", "_adapted", "_part_id"]),
+    ],
+)
+def test_annotated_columns_are_built_on_first_read(spark, adapt, engine_cols):
+    """``checked`` holds no violation tree; ``annotated`` adds
+    ``_violations`` between ``_valid`` and ``_n_violations`` on its first
+    read, and every later read returns the same frame."""
+    report = ValidationEngine(doc_schema(), buckets=8).check(
+        synth_docs(spark, 50), adapt=adapt
+    )
+    lean = [c for c in engine_cols if c != "_violations"]
+    assert report.checked.columns == ["doc_id", "spans", *lean]
+    assert report.annotated.columns == ["doc_id", "spans", *engine_cols]
+    assert report.annotated is report.annotated

@@ -72,6 +72,48 @@ df = m.entry(spark)
 print("entry rows:", df.count(), df.schema.simpleString())
 spark.stop()
 PY
+echo "== quarantine layout under a wide shuffle =="
+# bucketed writes repartition by _part_id alone, so their width follows
+# spark.sql.shuffle.partitions; one file per bucket must hold at 64 too
+python - <<'PY'
+import glob, os, shutil, sys, tempfile
+from pyspark.sql import SparkSession, functions as F
+from valideer_spark.engine import ValidationEngine, write_quarantine
+from valideer_spark.flagship import doc_schema
+from valideer_spark.sources import synth_docs
+spark = (SparkSession.builder.master("local[4]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.adaptive.enabled", "true")
+         .config("spark.sql.shuffle.partitions", "64").getOrCreate())
+spark.sparkContext.setLogLevel("ERROR")
+N_DOCS = 2000
+docs = synth_docs(spark, N_DOCS)
+report = ValidationEngine(doc_schema(), buckets=4).check(docs)
+n_violations = report.verdicts().agg(F.sum("n_violations")).collect()[0][0]
+report.unpersist()
+out = tempfile.mkdtemp(prefix="quarantine-layout-")
+valid, bad = os.path.join(out, "valid"), os.path.join(out, "bad")
+write_quarantine(report, valid, bad)
+errors = []
+for sink in (valid, bad):
+    for d in sorted(glob.glob(os.path.join(sink, "_part_id=*"))):
+        n = len(glob.glob(os.path.join(d, "*.parquet")))
+        if n != 1:
+            errors.append("%s holds %d files" % (d, n))
+n_valid = spark.read.parquet(valid).count()
+quarantined = spark.read.parquet(bad)
+n_invalid = quarantined.select("doc_id").distinct().count()
+n_rows = quarantined.count()
+spark.stop()
+shutil.rmtree(out)
+print("valid %d + quarantined docs %d of %d; quarantine rows %d of %d violations"
+      % (n_valid, n_invalid, N_DOCS, n_rows, n_violations))
+if n_valid + n_invalid != N_DOCS or n_rows != n_violations:
+    errors.append("sink rows do not add up to the input")
+if errors:
+    print("FAIL: " + "; ".join(errors))
+    sys.exit(1)
+PY
 echo "== bench (sf0.1) =="
 python bench.py
 echo "== build spark-submit py-files artifact =="

@@ -21,7 +21,9 @@ output reads, and releases it with the report. A checkpointed run reads
 the completed bucket ids once and filters the remaining rows on them,
 which Catalyst turns into a partition-pruned scan when the storage layout
 is bucketed by the same key; a resume with every bucket done returns
-without planning the predicate or reading the input.
+without planning the predicate or reading the input. Only the outputs
+that read violations plan the violation tree: a check, a checkpointed run
+and the verdicts count violations natively.
 """
 
 from __future__ import annotations
@@ -89,13 +91,20 @@ def _write_bucketed(
     of ``id_col``), so the file count is bounded by
     buckets × files_per_bucket regardless of cluster size; raise
     ``files_per_bucket`` when per-bucket volume (corpus/buckets) is
-    larger than one task should write alone."""
+    larger than one task should write alone.
+
+    With one file per bucket the repartition is by column only, with no
+    partition count: each bucket hashes to one shuffle partition, and AQE
+    coalesces only whole partitions, so the bound holds while a small
+    write runs in few tasks. The write's parallelism then follows
+    ``spark.sql.shuffle.partitions`` (:func:`~.conf.recommended_conf`
+    sets it to the cores), not ``buckets``."""
     if fmt not in ("parquet", "iceberg"):
         raise ValueError(
             "unsupported fmt %r: expected 'parquet' or 'iceberg'" % (fmt,)
         )
     if files_per_bucket <= 1:
-        df = df.repartition(buckets, F.col("_part_id"))
+        df = df.repartition(F.col("_part_id"))
     else:
         # murmur3, not the xxhash64 behind _part_id: a salt taken from the
         # same hash would repeat the bucket's residue and leave one task
@@ -127,7 +136,9 @@ def write_partitioned(
     band (e.g. 1024 → ~400 MB each) — the write is bucket-aligned
     (:func:`_write_bucketed`), so there are at most
     buckets × files_per_bucket files, never tasks × buckets, while resume
-    and per-partition verdicts stay aligned with the checkpoint key."""
+    and per-partition verdicts stay aligned with the checkpoint key. With
+    ``files_per_bucket=1`` the write runs in as many tasks as AQE leaves
+    of ``spark.sql.shuffle.partitions``, each holding whole buckets."""
     out = df.withColumn("_part_id", deterministic_partition_id(F.col(id_col), buckets))
     _write_bucketed(out, path, fmt, buckets, files_per_bucket, id_col)
 
@@ -155,6 +166,11 @@ def _release_frame(frame: DataFrame, sc) -> None:
 class CheckReport:
     """The outputs of one checked frame.
 
+    ``checked`` is the input with ``_valid``, ``_n_violations`` (and
+    ``_adapted``) and ``_part_id``, but no violation tree: the paths that
+    only count or route rows never analyse one. :attr:`annotated` adds
+    ``_violations`` on its first read.
+
     The first output called persists the report's frame: ``_part_id``,
     ``_valid`` and ``_n_violations`` of every row, and the document
     columns of invalid rows only (NULL on valid rows). Every output but
@@ -164,7 +180,7 @@ class CheckReport:
     payload, and lives until :meth:`unpersist` or until the report is
     dropped."""
 
-    annotated: DataFrame  # input + _part_id, _valid, _violations, _n_violations
+    checked: DataFrame  # input + _valid, _n_violations (+ _adapted), _part_id
     plan: FramePlan
     id_col: str
     buckets: int = DEFAULT_BUCKETS
@@ -174,9 +190,22 @@ class CheckReport:
     _release: Optional[weakref.finalize] = field(
         default=None, init=False, repr=False, compare=False
     )
+    _annotated_df: Optional[DataFrame] = field(
+        default=None, init=False, repr=False, compare=False
+    )
     _lock: Any = field(
         default_factory=threading.Lock, init=False, repr=False, compare=False
     )
+
+    @property
+    def annotated(self) -> DataFrame:
+        """``checked`` with ``_violations`` between ``_valid`` and
+        ``_n_violations``: every violation of every row, empty on valid
+        rows. Built on first read."""
+        with self._lock:
+            if self._annotated_df is None:
+                self._annotated_df = self.plan.with_violations(self.checked)
+            return self._annotated_df
 
     def _frame(self) -> DataFrame:
         with self._lock:
@@ -184,12 +213,12 @@ class CheckReport:
                 invalid = ~F.col("_valid")
                 docs = [
                     F.when(invalid, F.col(c)).alias(c)
-                    for c in self.annotated.columns
+                    for c in self.checked.columns
                     if c not in RESERVED_COLUMNS
                 ]
                 # document columns keep their names, so the plan's Column
                 # trees read the frame without a rebuild
-                frame = self.annotated.select(
+                frame = self.checked.select(
                     "_part_id", "_valid", "_n_violations", *docs
                 ).persist()
                 self._release = weakref.finalize(
@@ -268,9 +297,10 @@ class CheckReport:
 
     def adapted(self) -> DataFrame:
         """Adapted documents (valid rows only), schema = adapted row struct.
-        Reads ``annotated``: the report frame has no valid payloads."""
-        base = self.annotated.filter(F.col("_valid")).drop(
-            "_part_id", "_valid", "_violations", "_n_violations"
+        Reads ``checked``: the report frame has no valid payloads, and no
+        violation tree is planned."""
+        base = self.checked.filter(F.col("_valid")).drop(
+            "_part_id", "_valid", "_n_violations"
         )
         row = self.plan.adapted_col(base)
         return base.select(row.alias("doc")).select("doc.*")
@@ -354,11 +384,11 @@ class ValidationEngine:
             ).otherwise(F.coalesce(raw, F.lit(-1)))
         else:
             part = deterministic_partition_id(F.col(self.id_col), self.buckets)
-        annotated = plan.check(df, adapt=adapt, violations=True).withColumn(
+        checked = plan.check(df, adapt=adapt, violations=False).withColumn(
             "_part_id", part
         )
         return CheckReport(
-            annotated=annotated, plan=plan, id_col=self.id_col, buckets=self.buckets
+            checked=checked, plan=plan, id_col=self.id_col, buckets=self.buckets
         )
 
     # ------------------------------------------------------------------
@@ -392,7 +422,12 @@ class ValidationEngine:
         # never revalidating (and re-appending) partitions already done
         if not fs.exists(hpath):
             return None
-        return spark.read.parquet(path)
+        reader = spark.read
+        if self.partition_expr is None:
+            # the default bucketing's columns are known: no job infers them
+            # (a custom expression's part_id type follows the expression)
+            reader = reader.schema(_CHECKPOINT_SCHEMA)
+        return reader.parquet(path)
 
     def completed_partitions(self, spark: SparkSession) -> Optional[DataFrame]:
         stored = self._checkpoint_rows(spark)
@@ -460,17 +495,17 @@ class ValidationEngine:
             # partition_expr.
             df = df.filter(~F.col("_part_id").isin(done))
 
-        annotated = self.check(df, adapt=False).annotated
+        checked = self.check(df, adapt=False).checked
         if done:
             # the recomputed bucket id is never NULL (a custom expression's
             # NULL is the -1 sentinel), so NOT IN keeps exactly the rows of
             # pending buckets
-            annotated = annotated.filter(~F.col("_part_id").isin(done))
+            checked = checked.filter(~F.col("_part_id").isin(done))
         fingerprint = _input_fingerprint(df)
         t_run0 = time.time()
-        # one output read once: aggregate annotated directly, no report frame
+        # one output read once: aggregate checked directly, no report frame
         verdicts = _verdict_counts(
-            annotated.groupBy(F.col("_part_id").alias("part_id"))
+            checked.groupBy(F.col("_part_id").alias("part_id"))
         )
         # materialize the (≤ buckets) verdict rows so the lineage can carry
         # the run's measured wall time — a tiny driver round-trip, not a
@@ -525,6 +560,22 @@ _LINEAGE = (
     ("wall_secs", T.DoubleType()),
 )
 
+#: columns of a checkpoint written with the default bucketing: the
+#: verdict counts of :func:`_verdict_counts`, then the lineage
+_CHECKPOINT_SCHEMA = T.StructType(
+    [
+        T.StructField(name, typ)
+        for name, typ in (
+            ("part_id", T.IntegerType()),
+            ("n_docs", T.LongType()),
+            ("n_valid", T.LongType()),
+            ("n_violations", T.LongType()),
+            ("pass", T.BooleanType()),
+        )
+        + _LINEAGE
+    ]
+)
+
 
 def _stamped(spark: SparkSession, schema, rows, **lineage) -> DataFrame:
     """The collected verdict ``rows`` with their ``lineage`` values, as a
@@ -557,8 +608,10 @@ def write_quarantine(
     One pass over the input per sink; both writes are bucket-aligned and
     partitioned by the deterministic bucket id (:func:`_write_bucketed`
     — file count stays at most buckets × ``files_per_bucket`` instead of
-    tasks × buckets), so downstream repair jobs and checkpoint resume see
-    the same layout as :func:`write_partitioned`.
+    tasks × buckets, at any shuffle width), so downstream repair jobs and
+    checkpoint resume see the same layout as :func:`write_partitioned`.
+    Both sinks read ``report.checked``: the valid sink plans no violation
+    tree, and only the quarantine sink builds one.
     Quarantine volume is the invalid fraction only — the predicate filter
     is pushed into the scan for columnar sources.
 
@@ -568,10 +621,12 @@ def write_quarantine(
     (the prefix makes collisions unlikely; a payload column that IS named
     ``violation_*`` or ``_part_id`` is rejected up front with a clear
     error rather than silently producing duplicate output columns) —
-    one row per (document, violation), built by exploding ``_violations``
-    inline with the payload (no self-join back onto the report)."""
-    engine_cols = ("_valid", "_violations", "_n_violations")
-    payload = [c for c in report.annotated.columns if c not in engine_cols and c != "_part_id"]
+    one row per (document, violation), built by exploding the plan's
+    violations of each invalid row inline with the payload (no self-join
+    back onto the report)."""
+    checked = report.checked
+    engine_cols = ("_valid", "_n_violations", "_part_id")
+    payload = [c for c in checked.columns if c not in engine_cols]
     reserved = {
         "violation_index",
         "violation_path",
@@ -586,12 +641,15 @@ def write_quarantine(
             "columns; rename them before calling write_quarantine" % (clashes,)
         )
 
-    valid = report.annotated.filter(F.col("_valid")).select(*payload, "_part_id")
+    valid = checked.filter(F.col("_valid")).select(*payload, "_part_id")
     _write_bucketed(
         valid, valid_path, fmt, report.buckets, files_per_bucket, report.id_col
     )
     bad = explode_violations(
-        report.annotated, [*payload, "_part_id"], prefix="violation_"
+        checked,
+        [*payload, "_part_id"],
+        prefix="violation_",
+        violations=report.plan.violations_col(checked),
     )
     _write_bucketed(
         bad, quarantine_path, fmt, report.buckets, files_per_bucket, report.id_col

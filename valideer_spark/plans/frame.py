@@ -152,33 +152,40 @@ class FramePlan:
         read `_n_violations` prune the violation structs out of their plan;
         :func:`explode_violations` turns the output into one row per
         violation, building each violation array once per invalid row.
-        ``violations=False`` leaves out both violation columns.
+        ``violations=False`` leaves out `_violations` only: the frame then
+        never analyses the violation tree, and :meth:`with_violations`
+        adds the column later.
         """
         out = df.withColumn("_valid", self.is_valid_col(df))
-        if violations:
-            out = out.withColumn(
-                "_violations",
-                F.when(
-                    F.col("_valid"), F.array().cast(VIOLATION_TYPE)
-                ).otherwise(self.violations_col(df)),
-            )
-            # native violation COUNT (== size(_violations), asserted by
-            # tests/test_violation_count.py) without building the
-            # repr-heavy violation structs: verdict aggregations read this
-            # column, so Catalyst prunes _violations out of the verdict
-            # plan entirely and invalid rows stay cheap on that path
-            out = out.withColumn(
-                "_n_violations",
-                F.when(F.col("_valid"), F.lit(0)).otherwise(
-                    self.violation_count_col(df)
-                ),
-            )
+        # native violation COUNT (== size(_violations), asserted by
+        # tests/test_violation_count.py) without building the repr-heavy
+        # violation structs: verdict aggregations read this column, so
+        # they never plan the violation structs
+        out = out.withColumn(
+            "_n_violations",
+            F.when(F.col("_valid"), F.lit(0)).otherwise(
+                self.violation_count_col(df)
+            ),
+        )
         if adapt:
             out = out.withColumn(
                 "_adapted",
                 F.when(F.col("_valid"), self.adapted_col(df)),
             )
-        return out
+        return self.with_violations(out) if violations else out
+
+    def with_violations(self, checked: DataFrame) -> DataFrame:
+        """A ``check(violations=False)`` output with `_violations` added
+        just before `_n_violations`: the columns of ``check()``."""
+        violations = F.when(
+            F.col("_valid"), F.array().cast(VIOLATION_TYPE)
+        ).otherwise(self.violations_col(checked))
+        cols = []
+        for c in checked.columns:
+            if c == "_n_violations":
+                cols.append(violations.alias("_violations"))
+            cols.append(F.col(c))
+        return checked.select(*cols)
 
     def violations_schema(self):
         return VIOLATION_TYPE
