@@ -1,9 +1,11 @@
 """Checkpoint/resume storage-layout behavior + Iceberg code path.
 
-The Iceberg runtime is absent in this container, so executable coverage
-is: generated MERGE INTO SQL (exact text), availability probe, graceful
-fallback; the partition-pruned resume is proven on the parquet layout
-(same pruning mechanics Iceberg applies from table metadata).
+Without the Iceberg runtime, executable coverage of the Iceberg side is
+the generated MERGE INTO SQL (exact text) and the availability probe;
+``checkpoint_format='iceberg'`` then runs the parquet checkpoint, so the
+layout tests run over both formats. The partition-pruned resume is
+proven on the parquet layout (same pruning mechanics Iceberg applies
+from table metadata).
 """
 
 import os
@@ -160,18 +162,40 @@ def test_unreadable_checkpoint_raises(spark, tmp_path):
     assert _listing(ck) == listing
 
 
-def test_all_done_resume_scans_nothing(spark, tmp_path, count_jobs, monkeypatch):
+def _jarless(spark, fmt):
+    if fmt == "iceberg" and iceberg_available(spark):
+        pytest.skip("iceberg present: the checkpoint is a table")
+
+
+def _engine(tmp_path, fmt, buckets):
+    return ValidationEngine(
+        doc_schema(),
+        buckets=buckets,
+        checkpoint_dir=str(tmp_path),
+        checkpoint_format=fmt,
+        checkpoint_table="ckpt.partition_checkpoints",
+    )
+
+
+def test_unknown_checkpoint_format_raises():
+    with pytest.raises(ValueError, match="unsupported checkpoint_format 'delta'"):
+        ValidationEngine(doc_schema(), checkpoint_format="delta")
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "iceberg"])
+def test_all_done_resume_scans_nothing(
+    spark, tmp_path, count_jobs, monkeypatch, fmt
+):
     """With every bucket checkpointed, a resume over the write_partitioned
     layout reads the checkpoint and nothing else: one job (its ids; the
     schema is declared, not inferred), no predicate planned, no input file
     read, nothing appended; it returns no rows with the checkpoint's
     columns."""
+    _jarless(spark, fmt)
     docs = synth_docs(spark, 400)
     data_path = str(tmp_path / "docs_bucketed")
     write_partitioned(docs, data_path, buckets=8)
-    eng = ValidationEngine(
-        doc_schema(), buckets=8, checkpoint_dir=str(tmp_path / "ckpt")
-    )
+    eng = _engine(tmp_path / "ckpt", fmt, 8)
     assert eng.run_with_checkpoint(spark.read.parquet(data_path), run_id="r1").count() == 8
     ck = eng._checkpoint_path()
     listing = _listing(ck)
@@ -196,19 +220,12 @@ def test_all_done_resume_scans_nothing(spark, tmp_path, count_jobs, monkeypatch)
 @pytest.mark.parametrize("fmt", ["parquet", "iceberg"])
 def test_declared_checkpoint_schema_is_the_stored_one(spark, tmp_path, fmt):
     """A resume reads the checkpoint with ``_CHECKPOINT_SCHEMA`` instead of
-    inferring it: that schema is exactly what a run stores, on the parquet
-    checkpoint and on the jarless Iceberg emulation."""
+    inferring it: that schema is exactly what a run stores, in either
+    format without the Iceberg runtime."""
     from valideer_spark.engine import _CHECKPOINT_SCHEMA
 
-    if fmt == "iceberg" and iceberg_available(spark):
-        pytest.skip("iceberg present: the checkpoint is a table")
-    eng = ValidationEngine(
-        doc_schema(),
-        buckets=4,
-        checkpoint_dir=str(tmp_path),
-        checkpoint_format=fmt,
-        checkpoint_table="ckpt.partition_checkpoints",
-    )
+    _jarless(spark, fmt)
+    eng = _engine(tmp_path, fmt, 4)
     docs = synth_docs(spark, 200)
     assert eng.run_with_checkpoint(docs, run_id="r1").count() == 4
     assert spark.read.parquet(eng._checkpoint_path()).schema == _CHECKPOINT_SCHEMA
@@ -233,11 +250,13 @@ def test_custom_long_partition_expr_resumes_to_nothing(spark, tmp_path):
     assert eng.run_with_checkpoint(docs, run_id="r2").count() == 0
 
 
-def test_one_checkpoint_file_per_run(spark, tmp_path):
+@pytest.mark.parametrize("fmt", ["parquet", "iceberg"])
+def test_one_checkpoint_file_per_run(spark, tmp_path, fmt):
     """Each run appends one data file to the checkpoint, and returns the
     rows that file holds for its run id."""
+    _jarless(spark, fmt)
     docs = synth_docs(spark, 400)
-    eng = ValidationEngine(doc_schema(), buckets=8, checkpoint_dir=str(tmp_path))
+    eng = _engine(tmp_path, fmt, 8)
     ck = eng._checkpoint_path()
     bucket = F.pmod(F.xxhash64("doc_id"), F.lit(8))
     for run_id, frame, n_rows, n_files in (
@@ -249,6 +268,25 @@ def test_one_checkpoint_file_per_run(spark, tmp_path):
         assert len([f for f in _listing(ck) if f.endswith(".parquet")]) == n_files
         stored = spark.read.parquet(ck).filter(F.col("run_id") == run_id)
         assert sorted(returned) == sorted(stored.collect())
+
+
+def test_checkpoint_formats_store_the_same_rows(spark, tmp_path):
+    """Without the Iceberg runtime both formats store the same verdict
+    rows over a run on half the buckets, a run on all of them and an
+    all-done resume."""
+    _jarless(spark, "iceberg")
+    docs = synth_docs(spark, 400)
+    half = docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(4)) < 2)
+    cols = ("part_id", "n_docs", "n_valid", "n_violations", "pass", "run_id")
+    stored = {}
+    for fmt in ("parquet", "iceberg"):
+        eng = _engine(tmp_path / fmt, fmt, 4)
+        for run_id, frame in (("r1", half), ("r2", docs), ("r3", docs)):
+            eng.run_with_checkpoint(frame, run_id=run_id)
+        rows = spark.read.parquet(eng._checkpoint_path()).select(*cols)
+        stored[fmt] = sorted(rows.collect())
+    assert len(stored["parquet"]) == 4
+    assert stored["iceberg"] == stored["parquet"]
 
 
 def test_completed_at_is_stamped_after_the_work(spark, tmp_path):

@@ -1,13 +1,12 @@
 """Executable MERGE INTO semantics without the Iceberg runtime.
 
 The north-star checkpoint contract is an Iceberg table maintained with
-``MERGE INTO`` keyed by partition id (sources/iceberg.py). The jars are
-absent from this container, so the SQL text alone was the only evidence
-until round 4; ``merge_checkpoint_emulated`` now EXECUTES the same
-matched→update / not-matched→insert semantics on the parquet fallback
-layout, and the engine's ``checkpoint_format='iceberg'`` path uses it
-transparently when the runtime is missing (one row per partition,
-last-run-wins — versus the plain-parquet format's append-with-history).
+``MERGE INTO`` keyed by partition id (sources/iceberg.py).
+``merge_checkpoint_emulated`` EXECUTES the same matched→update /
+not-matched→insert semantics on a parquet directory and keeps the
+numbered snapshots that the drift operator compares. The engine does not
+write through it: without the runtime, ``checkpoint_format='iceberg'``
+runs the parquet checkpoint, which these tests also check end to end.
 """
 
 import pytest
@@ -55,10 +54,10 @@ def test_merge_emulated_upsert_semantics(spark, tmp_path):
 
 
 def test_engine_iceberg_checkpoint_emulated(spark, tmp_path):
-    """checkpoint_format='iceberg' without jars: the engine executes the
-    MERGE semantics on the parquet layout under checkpoint_dir — resume
-    converges, and the checkpoint holds ONE row per partition (last run
-    wins), not an append history."""
+    """checkpoint_format='iceberg' without jars: the engine appends to
+    the parquet checkpoint under checkpoint_dir — resume converges, and
+    the checkpoint holds ONE row per partition, as a MERGE would leave
+    it: a run only writes buckets not yet checkpointed."""
     if iceberg_available(spark):
         pytest.skip("iceberg present: real MERGE path covered elsewhere")
 
@@ -189,28 +188,3 @@ def test_merge_emulated_snapshot_time_travel(spark, tmp_path):
     # snapshot-id spelling still requires the Iceberg runtime
     with pytest.raises(ValueError, match="fmt='iceberg'"):
         read_table(spark, path, snapshot_id=2)
-
-
-def test_engine_checkpoint_snapshots_wiring(spark, tmp_path):
-    """checkpoint_snapshots=N flows through the engine's emulated MERGE:
-    each run_with_checkpoint leaves a readable snapshot of the merged
-    checkpoint state."""
-    from valideer_spark.sources.iceberg import read_table, snapshot_versions
-
-    if iceberg_available(spark):
-        pytest.skip("iceberg present: real snapshot log covered by runtime")
-    docs = synth_docs(spark, 200)
-    eng = ValidationEngine(
-        doc_schema(),
-        buckets=4,
-        checkpoint_format="iceberg",
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        checkpoint_snapshots=3,
-    )
-    eng.run_with_checkpoint(docs, run_id="r1")
-    eng.run_with_checkpoint(docs, run_id="r2")  # no-op merge, new snapshot
-    path = eng._checkpoint_path()
-    assert snapshot_versions(spark, path) == [1, 2]
-    v1 = read_table(spark, path, version=1)
-    assert v1.count() == 4
-    assert {r["run_id"] for r in v1.collect()} == {"r1"}

@@ -84,7 +84,6 @@ def test_property_parity_struct_sequence_soa(spark):
     and the native violation counter == size(violations), cell for cell.
     """
     from valideer_spark.functions import ColumnCondition
-    from valideer_spark.plans.lowering import _count_of
 
     cond = ColumnCondition(
         lambda s: (s.get("c") is not None) == (s["b"] == "t"),
@@ -140,7 +139,7 @@ def test_property_parity_struct_sequence_soa(spark):
     rows = df.select(
         node.predicate(F.col("x")).alias("ok"),
         F.size(node.violations(F.col("x"), F.lit(""))).alias("n_vio"),
-        _count_of(node)(F.col("x")).alias("n_cnt"),
+        node.count(F.col("x")).alias("n_cnt"),
     ).collect()
     for row, value in zip(rows, samples):
         as_py = (

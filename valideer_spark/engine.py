@@ -318,23 +318,25 @@ class ValidationEngine:
         checkpoint_format: str = "parquet",
         checkpoint_table: Optional[str] = None,
         partition_expr=None,
-        checkpoint_snapshots: int = 0,
     ):
-        """``checkpoint_format='iceberg'`` maintains the checkpoint with
-        ``MERGE INTO checkpoint_table`` (idempotent per partition key) —
-        requires the Iceberg runtime; the parquet default appends under
-        ``checkpoint_dir`` (the sandbox layout).
+        """With the Iceberg runtime on the classpath,
+        ``checkpoint_format='iceberg'`` maintains the checkpoint with
+        ``MERGE INTO checkpoint_table`` (idempotent per partition key).
+        Otherwise, and with the ``'parquet'`` default, each run appends
+        its verdict rows under ``checkpoint_dir``. Any other format
+        raises ``ValueError``.
 
         ``partition_expr`` contract: bucket id ``-1`` is RESERVED as the
         engine's NULL sentinel — ids the expression maps to NULL are
         coalesced into bucket -1 so the checkpoint converges for them. A
         custom expression must therefore never legitimately emit -1 (those
         rows would silently share the sentinel bucket's checkpoint
-        granularity); emitting -1 raises at check time.
-
-        ``checkpoint_snapshots=N`` (jarless Iceberg emulation only)
-        retains the last N merged checkpoint states as numbered snapshot
-        dirs readable via ``read_table(..., version=k)``."""
+        granularity); emitting -1 raises at check time."""
+        if checkpoint_format not in ("parquet", "iceberg"):
+            raise ValueError(
+                "unsupported checkpoint_format %r: expected 'parquet' or "
+                "'iceberg'" % (checkpoint_format,)
+            )
         self.schema = schema
         self.id_col = id_col
         self.buckets = buckets
@@ -348,7 +350,6 @@ class ValidationEngine:
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_format = checkpoint_format
         self.checkpoint_table = checkpoint_table
-        self.checkpoint_snapshots = checkpoint_snapshots
 
     def plan_for(self, df: DataFrame) -> FramePlan:
         """The schema compiled against ``df``'s document columns: lowered
@@ -392,9 +393,17 @@ class ValidationEngine:
         )
 
     # ------------------------------------------------------------------
-    # checkpoint / resume (parquet fallback for the Iceberg checkpoint
-    # table; MERGE INTO keyed by part_id in the Iceberg deployment)
+    # checkpoint / resume: an Iceberg table maintained with MERGE INTO
+    # keyed by part_id when the runtime is present, else parquet appends
+    # under checkpoint_dir
     # ------------------------------------------------------------------
+
+    def _iceberg_table(self, spark: SparkSession) -> bool:
+        """True when the checkpoint is an Iceberg table: the format asks
+        for one and the runtime is on the classpath."""
+        from .sources.iceberg import iceberg_available
+
+        return self.checkpoint_format == "iceberg" and iceberg_available(spark)
 
     def _checkpoint_path(self) -> str:
         assert self.checkpoint_dir, "engine built without checkpoint_dir"
@@ -402,20 +411,15 @@ class ValidationEngine:
 
     def _checkpoint_rows(self, spark: SparkSession) -> Optional[DataFrame]:
         """The stored checkpoint table, or None when nothing is
-        checkpointed yet."""
-        from .sources.iceberg import _hadoop_fs, iceberg_available, read_table
+        checkpointed yet (or no ``checkpoint_dir`` to hold one)."""
+        from .sources.iceberg import _hadoop_fs, read_table
 
-        if self.checkpoint_format == "iceberg":
-            if iceberg_available(spark):
-                if not spark.catalog.tableExists(self.checkpoint_table):
-                    return None
-                return read_table(spark, self.checkpoint_table, fmt="iceberg")
-            # jars absent: the engine maintains the same MERGE semantics
-            # on a parquet layout under checkpoint_dir (emulated branch
-            # of run_with_checkpoint); no checkpoint_dir -> nothing to
-            # read, stay graceful
-            if not self.checkpoint_dir:
+        if self._iceberg_table(spark):
+            if not spark.catalog.tableExists(self.checkpoint_table):
                 return None
+            return read_table(spark, self.checkpoint_table, fmt="iceberg")
+        if not self.checkpoint_dir:
+            return None
         path = self._checkpoint_path()
         fs, hpath = _hadoop_fs(spark, path)
         # a missing checkpoint means nothing done; an unreadable one raises,
@@ -436,8 +440,9 @@ class ValidationEngine:
     def run_with_checkpoint(
         self, df: DataFrame, run_id: Optional[str] = None
     ) -> DataFrame:
-        """Validate only partitions not yet checkpointed; upsert verdicts +
-        lineage into the checkpoint table. Returns this run's verdict rows.
+        """Validate only partitions not yet checkpointed; record verdicts +
+        lineage in the checkpoint (``MERGE INTO`` an Iceberg table, else
+        a parquet append). Returns this run's verdict rows.
 
         The checkpoint is read once per run: its completed ids, at most
         ``buckets`` of them, are collected and filter the recomputed
@@ -446,11 +451,16 @@ class ValidationEngine:
 
         A resume with every bucket done validates nothing, so it returns
         an empty frame with the checkpoint's columns without planning the
-        predicate, reading the input or appending to the checkpoint. That
-        holds for the parquet checkpoint with the default bucketing, whose
-        ids are exactly ``range(buckets)``; a custom ``partition_expr``
-        can emit any id, and the Iceberg checkpoint records a snapshot per
-        run, so those runs take the general path.
+        predicate, reading the input or writing the checkpoint. That
+        holds with the default bucketing, whose ids are exactly
+        ``range(buckets)``; a custom ``partition_expr`` can emit any id,
+        so its runs take the general path.
+
+        The parquet checkpoint, which ``checkpoint_format='iceberg'``
+        also uses without the Iceberg runtime, gets one appended file per
+        run, and the run's stamped rows are returned without a re-read.
+        Every row a run writes belongs to a bucket the checkpoint does
+        not hold yet, so appending stores what a keyed upsert would.
 
         Resume pruning: when the input carries a PHYSICAL ``_part_id``
         column (a layout written by :func:`write_partitioned`, i.e.
@@ -480,11 +490,7 @@ class ValidationEngine:
             else []
         )
         default_buckets = self.partition_expr is None
-        if (
-            self.checkpoint_format == "parquet"
-            and default_buckets
-            and set(range(self.buckets)) <= set(done)
-        ):
+        if default_buckets and set(range(self.buckets)) <= set(done):
             return stored.limit(0)
 
         if done and "_part_id" in df.columns and default_buckets:
@@ -521,30 +527,13 @@ class ValidationEngine:
             input_fingerprint=fingerprint,
             wall_secs=round(now - t_run0, 3),
         )
-        if self.checkpoint_format == "iceberg":
-            from .sources.iceberg import (
-                iceberg_available,
-                merge_checkpoint,
-                merge_checkpoint_emulated,
-                read_table,
-            )
+        if self._iceberg_table(spark):
+            from .sources.iceberg import merge_checkpoint, read_table
 
-            if iceberg_available(spark):
-                merge_checkpoint(spark, self.checkpoint_table, stamped)
-                return read_table(
-                    spark, self.checkpoint_table, fmt="iceberg"
-                ).filter(F.col("run_id") == run_id)
-            # jars absent: EXECUTE the same MERGE semantics (matched ->
-            # update, not-matched -> insert, keyed by part_id; one row
-            # per partition, last run wins) on the parquet fallback
-            # layout, instead of leaving the contract as SQL text only
-            merged = merge_checkpoint_emulated(
-                spark,
-                self._checkpoint_path(),
-                stamped,
-                keep_snapshots=self.checkpoint_snapshots,
-            )
-            return merged.filter(F.col("run_id") == run_id)
+            merge_checkpoint(spark, self.checkpoint_table, stamped)
+            return read_table(
+                spark, self.checkpoint_table, fmt="iceberg"
+            ).filter(F.col("run_id") == run_id)
         if rows:
             stamped.coalesce(1).write.mode("append").parquet(
                 self._checkpoint_path()

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core.registry import Validator, parse
-from .lowering import VIOLATION_TYPE, Lowered, _count_of, lower, repr_memo
+from .lowering import VIOLATION_TYPE, Lowered, lower, repr_memo
 
 
 # engine-reserved column names never treated as document properties: a
@@ -135,7 +135,7 @@ class FramePlan:
         """int — exactly ``size(violations_col(df))``, computed natively
         without materializing the violation structs (no value reprs or
         message formatting)."""
-        return self._memoised("count", df, _count_of(self.lowered))
+        return self._memoised("count", df, self.lowered.count)
 
     def adapted_col(self, df: DataFrame) -> Column:
         """Adapted document struct (defined where the row is valid)."""
@@ -186,9 +186,6 @@ class FramePlan:
                 cols.append(violations.alias("_violations"))
             cols.append(F.col(c))
         return checked.select(*cols)
-
-    def violations_schema(self):
-        return VIOLATION_TYPE
 
     def violation_rows(
         self, df: DataFrame, id_cols: Optional[list[str]] = None

@@ -93,8 +93,10 @@ class Lowered:
     adapt: Callable[[Column], Column]
     violations: Callable[[Column, Optional[Column]], Column]
     msg: Callable[[Column], Column]
-    #: value-independent bare message, when one exists (leaf "must be X")
-    static_msg: Optional[str] = None
+    #: violation COUNT expression: exactly ``size(violations(col, path))``
+    #: but without building the violation structs (whose value-repr +
+    #: message formatting dominates the cost for invalid rows)
+    count: Callable[[Column], Column]
     #: predicate can only fail when the value IS NULL (statically known):
     #: lets a containing Object fold the whole property check into the
     #: required-presence bit (or skip it entirely for optional properties)
@@ -114,19 +116,6 @@ class Lowered:
     #: indistinguishable after field extraction, but only the former must
     #: fail the Object type check.
     soa_null_strict: bool = False
-    #: violation COUNT expression: exactly ``size(violations(col, path))``
-    #: but without building the violation structs (whose value-repr +
-    #: message formatting dominates the cost for invalid rows). None →
-    #: fall back to sizing the full violations array (_count_of).
-    count: Optional[Callable[[Column], Column]] = None
-
-
-def _count_of(node: "Lowered") -> Callable[[Column], Column]:
-    """The node's violation-count expression (cheap native counter when
-    lowered, else size of the codes-only violations array)."""
-    if node.count is not None:
-        return node.count
-    return lambda col: F.size(node.violations(col, None))
 
 
 def _no_violations() -> Column:
@@ -237,7 +226,6 @@ def _leaf(
     checks: List[_Check],
     adapt: Optional[Callable[[Column], Column]] = None,
     out_type: Optional[T.DataType] = None,
-    static_msg: Optional[str] = None,
 ) -> Lowered:
     """Assemble a Lowered from an ordered list of checks (kernel fail-fast
     order); the violation/message is the FIRST failing check's."""
@@ -277,7 +265,6 @@ def _leaf(
         adapt=adapt or (lambda col: col),
         violations=violations,
         msg=msg,
-        static_msg=static_msg,
         pred_null_only=all(c.null_only for c in checks),
         # fail-fast: at most ONE violation from a leaf
         count=lambda col: F.when(predicate(col), F.lit(0)).otherwise(F.lit(1)),
@@ -712,8 +699,7 @@ def kernel_fallback(
 
 def _lower_type(v: K.Type, dtype: T.DataType) -> Lowered:
     ok = _type_statically_ok(v, dtype)
-    bare = "must be %s" % v.humanized_name
-    return _leaf(dtype, _type_checks(v, dtype, ok), static_msg=bare)
+    return _leaf(dtype, _type_checks(v, dtype, ok))
 
 
 def _lower_string(v: K.String, dtype: T.DataType) -> Lowered:
@@ -737,7 +723,7 @@ def _lower_string(v: K.String, dtype: T.DataType) -> Lowered:
                 lambda col, n=n: F.lit("must be at most %d characters long" % n),
             )
         )
-    return _leaf(dtype, checks, static_msg="must be %s" % v.humanized_name if ok else None)
+    return _leaf(dtype, checks)
 
 
 def _lower_pattern(v: K.Pattern, dtype: T.DataType) -> Lowered:
@@ -758,7 +744,7 @@ def _lower_pattern(v: K.Pattern, dtype: T.DataType) -> Lowered:
             lambda col: F.lit(bare),
         )
     ]
-    return _leaf(dtype, checks, static_msg=bare)
+    return _leaf(dtype, checks)
 
 
 def _enum_literal_ok(value: Any) -> bool:
@@ -829,11 +815,7 @@ def _lower_enum(v: K.Enum, dtype: T.DataType) -> Lowered:
             return ~(col.isNull() | _nullsafe(member))
         return ~_nullsafe(member)
 
-    return _leaf(
-        dtype,
-        [_Check("enum", fails, lambda col: F.lit(bare))],
-        static_msg=bare,
-    )
+    return _leaf(dtype, [_Check("enum", fails, lambda col: F.lit(bare))])
 
 
 def _lower_range(v: K.Range, dtype: T.DataType) -> Lowered:
@@ -895,9 +877,9 @@ def _lower_range(v: K.Range, dtype: T.DataType) -> Lowered:
         return own
 
     def count(col: Column) -> Column:
-        own_c = _count_of(bounds)(adapted(col))
+        own_c = bounds.count(adapted(col))
         if inner:
-            ic = _count_of(inner)(col)
+            ic = inner.count(col)
             return F.when(ic > 0, ic).otherwise(own_c)
         return own_c
 
@@ -940,7 +922,7 @@ def _lower_nullable(v: K.Nullable, dtype: T.DataType) -> Lowered:
         # inner fails only on null → isNull | inner never fails
         pred_null_only=inner.pred_null_only,
         count=lambda col: F.when(col.isNull(), F.lit(0)).otherwise(
-            _count_of(inner)(col)
+            inner.count(col)
         ),
     )
 
@@ -972,10 +954,9 @@ def _lower_nonnullable(v: K.NonNullable, dtype: T.DataType) -> Lowered:
         adapt=(lambda col: inner.adapt(col)) if inner else (lambda col: col),
         violations=violations,
         msg=msg,
-        static_msg=bare if inner is None else None,
         pred_null_only=inner.pred_null_only if inner else True,
         count=lambda col: F.when(col.isNull(), F.lit(1)).otherwise(
-            _count_of(inner)(col) if inner else F.lit(0)
+            inner.count(col) if inner else F.lit(0)
         ),
     )
 
@@ -1086,7 +1067,7 @@ def _lower_allof(v: K.AllOf, dtype: T.DataType) -> Lowered:
     def count(col: Column) -> Column:
         total = F.lit(0)
         for c in children:
-            total = total + _count_of(c)(col)
+            total = total + c.count(col)
         return total
 
     return Lowered(
@@ -1136,7 +1117,7 @@ def _lower_chainof(v: K.ChainOf, dtype: T.DataType) -> Lowered:
     def count(col: Column) -> Column:
         total = F.lit(0)
         for node, prev in stages:
-            total = total + _count_of(node)(prev(col))
+            total = total + node.count(prev(col))
         return total
 
     return Lowered(cur_type, predicate, adapt, violations, msg, count=count)
@@ -1156,7 +1137,6 @@ def _lower_condition(v: K.Condition, dtype: T.DataType) -> Lowered:
                 lambda col: F.lit(bare),
             )
         ],
-        static_msg=bare,
     )
     # struct-of-arrays form: a ColumnCondition may declare an equivalent
     # builder over ≤2 named struct fields (zip_with binds at most two
@@ -1482,11 +1462,9 @@ def _lower_homogeneous_sequence(v: K.HomogeneousSequence, dtype: T.DataType) -> 
             F.when(F.size(first_bad) > 0, item.msg(F.get(first_bad, 0))),
         )
 
-    item_count = _count_of(item)
-
     def count(col: Column) -> Column:
         return F.when(~own.predicate(col), F.lit(1)).otherwise(
-            F.aggregate(col, F.lit(0), lambda acc, x: acc + item_count(x))
+            F.aggregate(col, F.lit(0), lambda acc, x: acc + item.count(x))
         )
 
     return Lowered(out_type, predicate, adapt, violations, msg, count=count)
@@ -1555,7 +1533,7 @@ def _lower_heterogeneous_sequence(
     def count(col: Column) -> Column:
         total = F.lit(0)
         for i, node in enumerate(items):
-            total = total + _count_of(node)(F.get(col, i))
+            total = total + node.count(F.get(col, i))
         return F.when(~own.predicate(col), F.lit(1)).otherwise(total)
 
     return Lowered(
@@ -1642,7 +1620,7 @@ def _lower_heterogeneous_struct(
             return F.lit(1)  # null → type violation; non-null → arity
         total = F.lit(0)
         for f, node in zip(fields, items):
-            total = total + _count_of(node)(col.getField(f.name))
+            total = total + node.count(col.getField(f.name))
         return F.when(col.isNull(), F.lit(1)).otherwise(total)
 
     return Lowered(out_type, predicate, adapt, violations, msg, count=count)
@@ -1719,14 +1697,12 @@ def _lower_mapping(v: K.Mapping, dtype: T.DataType) -> Lowered:
     def count(col: Column) -> Column:
         total = F.lit(0)
         if vv:
-            vc = _count_of(vv)
             total = total + F.aggregate(
-                F.map_values(col), F.lit(0), lambda acc, x: acc + vc(x)
+                F.map_values(col), F.lit(0), lambda acc, x: acc + vv.count(x)
             )
         if kv:
-            kc = _count_of(kv)
             total = total + F.aggregate(
-                F.map_keys(col), F.lit(0), lambda acc, k: acc + kc(k)
+                F.map_keys(col), F.lit(0), lambda acc, k: acc + kv.count(k)
             )
         return F.when(~own.predicate(col), F.lit(1)).otherwise(total)
 
@@ -2023,7 +1999,7 @@ def _lower_object(v: K.Object, dtype: T.DataType) -> Lowered:
                 continue
             fld = col.getField(name)
             total = total + F.when(fld.isNull(), F.lit(0)).otherwise(
-                _count_of(node)(fld)
+                node.count(fld)
             )
         if additional is False and (extras or extras_field):
             # ONE object.additional violation listing all present extras
@@ -2039,14 +2015,15 @@ def _lower_object(v: K.Object, dtype: T.DataType) -> Lowered:
                 for name in extras:
                     fld = col.getField(name)
                     total = total + F.when(fld.isNull(), F.lit(0)).otherwise(
-                        _count_of(extra_node[name])(fld)
+                        extra_node[name].count(fld)
                     )
             if extras_map_node is not None:
                 mfld = col.getField(extras_field)
-                mc = _count_of(extras_map_node)
                 total = total + F.when(mfld.isNull(), F.lit(0)).otherwise(
                     F.aggregate(
-                        F.map_values(mfld), F.lit(0), lambda acc, x: acc + mc(x)
+                        F.map_values(mfld),
+                        F.lit(0),
+                        lambda acc, x: acc + extras_map_node.count(x),
                     )
                 )
         result = F.when(~own.predicate(col), F.lit(1))

@@ -2,18 +2,21 @@
 
 The target deployment (BASELINE north star) reads/writes Iceberg tables:
 snapshot-pruned scans, time-travel drift comparisons, and a checkpoint
-table maintained with ``MERGE INTO`` keyed by partition id. This sandbox
-container ships no Iceberg jars, so every entry point:
+table maintained with ``MERGE INTO`` keyed by partition id. Without the
+Iceberg jars every entry point:
 
 * detects availability at runtime (:func:`iceberg_available`) instead of
   import-failing, and
 * degrades to the parquet layout used everywhere else in the repo, keeping
-  the API (and the generated SQL, which IS unit-tested) identical — and,
-  since round 4, the MERGE semantics themselves stay EXECUTABLE:
-  :func:`merge_checkpoint_emulated` performs the same keyed upsert on the
-  parquet layout, so ``ValidationEngine(checkpoint_format='iceberg')``
-  runs end-to-end (one row per partition, last run wins) with or without
-  the jars (tests/test_merge_emulation.py).
+  the API (and the generated SQL, which IS unit-tested) identical.
+  ``ValidationEngine(checkpoint_format='iceberg')`` then keeps the parquet
+  checkpoint, whose runs append only buckets not yet checkpointed.
+
+:func:`merge_checkpoint_emulated` executes the keyed upsert on a parquet
+directory and can retain numbered snapshots of it: the jarless snapshot
+log that :func:`read_table(version=...)` and
+``operators/drift.py::drift_across_snapshots`` read. The engine does not
+write through it.
 
 On a real cluster, enable with the standard session configs::
 
@@ -189,16 +192,21 @@ def merge_checkpoint_emulated(
     keep_snapshots: int = 0,
 ) -> DataFrame:
     """EXECUTE ``MERGE INTO`` semantics on a parquet directory — the
-    sandbox twin of :func:`merge_checkpoint`, byte-equivalent to the SQL
+    jarless twin of :func:`merge_checkpoint`, byte-equivalent to the SQL
     :func:`checkpoint_merge_sql` generates: WHEN MATCHED (same
     ``key_cols``) the stored row is replaced by the incoming one, WHEN
     NOT MATCHED it is inserted; untouched keys survive. Returns the
     merged table as a DataFrame.
 
-    The checkpoint is driver-bounded BY DESIGN (one row per engine
-    bucket, <= a few hundred), so both sides materialize on the driver
-    and the directory is rewritten in one overwrite — the same
-    single-writer assumption the engine's append path already makes.
+    It maintains the jarless snapshot log (``keep_snapshots`` below)
+    that :func:`~valideer_spark.operators.drift.drift_across_snapshots`
+    compares; the engine's checkpoint does not go through it (without
+    the jars it appends parquet files).
+
+    The table is driver-bounded BY DESIGN (one row per key, <= a few
+    hundred, like a per-bucket metrics table), so both sides
+    materialize on the driver and the directory is rewritten in one
+    overwrite — a single-writer assumption.
     ``max_rows`` enforces that assumption: either side exceeding it
     raises instead of silently materializing a large table on the
     driver. Idempotent: re-merging the same source is a no-op.
