@@ -9,7 +9,6 @@ from .stats import (
 from .uniqueness import duplicate_keys
 from .referential import orphan_keys, orphan_rows
 from .drift import (
-    drift_across_snapshots,
     drift_between_sketch_tables,
     psi_drift,
     quantile_drift,
@@ -56,7 +55,6 @@ __all__ = [
     "quantile_drift",
     "quantile_sketch_table",
     "drift_between_sketch_tables",
-    "drift_across_snapshots",
     "exact_duplicates",
     "minhash_lsh_candidates",
     "minhash_signatures",

@@ -10,9 +10,14 @@ Two quantile paths, both JVM-side aggregates:
   merges two such tables and compares their quantiles without rescanning
   the snapshots they were built from.
 
-:func:`psi_drift` scores drift over fixed buckets, exactly, and
-:func:`drift_across_snapshots` runs either score on two retained table
-versions.
+:func:`psi_drift` scores drift over fixed buckets, exactly.
+
+Drift across snapshots is one stored sketch table per snapshot: write
+:func:`quantile_sketch_table` of each snapshot when it is taken, and
+compare any two with :func:`drift_between_sketch_tables`, rescanning
+neither snapshot. On an Iceberg runtime,
+``sources/iceberg.py::read_table(snapshot_id=)`` gives the frames of two
+snapshots for :func:`psi_drift` or :func:`quantile_drift`.
 
 All three paths read the same values of a column: NULL and NaN are left
 out (the rule ``kll_sketch_agg_double`` applies), and ±inf are values,
@@ -195,63 +200,3 @@ def psi_drift(
     return joined.select(
         "bucket", "n_a", "n_b", term.alias("psi_term")
     ).orderBy("bucket")
-
-
-def drift_across_snapshots(
-    spark,
-    path: str,
-    column: str,
-    version_a: int = None,
-    version_b: int = None,
-    mode: str = "quantile",
-    probs: Sequence[float] = tuple(DEFAULT_PROBS),
-    breaks: Sequence[float] = None,
-    fmt: str = "parquet",
-) -> DataFrame:
-    """Distribution drift of ``column`` compared ACROSS SNAPSHOTS of one
-    table — the north-star integration of the drift operators with the
-    snapshot log: both sides are read with
-    :func:`valideer_spark.sources.iceberg.read_table(version=...)`, so
-    on a real Iceberg runtime this is two ``snapshot-id`` time-travel
-    scans and in the sandbox it is the jarless numbered-snapshot twin
-    retained by ``merge_checkpoint_emulated(keep_snapshots=N)``.
-
-    Defaults compare the two most recent retained versions
-    (``version_a`` = previous, ``version_b`` = latest). ``mode``:
-
-    * ``"quantile"`` — :func:`quantile_drift` rows
-      (prob, q_a, q_b, abs_diff) via the mergeable GK sketch.
-    * ``"psi"`` — :func:`psi_drift` rows (bucket, n_a, n_b, psi_term)
-      over caller-fixed ``breaks`` (required).
-
-    Reference parity note: the reference library validates one value at
-    a time and has no notion of table history; this operator is part of
-    the mandated engine surface (BASELINE.json north_star: "distribution-
-    drift checks via t-digest quantile sketches compared across
-    snapshots"). The persisted sketches are KLL
-    (:func:`quantile_sketch_table`), not t-digest: KLL carries a rank
-    guarantee and merges as a native Spark aggregate.
-    """
-    from valideer_spark.sources.iceberg import read_table, snapshot_versions
-
-    if version_a is None or version_b is None:
-        versions = snapshot_versions(spark, path)
-        if len(versions) < 2:
-            raise ValueError(
-                "drift_across_snapshots needs two retained snapshots of %s "
-                "(have %s); merge with keep_snapshots>=2 or pass explicit "
-                "versions" % (path, versions)
-            )
-        if version_b is None:
-            version_b = versions[-1]
-        if version_a is None:
-            version_a = versions[-2] if versions[-1] == version_b else versions[-1]
-    side_a = read_table(spark, path, fmt=fmt, version=version_a)
-    side_b = read_table(spark, path, fmt=fmt, version=version_b)
-    if mode == "quantile":
-        return quantile_drift(side_a, side_b, column, probs=probs)
-    if mode == "psi":
-        if breaks is None:
-            raise ValueError("mode='psi' requires explicit bucket breaks")
-        return psi_drift(side_a, side_b, column, breaks)
-    raise ValueError("mode must be 'quantile' or 'psi', got %r" % mode)
