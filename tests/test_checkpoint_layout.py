@@ -253,7 +253,7 @@ def test_custom_long_partition_expr_resumes_to_nothing(spark, tmp_path):
 @pytest.mark.parametrize("fmt", ["parquet", "iceberg"])
 def test_one_checkpoint_file_per_run(spark, tmp_path, fmt):
     """Each run appends one data file to the checkpoint, and returns the
-    rows that file holds for its run id."""
+    rows that file holds for its run id, in one partition."""
     _jarless(spark, fmt)
     docs = synth_docs(spark, 400)
     eng = _engine(tmp_path, fmt, 8)
@@ -263,7 +263,9 @@ def test_one_checkpoint_file_per_run(spark, tmp_path, fmt):
         ("r1", docs.filter(bucket < 3), 3, 1),
         ("r2", docs, 5, 2),
     ):
-        returned = eng.run_with_checkpoint(frame, run_id=run_id).collect()
+        out = eng.run_with_checkpoint(frame, run_id=run_id)
+        assert out.rdd.getNumPartitions() == 1
+        returned = out.collect()
         assert len(returned) == n_rows
         assert len([f for f in _listing(ck) if f.endswith(".parquet")]) == n_files
         stored = spark.read.parquet(ck).filter(F.col("run_id") == run_id)

@@ -410,6 +410,21 @@ def test_violation_plans_build_each_violation_once(spark):
         docs.unpersist()
 
 
+def test_flagship_violations_build_each_own_check_once(spark):
+    """A container's own-check violations are chosen by its predicate, so
+    the optimised violations plan builds each own check's violation array
+    once, not a second time for a ``size(...) > 0`` test."""
+    from valideer_spark.flagship import doc_schema
+    from valideer_spark.plans import compile_plan
+    from valideer_spark.sources import synth_docs
+
+    docs = synth_docs(spark, 100)
+    violations = compile_plan(doc_schema(), docs).violations_col(docs)
+    plan = _optimized(docs.select(violations.alias("v")))
+    for code in ("type:Sequence", "sequence.min_length", "type:Mapping"):
+        assert plan.count(code) == 1, (code, plan.count(code))
+
+
 def _frame_scans(df, frame_columns):
     """(report-frame scans, other in-memory scans, parquet scans) of the
     executed plan of ``df``."""

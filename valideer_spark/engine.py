@@ -535,9 +535,7 @@ class ValidationEngine:
                 spark, self.checkpoint_table, fmt="iceberg"
             ).filter(F.col("run_id") == run_id)
         if rows:
-            stamped.coalesce(1).write.mode("append").parquet(
-                self._checkpoint_path()
-            )
+            stamped.write.mode("append").parquet(self._checkpoint_path())
         return stamped
 
 
@@ -568,14 +566,15 @@ _CHECKPOINT_SCHEMA = T.StructType(
 
 def _stamped(spark: SparkSession, schema, rows, **lineage) -> DataFrame:
     """The collected verdict ``rows`` with their ``lineage`` values, as a
-    frame the JVM builds from one JSON literal: a constant number of py4j
-    calls, and no Python worker when the frame is written or read (as a
-    ``createDataFrame`` of Python rows would need)."""
+    frame the JVM builds from one JSON literal in one partition: a
+    constant number of py4j calls, one task and file when the frame is
+    written or read, and no Python worker (as a ``createDataFrame`` of
+    Python rows would need)."""
     schema = T.StructType(
         schema.fields + [T.StructField(name, typ) for name, typ in _LINEAGE]
     )
     payload = json.dumps([{**r.asDict(), **lineage} for r in rows])
-    return spark.range(1).select(
+    return spark.range(1, numPartitions=1).select(
         F.inline(F.from_json(F.lit(payload), T.ArrayType(schema)))
     )
 

@@ -1453,7 +1453,7 @@ def _lower_homogeneous_sequence(v: K.HomogeneousSequence, dtype: T.DataType) -> 
                 col, lambda x, i: item.violations(x, _extend_path_index(path, i))
             )
         )
-        return F.when(F.size(own_v) > 0, own_v).otherwise(items_v)
+        return F.when(~own.predicate(col), own_v).otherwise(items_v)
 
     def msg(col: Column) -> Column:
         first_bad = F.filter(col, lambda x: ~item.predicate(x))
@@ -1524,7 +1524,7 @@ def _lower_heterogeneous_sequence(
             for i, node in enumerate(items)
         ]
         rest = F.concat(*parts) if parts else _no_violations()
-        return F.when(F.size(own_v) > 0, own_v).otherwise(rest)
+        return F.when(~own.predicate(col), own_v).otherwise(rest)
 
     def msg(col: Column) -> Column:
         parts = [node.msg(F.get(col, i)) for i, node in enumerate(items)]
@@ -1679,7 +1679,7 @@ def _lower_mapping(v: K.Mapping, dtype: T.DataType) -> Lowered:
                 )
             )
         rest = F.concat(*parts) if parts else _no_violations()
-        return F.when(F.size(own_v) > 0, own_v).otherwise(rest)
+        return F.when(~own.predicate(col), own_v).otherwise(rest)
 
     def msg(col: Column) -> Column:
         parts = []
@@ -1966,7 +1966,7 @@ def _lower_object(v: K.Object, dtype: T.DataType) -> Lowered:
                     )
                 )
         children = F.concat(*parts) if parts else _no_violations()
-        result = F.when(F.size(own_v) > 0, own_v)
+        result = F.when(~own.predicate(col), own_v)
         if required:
             result = result.when(F.size(missing) > 0, missing_v)
         return result.otherwise(children)
