@@ -2,6 +2,7 @@
 compared value-by-value with the kernel (verdicts, adapted values, and
 first-violation messages where natively lowered)."""
 
+import json
 import re
 
 import pytest
@@ -21,24 +22,38 @@ def run_case(
     check_adapted=True,
     check_messages=True,
     to_py=lambda x: x,
+    sql=False,
 ):
     """Validate ``values`` (python cells of Spark type ``dtype``) through
-    the lowered plan and assert agreement with the kernel."""
+    the lowered plan and assert agreement with the kernel.
+
+    ``sql=True`` takes ``values`` as Spark SQL expressions (e.g.
+    ``map('b', 1, 'a', 2)``), and the kernel checks each value as read
+    back from Spark through ``to_json``: neither ``createDataFrame`` nor
+    ``collect`` keeps a map's entry order, a SQL ``map(...)`` and its
+    JSON do (NULL struct fields drop out, as absent properties)."""
     validator = V.parse(schema_obj)
     node = lower(validator, dtype)
-    df = spark.createDataFrame(
-        [(v,) for v in values], T.StructType([T.StructField("x", dtype)])
-    )
+    if sql:
+        df = spark.sql(
+            "SELECT CAST(x AS %s) AS x FROM VALUES %s AS t(x)"
+            % (dtype.simpleString(), ", ".join("(%s)" % v for v in values))
+        )
+    else:
+        df = spark.createDataFrame(
+            [(v,) for v in values], T.StructType([T.StructField("x", dtype)])
+        )
     col = F.col("x")
     out = df.select(
         col.alias("x"),
         node.predicate(col).alias("ok"),
         node.violations(col, F.lit("")).alias("vio"),
         node.adapt(col).alias("adapted"),
+        F.to_json(F.struct(col)).alias("json"),
     ).collect()
     assert len(out) == len(values)
     for row, value in zip(out, values):
-        pyval = to_py(value)
+        pyval = to_py(json.loads(row.json).get("x") if sql else value)
         kernel_ok = validator.is_valid(pyval)
         assert row.ok == kernel_ok, f"verdict mismatch for {pyval!r}"
         assert (len(row.vio) > 0) == (not kernel_ok)
@@ -152,6 +167,60 @@ def test_anyof_same_type(spark):
              T.StringType(), ["a", "b", "bb", "c", "ab", None])
 
 
+def _anyof_property_case(spark, alternative, other, inner_type, values, sql=False):
+    """``{"+v": AnyOf(alternative, other)}`` over ``struct<v: inner_type>``:
+    the any_of message joins each alternative's fail-fast message."""
+    dtype = T.StructType([T.StructField("v", inner_type)])
+    run_case(
+        spark,
+        V.Object(required={"v": V.AnyOf(alternative, other)}),
+        dtype,
+        values,
+        sql=sql,
+        check_adapted=False,
+    )
+
+
+def test_anyof_object_additional_false(spark):
+    inner = T.StructType([T.StructField("a", T.StringType()),
+                          T.StructField("z", T.LongType())])
+    _anyof_property_case(
+        spark, V.Object(required={"a": "string"}, additional=False), "integer",
+        inner, [{"v": {"a": "x", "z": 3}}],
+    )
+
+
+def test_anyof_object_ignore_optional_errors(spark):
+    inner = T.StructType([T.StructField("a", T.LongType()),
+                          T.StructField("b", T.StringType())])
+    _anyof_property_case(
+        spark,
+        V.Object(required={"a": "string"}, optional={"b": "integer"},
+                 ignore_optional_errors=True),
+        "integer",
+        inner,
+        [{"v": {"a": 5, "b": "x"}}],
+    )
+
+
+def test_anyof_object_additional_schema(spark):
+    inner = T.StructType([T.StructField("a", T.StringType()),
+                          T.StructField("z", T.LongType())])
+    _anyof_property_case(
+        spark, V.Object(required={"a": "string"}, additional="string"),
+        "integer", inner, [{"v": {"a": "x", "z": 3}}],
+    )
+
+
+def test_anyof_mapping_entry_order(spark):
+    _anyof_property_case(
+        spark, V.Mapping(V.Pattern("a+$"), V.Range(min_value=0)), "string",
+        T.MapType(T.StringType(), T.LongType()),
+        ["named_struct('v', map('bad', 1, 'a', -5))"],
+        sql=True,
+    )
+
+
 def test_allof(spark):
     run_case(spark, V.AllOf(V.String(max_length=4), V.Pattern(r"x.*$")),
              T.StringType(), ["x", "xyz", "xyzzy", "abc", None])
@@ -207,6 +276,40 @@ def test_mapping_value_before_key(spark):
         V.Mapping("string", V.Range("integer", min_value=1)),
         T.MapType(T.StringType(), T.LongType()),
         [{"a": 1, "b": 2}, {"a": 0}, {}, None],
+    )
+
+
+def test_mapping_violations_in_entry_order(spark):
+    """The kernel checks each entry's value, then its key, entry by entry:
+    a bad key before a bad value is the first error."""
+    run_case(
+        spark,
+        V.Mapping(V.Pattern("a+$"), V.Range(min_value=0)),
+        T.MapType(T.StringType(), T.LongType()),
+        ["map('bad', 1, 'a', -5)", "map('a', -5, 'bad', 1)",
+         "map('a', 1, 'bad', -5)"],
+        sql=True,
+    )
+
+
+def test_object_required_message_shows_map_as_dict(spark):
+    """A map inside a value repr renders as Python's dict repr."""
+    dtype = T.StructType([
+        T.StructField("id", T.StringType()),
+        T.StructField("tags", T.MapType(T.StringType(), T.LongType())),
+        T.StructField("flag", T.BooleanType()),
+    ])
+    run_case(
+        spark,
+        {"+id": "string", "+tags": V.Mapping("string", "integer"),
+         "+flag": "boolean"},
+        dtype,
+        ["named_struct('id', 'a', 'tags', map('k2', 2, 'k1', 1), 'flag', NULL)",
+         "named_struct('id', 'b', 'tags', map('k', NULL), 'flag', NULL)",
+         "named_struct('id', 'c', 'tags', map(), 'flag', NULL)",
+         "named_struct('id', 'd', 'tags', map('k', 1), 'flag', true)"],
+        sql=True,
+        check_adapted=False,
     )
 
 

@@ -16,11 +16,14 @@ if [ "$h1" != "$h2" ]; then
   exit 1
 fi
 echo "oracle text hash stable: $h1"
-echo "== flagship plan text is process-independent and cache-independent =="
+echo "== plan text is process-independent and cache-independent =="
 # the lowered plan text keys Spark's codegen cache and makes plans
 # comparable across processes; lambda variable names (x_12) come from a
 # JVM-wide counter, so they are normalised before comparing. The
 # violations tree of a cached plan must read like one lowered afresh.
+# Checked: the flagship predicate and violations tree, and the typed
+# schema's violations tree (its AnyOf, Mapping, ChainOf and
+# HeterogeneousSequence, and AnyOf's bare-message trees).
 predicate_hash() {
   PYTHONHASHSEED=$1 python - <<'PY' 2>/dev/null | tail -1
 import hashlib, re
@@ -28,36 +31,43 @@ from pyspark.sql import SparkSession
 from valideer_spark.flagship import doc_schema
 from valideer_spark.plans import compile_plan, frame
 from valideer_spark.sources import DOCS_SCHEMA
+from valideer_spark.sources.typed import typed_rows, typed_schema
 spark = (SparkSession.builder.master("local[1]")
          .config("spark.ui.enabled", "false").getOrCreate())
 df = spark.createDataFrame([], DOCS_SCHEMA)
 norm = lambda col: re.sub(r"\b([a-z])_\d+\b", r"\1", str(col))
+typed = typed_rows(spark, 0)
 first = compile_plan(doc_schema(), DOCS_SCHEMA)
 text = norm(first.is_valid_col(df))
 first.violations_col(df)
-# a cache hit: the violations tree the first compile built
+t_first = compile_plan(typed_schema(), typed)
+t_first.violations_col(typed)
+# cache hits: the violations trees the first compiles built
 cached = compile_plan(doc_schema(), DOCS_SCHEMA)
 hit = norm(cached.violations_col(df))
+t_cached = compile_plan(typed_schema(), typed)
+t_hit = norm(t_cached.violations_col(typed))
 frame._plans.clear()
 fresh = norm(compile_plan(doc_schema(), DOCS_SCHEMA).violations_col(df))
+t_fresh = norm(compile_plan(typed_schema(), typed).violations_col(typed))
 spark.stop()
-if cached is not first or hit != fresh:
+if cached is not first or t_cached is not t_first or (hit, t_hit) != (fresh, t_fresh):
     print("cache-dependent")
 else:
-    print(hashlib.md5((text + "\x1e" + hit).encode()).hexdigest())
+    print(hashlib.md5("\x1e".join([text, hit, t_hit]).encode()).hexdigest())
 PY
 }
 p1=$(predicate_hash 101)
 p2=$(predicate_hash 202)
 if [ "$p1" = "cache-dependent" ] || [ "$p2" = "cache-dependent" ]; then
-  echo "FAIL: an equal flagship schema missed the plan cache, or its cached violations tree differs from a fresh lowering"
+  echo "FAIL: an equal flagship or typed schema missed the plan cache, or its cached violations tree differs from a fresh lowering"
   exit 1
 fi
 if [ -z "$p1" ] || [ "$p1" != "$p2" ]; then
-  echo "FAIL: flagship predicate/violations text differs across PYTHONHASHSEED ($p1 vs $p2)"
+  echo "FAIL: flagship predicate/violations or typed violations text differs across PYTHONHASHSEED ($p1 vs $p2)"
   exit 1
 fi
-echo "predicate and violations text hash stable: $p1"
+echo "predicate and violations text hashes stable: $p1"
 echo "== operator census matches PLANS.md (PYTHONHASHSEED=202) =="
 # pytest checked the census in its own process; a run under a fixed
 # hash seed shows it does not depend on Python's string hash order

@@ -9,10 +9,13 @@ bundle of pure ``Column`` expression builders:
 * ``violations(col, path)`` — ``array<struct<path,constraint,message>>`` of
   ALL violations in kernel traversal order, so element 0 equals the
   kernel's fail-fast error (full violation report at scale, first-error
-  parity per row); ``path=None`` builds the same array with NULL paths
+  parity per row). ``path=None`` builds the same array with NULL paths
   and messages (constraint codes only, no value reprs or formatting);
-* ``msg(col)``         — bare message of the first failure (used by AnyOf
-  to join alternatives with ``" or "``).
+  ``path=BARE`` builds it with NULL paths and each message bare (no
+  ``Invalid value <repr> (<type>):`` prefix). AnyOf joins element 0 of
+  each alternative's bare array with ``" or "``, as the kernel joins its
+  alternatives' fail-fast messages, so a node's failures are written
+  once, in ``violations``.
 
 Everything stays inside Catalyst as JVM expressions; checks over arrays
 run as higher-order-function lambdas (``transform``, ``zip_with``,
@@ -86,13 +89,22 @@ class LoweringError(Exception):
 SoaCheck = Tuple[Tuple[str, ...], Callable[..., Column]]
 
 
+#: ``violations`` path for the bare form: NULL paths, bare messages
+BARE: Any = object()
+
+
 @dataclass
 class Lowered:
+    """One validator lowered against one Spark type: pure ``Column``
+    builders (see the module docstring). ``violations`` is the node's one
+    failure builder: its ``path`` argument is a path Column (full form),
+    ``None`` (codes only) or :data:`BARE` (bare messages), and
+    :func:`_violation` renders each failure in that form."""
+
     out_type: T.DataType
     predicate: Callable[[Column], Column]
     adapt: Callable[[Column], Column]
     violations: Callable[[Column, Optional[Column]], Column]
-    msg: Callable[[Column], Column]
     #: violation COUNT expression: exactly ``size(violations(col, path))``
     #: but without building the violation structs (whose value-repr +
     #: message formatting dominates the cost for invalid rows)
@@ -123,17 +135,38 @@ def _no_violations() -> Column:
 
 
 def _violation(
-    path: Optional[Column], constraint: str, message: Callable[[], Column]
+    path: Optional[Column],
+    constraint: str,
+    col: Column,
+    dtype: T.DataType,
+    bare: Callable[[], Column],
+    full: Optional[Callable[[], Column]] = None,
 ) -> Column:
-    """One-element violation array. ``path=None`` is the codes-only form:
-    path and message are NULL, and ``message`` (a thunk, as value reprs
-    are large trees to build) is never called."""
+    """One-element violation array of the failure of value ``col`` (of
+    type ``dtype``) with bare message ``bare()``, in the form ``path``
+    picks:
+
+    * a path Column: the full form, message ``Invalid value <repr>
+      (<type>): <bare>``, or ``full()`` where the kernel formatted it;
+    * ``None``: codes only, path and message NULL;
+    * :data:`BARE`: path NULL, message ``bare()``.
+
+    The messages are thunks, as value reprs are large trees to build:
+    each is called only by the form that shows it."""
     null = F.lit(None).cast(T.StringType())
+    if path is None:
+        path, message = null, null
+    elif path is BARE:
+        path, message = null, bare()
+    elif full is not None:
+        message = full()
+    else:
+        message = _invalid_value_msg(col, dtype, bare())
     return F.array(
         F.struct(
-            (null if path is None else path).alias("path"),
+            path.alias("path"),
             F.lit(constraint).alias("constraint"),
-            (null if path is None else message()).alias("message"),
+            message.alias("message"),
         )
     )
 
@@ -192,9 +225,9 @@ def extend_path(
     path: Optional[Column], context_bare: Column, context_repr: Column
 ) -> Optional[Column]:
     """Kernel context rendering: first element bare, rest ``[repr]``. A
-    codes-only build (``path=None``) stays codes-only."""
-    if path is None:
-        return None
+    codes-only (``None``) or bare (:data:`BARE`) build keeps its form."""
+    if path is None or path is BARE:
+        return path
     return F.when(path == "", context_bare).otherwise(
         F.concat(path, F.lit("["), context_repr, F.lit("]"))
     )
@@ -236,25 +269,12 @@ def _leaf(
             pred = pred & ~_nullsafe(c.fails(col))
         return _nullsafe(pred)
 
-    def msg(col: Column) -> Column:
-        expr = None
-        for c in checks:
-            clause = _nullsafe(c.fails(col))
-            expr = (
-                F.when(clause, c.bare_msg(col))
-                if expr is None
-                else expr.when(clause, c.bare_msg(col))
-            )
-        return expr.otherwise(F.lit(None)) if expr is not None else F.lit(None)
-
     def violations(col: Column, path: Optional[Column]) -> Column:
         expr = None
         for c in checks:
             clause = _nullsafe(c.fails(col))
             vio = _violation(
-                path,
-                c.constraint,
-                lambda: _invalid_value_msg(col, dtype, c.bare_msg(col)),
+                path, c.constraint, col, dtype, lambda: c.bare_msg(col)
             )
             expr = F.when(clause, vio) if expr is None else expr.when(clause, vio)
         return expr.otherwise(_no_violations()) if expr is not None else _no_violations()
@@ -264,7 +284,6 @@ def _leaf(
         predicate=predicate,
         adapt=adapt or (lambda col: col),
         violations=violations,
-        msg=msg,
         pred_null_only=all(c.null_only for c in checks),
         # fail-fast: at most ONE violation from a leaf
         count=lambda col: F.when(predicate(col), F.lit(0)).otherwise(F.lit(1)),
@@ -563,10 +582,11 @@ def kernel_fallback(
     """Run the kernel validator inside three Arrow-batched pandas UDFs: a
     boolean verdict, a ``struct<suffix, message, bare>`` of the first
     error, and the adapted value. Spark evaluates identical UDF calls once
-    per operator, so predicate and count share one verdict call, and
-    violations and msg one error call. The verdict stays its own UDF:
-    folded into the error struct, it formats a message for every invalid
-    row on the verdict path (measured slower on ``verdicts()``).
+    per operator, so predicate and count share one verdict call, and the
+    full and bare forms of violations one error call. The verdict stays
+    its own UDF: folded into the error struct, it formats a message for
+    every invalid row on the verdict path (measured slower on
+    ``verdicts()``).
 
     Scalar columns are passed through directly; nested columns round-trip
     through JSON (``to_json`` omits null struct fields, which matches the
@@ -671,14 +691,19 @@ def kernel_fallback(
         if path is None:
             # codes only: the verdict UDF decides, the error UDF never runs
             return F.when(predicate(col), _no_violations()).otherwise(
-                _violation(None, code, lambda: None)
+                _violation(None, code, col, dtype, lambda: None)
             )
         e = error_udf(encode(col))
+        if path is not BARE:
+            path = F.concat(path, F.coalesce(e.getField("suffix"), F.lit("")))
         return F.when(e.getField("message").isNull(), _no_violations()).otherwise(
             _violation(
-                F.concat(path, F.coalesce(e.getField("suffix"), F.lit(""))),
+                path,
                 code,
-                lambda: e.getField("message"),
+                col,
+                dtype,
+                lambda: e.getField("bare"),
+                full=lambda: e.getField("message"),
             )
         )
 
@@ -687,7 +712,6 @@ def kernel_fallback(
         predicate=predicate,
         adapt=adapt,
         violations=violations,
-        msg=lambda col: error_udf(encode(col)).getField("bare"),
         # the kernel round-trip reports at most ONE violation
         count=lambda col: F.when(predicate(col), F.lit(0)).otherwise(F.lit(1)),
     )
@@ -870,12 +894,6 @@ def _lower_range(v: K.Range, dtype: T.DataType) -> Lowered:
             return F.when(F.size(iv) > 0, iv).otherwise(own)
         return own
 
-    def msg(col: Column) -> Column:
-        own = bounds.msg(adapted(col))
-        if inner:
-            return F.coalesce(inner.msg(col), own)
-        return own
-
     def count(col: Column) -> Column:
         own_c = bounds.count(adapted(col))
         if inner:
@@ -888,7 +906,6 @@ def _lower_range(v: K.Range, dtype: T.DataType) -> Lowered:
         predicate=predicate,
         adapt=adapted,
         violations=violations,
-        msg=msg,
         count=count,
     )
 
@@ -910,15 +927,11 @@ def _lower_nullable(v: K.Nullable, dtype: T.DataType) -> Lowered:
             inner.violations(col, path)
         )
 
-    def msg(col: Column) -> Column:
-        return F.when(col.isNull(), F.lit(None)).otherwise(inner.msg(col))
-
     return Lowered(
         out_type=inner.out_type,
         predicate=predicate,
         adapt=adapt,
         violations=violations,
-        msg=msg,
         # inner fails only on null → isNull | inner never fails
         pred_null_only=inner.pred_null_only,
         count=lambda col: F.when(col.isNull(), F.lit(0)).otherwise(
@@ -938,22 +951,15 @@ def _lower_nonnullable(v: K.NonNullable, dtype: T.DataType) -> Lowered:
         return _nullsafe(p)
 
     def violations(col: Column, path: Optional[Column]) -> Column:
-        null_vio = _violation(
-            path, "non_null", lambda: _invalid_value_msg(col, dtype, F.lit(bare))
-        )
+        null_vio = _violation(path, "non_null", col, dtype, lambda: F.lit(bare))
         rest = inner.violations(col, path) if inner else _no_violations()
         return F.when(col.isNull(), null_vio).otherwise(rest)
-
-    def msg(col: Column) -> Column:
-        rest = inner.msg(col) if inner else F.lit(None)
-        return F.when(col.isNull(), F.lit(bare)).otherwise(rest)
 
     return Lowered(
         out_type=inner.out_type if inner else dtype,
         predicate=predicate,
         adapt=(lambda col: inner.adapt(col)) if inner else (lambda col: col),
         violations=violations,
-        msg=msg,
         pred_null_only=inner.pred_null_only if inner else True,
         count=lambda col: F.when(col.isNull(), F.lit(1)).otherwise(
             inner.count(col) if inner else F.lit(0)
@@ -963,43 +969,26 @@ def _lower_nonnullable(v: K.NonNullable, dtype: T.DataType) -> Lowered:
 
 def _lower_anyof(v: K.AnyOf, dtype: T.DataType) -> Lowered:
     children = [lower(c, dtype) for c in v._components]
-    out_types = {c.out_type.simpleString() for c in children}
-    if len(out_types) != 1:
+    if len({c.out_type.simpleString() for c in children}) == 1:
+        out_type = children[0].out_type
+
+        def adapt(col: Column) -> Column:
+            expr = None
+            for c in children:
+                expr = (
+                    F.when(c.predicate(col), c.adapt(col))
+                    if expr is None
+                    else expr.when(c.predicate(col), c.adapt(col))
+                )
+            return expr
+
+    else:
         # children adapt to DIFFERENT types (e.g. AnyOf(AdaptTo(int),
         # Enum(["N/A"])) on a string column): a Spark column has one type,
-        # so only ADAPT needs the kernel escape hatch — the predicate,
-        # violations and message stay native (the hot path is adapt-free)
+        # so only ADAPT needs the kernel escape hatch — the predicate and
+        # violations stay native (the hot path is adapt-free)
         fb = kernel_fallback(v, dtype, out_type=getattr(v, "spark_out_type", None))
-
-        def predicate_mixed(col: Column) -> Column:
-            p = F.lit(False)
-            for c in children:
-                p = p | c.predicate(col)
-            return _nullsafe(p)
-
-        def msg_mixed(col: Column) -> Column:
-            return F.concat_ws(" or ", *[c.msg(col) for c in children])
-
-        def violations_mixed(col: Column, path: Optional[Column]) -> Column:
-            return F.when(predicate_mixed(col), _no_violations()).otherwise(
-                _violation(
-                    path,
-                    "any_of",
-                    lambda: _invalid_value_msg(col, dtype, msg_mixed(col)),
-                )
-            )
-
-        return Lowered(
-            fb.out_type,
-            predicate_mixed,
-            fb.adapt,
-            violations_mixed,
-            msg_mixed,
-            count=lambda col: F.when(predicate_mixed(col), F.lit(0)).otherwise(
-                F.lit(1)
-            ),
-        )
-    out_type = children[0].out_type
+        out_type, adapt = fb.out_type, fb.adapt
 
     def predicate(col: Column) -> Column:
         p = F.lit(False)
@@ -1007,25 +996,15 @@ def _lower_anyof(v: K.AnyOf, dtype: T.DataType) -> Lowered:
             p = p | c.predicate(col)
         return _nullsafe(p)
 
-    def adapt(col: Column) -> Column:
-        expr = None
-        for c in children:
-            expr = (
-                F.when(c.predicate(col), c.adapt(col))
-                if expr is None
-                else expr.when(c.predicate(col), c.adapt(col))
-            )
-        return expr
-
-    def msg(col: Column) -> Column:
-        # all children failed → join their messages with " or "
-        return F.concat_ws(" or ", *[c.msg(col) for c in children])
+    def bare(col: Column) -> Column:
+        # all children failed: join their fail-fast messages (element 0 of
+        # each bare violation array) with " or "
+        firsts = [F.get(c.violations(col, BARE), 0) for c in children]
+        return F.concat_ws(" or ", *[f.getField("message") for f in firsts])
 
     def violations(col: Column, path: Optional[Column]) -> Column:
         return F.when(predicate(col), _no_violations()).otherwise(
-            _violation(
-                path, "any_of", lambda: _invalid_value_msg(col, dtype, msg(col))
-            )
+            _violation(path, "any_of", col, dtype, lambda: bare(col))
         )
 
     return Lowered(
@@ -1033,7 +1012,6 @@ def _lower_anyof(v: K.AnyOf, dtype: T.DataType) -> Lowered:
         predicate,
         adapt,
         violations,
-        msg,
         count=lambda col: F.when(predicate(col), F.lit(0)).otherwise(F.lit(1)),
     )
 
@@ -1055,9 +1033,6 @@ def _lower_allof(v: K.AllOf, dtype: T.DataType) -> Lowered:
         arrays = [c.violations(col, path) for c in children]
         return F.concat(*arrays) if arrays else _no_violations()
 
-    def msg(col: Column) -> Column:
-        return F.coalesce(*[c.msg(col) for c in children]) if children else F.lit(None)
-
     # struct-of-arrays form: a conjunction of decomposable children is the
     # concatenation of their per-field checks
     soa: Optional[List[SoaCheck]] = None
@@ -1075,7 +1050,6 @@ def _lower_allof(v: K.AllOf, dtype: T.DataType) -> Lowered:
         predicate,
         adapt,
         violations,
-        msg,
         pred_null_only=all(c.pred_null_only for c in children),
         soa_checks=soa,
         soa_null_strict=any(c.soa_null_strict for c in children),
@@ -1107,20 +1081,13 @@ def _lower_chainof(v: K.ChainOf, dtype: T.DataType) -> Lowered:
         arrays = [node.violations(prev(col), path) for node, prev in stages]
         return F.concat(*arrays) if arrays else _no_violations()
 
-    def msg(col: Column) -> Column:
-        return (
-            F.coalesce(*[node.msg(prev(col)) for node, prev in stages])
-            if stages
-            else F.lit(None)
-        )
-
     def count(col: Column) -> Column:
         total = F.lit(0)
         for node, prev in stages:
             total = total + node.count(prev(col))
         return total
 
-    return Lowered(cur_type, predicate, adapt, violations, msg, count=count)
+    return Lowered(cur_type, predicate, adapt, violations, count=count)
 
 
 def _lower_condition(v: K.Condition, dtype: T.DataType) -> Lowered:
@@ -1455,19 +1422,12 @@ def _lower_homogeneous_sequence(v: K.HomogeneousSequence, dtype: T.DataType) -> 
         )
         return F.when(~own.predicate(col), own_v).otherwise(items_v)
 
-    def msg(col: Column) -> Column:
-        first_bad = F.filter(col, lambda x: ~item.predicate(x))
-        return F.coalesce(
-            own.msg(col),
-            F.when(F.size(first_bad) > 0, item.msg(F.get(first_bad, 0))),
-        )
-
     def count(col: Column) -> Column:
         return F.when(~own.predicate(col), F.lit(1)).otherwise(
             F.aggregate(col, F.lit(0), lambda acc, x: acc + item.count(x))
         )
 
-    return Lowered(out_type, predicate, adapt, violations, msg, count=count)
+    return Lowered(out_type, predicate, adapt, violations, count=count)
 
 
 def _lower_heterogeneous_sequence(
@@ -1526,10 +1486,6 @@ def _lower_heterogeneous_sequence(
         rest = F.concat(*parts) if parts else _no_violations()
         return F.when(~own.predicate(col), own_v).otherwise(rest)
 
-    def msg(col: Column) -> Column:
-        parts = [node.msg(F.get(col, i)) for i, node in enumerate(items)]
-        return F.coalesce(own.msg(col), *parts) if parts else own.msg(col)
-
     def count(col: Column) -> Column:
         total = F.lit(0)
         for i, node in enumerate(items):
@@ -1537,7 +1493,7 @@ def _lower_heterogeneous_sequence(
         return F.when(~own.predicate(col), F.lit(1)).otherwise(total)
 
     return Lowered(
-        T.ArrayType(out_elem), predicate, adapt, violations, msg, count=count
+        T.ArrayType(out_elem), predicate, adapt, violations, count=count
     )
 
 
@@ -1586,9 +1542,7 @@ def _lower_heterogeneous_struct(
     def violations(col: Column, path: Optional[Column]) -> Column:
         expr = None
         for cond, bare in own_checks(col):
-            vio = _violation(
-                path, "tuple", lambda: _invalid_value_msg(col, dtype, bare)
-            )
+            vio = _violation(path, "tuple", col, dtype, lambda: bare)
             expr = F.when(_nullsafe(cond), vio) if expr is None else expr.when(
                 _nullsafe(cond), vio
             )
@@ -1600,13 +1554,6 @@ def _lower_heterogeneous_struct(
         ]
         rest = F.concat(*parts) if parts else _no_violations()
         return expr.otherwise(rest) if expr is not None else rest
-
-    def msg(col: Column) -> Column:
-        cands = [
-            F.when(_nullsafe(cond), bare) for cond, bare in own_checks(col)
-        ]
-        cands += [node.msg(col.getField(f.name)) for f, node in zip(fields, items)]
-        return F.coalesce(*cands) if cands else F.lit(None)
 
     out_type = T.StructType(
         [
@@ -1623,7 +1570,7 @@ def _lower_heterogeneous_struct(
             total = total + node.count(col.getField(f.name))
         return F.when(col.isNull(), F.lit(1)).otherwise(total)
 
-    return Lowered(out_type, predicate, adapt, violations, msg, count=count)
+    return Lowered(out_type, predicate, adapt, violations, count=count)
 
 
 def _lower_mapping(v: K.Mapping, dtype: T.DataType) -> Lowered:
@@ -1649,47 +1596,32 @@ def _lower_mapping(v: K.Mapping, dtype: T.DataType) -> Lowered:
             out = F.transform_keys(out, lambda k, x: kv.adapt(k))
         return out
 
+    def entry_violations(e: Column, path: Optional[Column]) -> Column:
+        # kernel order per entry (validators.py:595-603): the value's
+        # errors, with the key as context, then the key's, with none
+        key = e.getField("key")
+        parts = []
+        if vv:
+            parts.append(
+                vv.violations(
+                    e.getField("value"),
+                    extend_path(
+                        path, key.cast("string"), py_repr(key, dtype.keyType)
+                    ),
+                )
+            )
+        if kv:
+            parts.append(kv.violations(key, path))
+        return F.concat(*parts) if len(parts) > 1 else parts[0]
+
     def violations(col: Column, path: Optional[Column]) -> Column:
         own_v = own.violations(col, path)
-        parts = []
-        if vv:
-            # value errors get the key as context (kernel validators.py:595-600)
-            parts.append(
-                F.flatten(
-                    F.transform(
-                        F.map_entries(col),
-                        lambda e: vv.violations(
-                            e.getField("value"),
-                            extend_path(
-                                path,
-                                e.getField("key").cast("string"),
-                                py_repr(e.getField("key"), dtype.keyType),
-                            ),
-                        ),
-                    )
-                )
-            )
-        if kv:
-            # key errors get no context
-            parts.append(
-                F.flatten(
-                    F.transform(
-                        F.map_keys(col), lambda k: kv.violations(k, path)
-                    )
-                )
-            )
-        rest = F.concat(*parts) if parts else _no_violations()
+        if not (vv or kv):
+            return own_v
+        rest = F.flatten(
+            F.transform(F.map_entries(col), lambda e: entry_violations(e, path))
+        )
         return F.when(~own.predicate(col), own_v).otherwise(rest)
-
-    def msg(col: Column) -> Column:
-        parts = []
-        if vv:
-            bad = F.filter(F.map_values(col), lambda x: ~vv.predicate(x))
-            parts.append(F.when(F.size(bad) > 0, vv.msg(F.get(bad, 0))))
-        if kv:
-            bad = F.filter(F.map_keys(col), lambda x: ~kv.predicate(x))
-            parts.append(F.when(F.size(bad) > 0, kv.msg(F.get(bad, 0))))
-        return F.coalesce(own.msg(col), *parts) if parts else own.msg(col)
 
     kt = kv.out_type if kv else dtype.keyType
     vt = vv.out_type if vv else dtype.valueType
@@ -1707,7 +1639,7 @@ def _lower_mapping(v: K.Mapping, dtype: T.DataType) -> Lowered:
         return F.when(~own.predicate(col), F.lit(1)).otherwise(total)
 
     return Lowered(
-        T.MapType(kt, vt), predicate, adapt, violations, msg, count=count
+        T.MapType(kt, vt), predicate, adapt, violations, count=count
     )
 
 
@@ -1768,54 +1700,27 @@ def _lower_object(v: K.Object, dtype: T.DataType) -> Lowered:
             return F.array().cast(T.ArrayType(T.StringType()))
         return F.filter(F.array(*entries), lambda x: x.isNotNull())
 
+    soa_checks, soa_null_strict = _object_soa_checks(
+        v,
+        field_types,
+        declared,
+        required,
+        extras,
+        additional,
+        extras_field,
+        extras_map_node,
+        extra_node,
+    )
+
     def predicate(col: Column) -> Column:
+        # the struct-of-arrays terms applied to this struct's fields: a
+        # direct presence conjunction on the hot path (_missing_arr's
+        # array+filter+size, which builds the violation message, allocates
+        # an array per row/span)
         p = own.predicate(col)
-        # hot path: direct presence conjunction — the array+filter+size
-        # form (_missing_arr, still used to BUILD the violation message on
-        # the cold path) allocates an array per row/span, which dominates
-        # allocation in interpreted HOF evaluation at depth
-        for name in required:
-            present = (
-                col.getField(name).isNotNull()
-                if name in field_types
-                else F.lit(False)
-            )
-            p = p & present
-        for name, validator, node in declared:
-            if node is None:
-                continue
-            fld = col.getField(name)
-            prop_ok = F.when(fld.isNull(), F.lit(True)).otherwise(
-                node.predicate(fld)
-            )
-            if v._ignore_optional_errors and name not in v._required_keys:
-                prop_ok = F.lit(True)  # bad optional props are dropped, not fatal
-            p = p & _nullsafe(prop_ok)
-        if additional is False:
-            for name in extras:
-                p = p & col.getField(name).isNull()
-        elif isinstance(additional, Validator):
-            for name in extras:
-                fld = col.getField(name)
-                p = p & _nullsafe(
-                    F.when(fld.isNull(), F.lit(True)).otherwise(
-                        extra_node[name].predicate(fld)
-                    )
-                )
-        if extras_field is not None:
-            mfld = col.getField(extras_field)
-            if additional is False:
-                p = p & (mfld.isNull() | (F.size(mfld) == 0))
-            elif extras_map_node is not None:
-                p = p & _nullsafe(
-                    F.when(mfld.isNull(), F.lit(True)).otherwise(
-                        F.forall(
-                            F.map_values(mfld),
-                            lambda x: extras_map_node.predicate(x),
-                        )
-                    )
-                )
-        return _nullsafe(p)
+        for fields, build in soa_checks:
+            p = p & _nullsafe(build(*[col.getField(f) for f in fields]))
+        return p
 
     def adapt(col: Column) -> Column:
         out_fields = []
@@ -1875,13 +1780,11 @@ def _lower_object(v: K.Object, dtype: T.DataType) -> Lowered:
         missing_v = _violation(
             path,
             "object.required",
-            lambda: _invalid_value_msg(
-                col,
-                dtype,
-                F.format_string(
-                    "missing required properties: %s",
-                    py_list_repr_of_strings(missing),
-                ),
+            col,
+            dtype,
+            lambda: F.format_string(
+                "missing required properties: %s",
+                py_list_repr_of_strings(missing),
             ),
         )
         parts = []
@@ -1923,13 +1826,11 @@ def _lower_object(v: K.Object, dtype: T.DataType) -> Lowered:
                     _violation(
                         path,
                         "object.additional",
-                        lambda: _invalid_value_msg(
-                            col,
-                            dtype,
-                            F.format_string(
-                                "additional properties: %s",
-                                py_list_repr_of_strings(present_extras),
-                            ),
+                        col,
+                        dtype,
+                        lambda: F.format_string(
+                            "additional properties: %s",
+                            py_list_repr_of_strings(present_extras),
                         ),
                     ),
                 ).otherwise(_no_violations())
@@ -1970,25 +1871,6 @@ def _lower_object(v: K.Object, dtype: T.DataType) -> Lowered:
         if required:
             result = result.when(F.size(missing) > 0, missing_v)
         return result.otherwise(children)
-
-    def msg(col: Column) -> Column:
-        cands = [own.msg(col)]
-        if required:
-            cands.append(
-                F.when(
-                    F.size(_missing_arr(col)) > 0,
-                    F.format_string(
-                        "missing required properties: %s",
-                        py_list_repr_of_strings(_missing_arr(col)),
-                    ),
-                )
-            )
-        for name, validator, node in declared:
-            if node is None:
-                continue
-            fld = col.getField(name)
-            cands.append(F.when(fld.isNotNull(), node.msg(fld)))
-        return F.coalesce(*cands)
 
     def count(col: Column) -> Column:
         total = F.lit(0)
@@ -2041,24 +1923,11 @@ def _lower_object(v: K.Object, dtype: T.DataType) -> Lowered:
             out_fields.append(T.StructField(f.name, f.dataType, True))
     out_type = T.StructType(out_fields)
 
-    soa_checks, soa_null_strict = _object_soa_checks(
-        v,
-        field_types,
-        declared,
-        required,
-        extras,
-        additional,
-        extras_field,
-        extras_map_node,
-        extra_node,
-    )
-
     return Lowered(
         out_type,
         predicate,
         adapt,
         violations,
-        msg,
         soa_checks=soa_checks,
         soa_null_strict=soa_null_strict,
         count=count,
@@ -2077,9 +1946,11 @@ def _object_soa_checks(
     extra_node,
 ) -> Tuple[Optional[List[SoaCheck]], bool]:
     """Per-field decomposition of the Object predicate (see
-    ``Lowered.soa_checks``). Mirrors ``predicate`` term for term; each
-    builder receives the FIELD value (lambda variable over the extracted
-    field array) instead of ``col.getField(name)``.
+    ``Lowered.soa_checks``); the predicate is built from these terms,
+    each applied to ``col.getField(name)``, where the struct-of-arrays
+    form applies it to the FIELD value (lambda variable over the
+    extracted field array). A property check that can fail only on NULL
+    (``pred_null_only``) gives no term: a NULL property is absent.
 
     ``soa_null_strict`` holds iff some term is definitely False on a NULL
     element (every field extracts to NULL): a required-presence term, or a

@@ -7,7 +7,7 @@ The violation message format (kernel parity, core/errors.py) is::
 
 Building the repr in pure Spark SQL expressions keeps violation-row
 construction JVM-side for all scalar column types, with no Python UDF.
-Array reprs (and every repr under an array check) sit inside
+Array and map reprs (and every repr under an array check) sit inside
 higher-order-function lambdas, which Spark 4.1 interprets
 (``CodegenFallback``).
 Non-printable escaping inside strings is limited to backslash + quote
@@ -90,6 +90,17 @@ def py_repr(col: Column, dtype: T.DataType) -> Column:
     elif isinstance(dtype, T.ArrayType):
         inner = F.transform(col, lambda x: py_repr(x, dtype.elementType))
         body = F.concat(F.lit("["), F.array_join(inner, ", "), F.lit("]"))
+    elif isinstance(dtype, T.MapType):
+        # a dict repr in the map's entry order: {'a': 1, 'b': None}
+        inner = F.transform(
+            F.map_entries(col),
+            lambda e: F.concat(
+                py_repr(e.getField("key"), dtype.keyType),
+                F.lit(": "),
+                py_repr(e.getField("value"), dtype.valueType),
+            ),
+        )
+        body = F.concat(F.lit("{"), F.array_join(inner, ", "), F.lit("}"))
     elif isinstance(dtype, T.StructType):
         # NULL struct field ≡ absent property (engine convention), so nulls
         # are omitted from the dict repr — concat_ws skips null elements.
